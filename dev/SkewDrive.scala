@@ -126,7 +126,7 @@ object SkewDrive {
       graft.plans.VecCatalog.screen(spark, emb.filter(col("vec_id") >= nEmb - 1000), cat)
         .count())
     println(s"[skew] 5c. flagged: $flagged of 1000")
-    graft.plans.VecCatalog.drop(spark, cat)
+    graft.plans.LandedCatalog.drop(spark, cat)
 
     spark.stop()
   }

@@ -135,7 +135,7 @@ object Quickstart {
       sigsQ.filter(col("doc_id") % 2 === 0), "quickstart")
     graft.plans.SigCatalog.screen(spark,
       sigsQ.filter(col("doc_id") % 2 === 1), sigCat).show(3)
-    graft.plans.SigCatalog.drop(spark, sigCat)
+    graft.plans.LandedCatalog.drop(spark, sigCat)
 
     // 8. Incremental dedup against a catalog, Bloom-prefiltered: the
     // sharded screen is the 1e8+-catalog shape (per-shard filters

@@ -75,12 +75,14 @@ object CodecCodegen {
       InternalRow(w.n, w.sumAbs, w.zc)).toArray[Any])
   }
 
-  def tlvDecode(buf: Array[Byte]): ArrayData = {
-    val entries = CodecImpl.tlvDecode(buf)
-    new GenericArrayData(entries.map { case (t, bytes) =>
+  /** Null on a truncated frame: one malformed beacon must route to
+    * null, never fail the task ([[CodecImpl.tlvDecode]] throws).
+    */
+  def tlvDecode(buf: Array[Byte]): ArrayData =
+    try new GenericArrayData(CodecImpl.tlvDecode(buf).map { case (t, bytes) =>
       InternalRow(t, bytes)
     }.toArray[Any])
-  }
+    catch { case _: IllegalArgumentException => null }
 
   def tlvEncode(arr: ArrayData): Array[Byte] = {
     val fields = (0 until arr.numElements()).map { i =>

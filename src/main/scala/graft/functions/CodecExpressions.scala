@@ -147,14 +147,19 @@ object CodecExpressions {
       StructField("value", BinaryType, nullable = false)))
 
   /** `tlv_decode(BINARY) → ARRAY<STRUCT<type INT, value BINARY>>`
-    * (SURVEY §4.2); explode downstream for per-field rows.
+    * (SURVEY §4.2); explode downstream for per-field rows. A truncated
+    * frame decodes to null.
     */
   case class TlvDecode(child: Expression) extends UnaryExpression {
     override def dataType: DataType = ArrayType(tlvEntryType, containsNull = false)
+    override def nullable: Boolean = true
     override def nullSafeEval(v: Any): Any =
       CodecCodegen.tlvDecode(v.asInstanceOf[Array[Byte]])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, b => s"$Bridge.tlvDecode($b)")
+      nullSafeCodeGen(ctx, ev, b => s"""
+        ${ev.value} = $Bridge.tlvDecode($b);
+        if (${ev.value} == null) { ${ev.isNull} = true; }
+      """)
     override protected def withNewChildInternal(c: Expression): TlvDecode = copy(c)
     override def prettyName: String = "tlv_decode"
   }

@@ -112,8 +112,8 @@ object Decontaminate {
     // fingerprint-named: a testdata regen re-lands the benchmark, and
     // the stale incarnation is pruned instead of stranding a
     // benchmark-sized catalog copy in tmp per regen
-    graft.plans.VecCatalog.pruneSiblings(spark, s"semdecon_${dir}_",
-      s"semdecon_${dir}_$fpr")
+    graft.plans.LandedCatalog.pruneSiblings(spark, graft.plans.VecCatalog.Tag,
+      s"semdecon_${dir}_", s"semdecon_${dir}_$fpr")
     val cat = graft.plans.VecCatalog.land(spark, bench, s"semdecon_${dir}_$fpr")
     val batch = plantedCorpus(emb).filter(col("vec_id") >= 250)
     graft.plans.VecCatalog.screen(spark, batch, cat)

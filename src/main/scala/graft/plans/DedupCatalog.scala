@@ -1,9 +1,8 @@
 package graft.plans
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.operators.Dedup
+import graft.plans.LandedCatalog.{Handle, Spec}
 
 /** Landed near-dup screening catalog — the production shape of the
   * incremental dedup surface (closing round 9's "history recomputed
@@ -19,196 +18,55 @@ import graft.operators.Dedup
   *    the Jaccard-verify join key;
   *  - `<name>_sizes`    (doc, n): shingle-set sizes, bucketed by `doc`.
   *
-  * All three are partitioned by `ingest_id` (landing = partition 0,
-  * each accepted batch its own partition) so appends are dynamic
-  * partition OVERWRITES — replay-idempotent — and a screen can bound
-  * which history it sees (`maxIngestId`). Durability: landing writes
-  * a `_LANDED` marker after all three tables; a NEW session whose
-  * in-memory catalog lost the table entries re-REGISTERS the existing
-  * files (schema DDL + partition recovery) instead of re-landing,
-  * which would erase every appended partition. ids are BIGINT by
-  * contract (the catalog's DDL is fixed).
-  *
-  * The reference's incremental pipeline diffs new input against
-  * PERSISTED state rather than re-walking history
-  * (honeycomb/owt/hcOwt.py:250-331); this is that state store,
-  * expressed as Spark bucketed tables.
+  * Landing, replay-idempotent appends, bounded history reads,
+  * reattach in a new session and maintenance are [[LandedCatalog]]'s.
+  * ids are BIGINT by contract (the catalog's DDL is fixed).
   */
 object DedupCatalog {
 
-  /** The three landed table names + storage root for one catalog. */
-  case class Handle(bandsT: String, shinglesT: String, sizesT: String,
-      root: String)
-
-  /** Default durable-enough location for tests/gates; production
-    * passes its own `base` (a warehouse path) to [[land]].
-    */
-  def defaultBase: String = s"${sys.props("java.io.tmpdir")}/graft_ddcat"
-
-  private def handle(name: String, base: String): Handle = {
-    // sanitized for identifier safety + a hash of the RAW name so
-    // distinct names that sanitize alike ("run-1" vs "run_1") cannot
-    // silently share state
-    val n = name.replaceAll("[^A-Za-z0-9_]", "_") + "_" +
-      java.lang.Long.toHexString(graft.functions.TextImpl.fnv1a64(name)).take(8)
-    Handle(s"graft_ddcat_${n}_bands", s"graft_ddcat_${n}_shingles",
-      s"graft_ddcat_${n}_sizes", s"$base/graft_ddcat_$n")
-  }
-
-  private def fs(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
+  val Tag = "graft_ddcat"
 
   private val specs = Seq(
-    // (suffix -> (columns DDL, bucket col, sort cols))
-    "bands" -> ("doc BIGINT, bk STRING, ingest_id BIGINT", "bk", Seq("bk")),
-    "shingles" -> ("doc BIGINT, sg STRING, ingest_id BIGINT", "doc", Seq("doc", "sg")),
-    "sizes" -> ("doc BIGINT, n BIGINT, ingest_id BIGINT", "doc", Seq("doc")))
+    Spec("bands", "doc BIGINT, bk STRING, ingest_id BIGINT", "bk", Seq("bk")),
+    Spec("shingles", "doc BIGINT, sg STRING, ingest_id BIGINT", "doc", Seq("doc", "sg")),
+    Spec("sizes", "doc BIGINT, n BIGINT, ingest_id BIGINT", "doc", Seq("doc")))
 
-  private def tables(h: Handle) = Seq(h.bandsT, h.shinglesT, h.sizesT)
-
-  /** Land `histDocs` (a (doc_id, text, …) frame) as the screening
-    * catalog `name`, as ingest partition 0. Idempotent at two levels:
-    * registered tables come straight back; a `_LANDED` marker with
-    * missing catalog entries (new session over durable state)
-    * re-registers the existing files — appended partitions survive a
-    * restart; only a truly absent catalog is computed and written.
+  /** Band keys, shingles and sizes of `docs`; both intermediates are
+    * pinned (the lifecycle releases them after the write).
     */
-  def land(spark: SparkSession, histDocs: DataFrame, name: String,
-      nBuckets: Int = 8, base: String = defaultBase): Handle = {
-    val h = handle(name, base)
-    if (tables(h).forall(spark.catalog.tableExists)) return h
-    if (fs(spark, h.root).exists(new Path(s"${h.root}/_LANDED"))) {
-      // the PERSISTED bucket count wins over the call-site parameter:
-      // files were written with the original nBuckets, and a restart
-      // that re-registers with a different count makes Spark's
-      // bucketed scan silently drop files whose bucket id >= declared
-      // count (and breaks co-partitioned join assumptions) — the
-      // files dictate the spec, not the caller's default argument.
-      // Markers from before this field default to the parameter.
-      val nb = CatalogMaintenance.readFile(fs(spark, h.root),
-          new Path(s"${h.root}/_LANDED"))
-        .flatMap(s => scala.util.Try(s.stripPrefix("nBuckets=").trim.toInt).toOption)
-        .getOrElse(nBuckets)
-      tables(h).zip(specs).foreach { case (t, (sfx, (ddl, bcol, scols))) =>
-        BucketedLayout.register(spark, t, ddl, "ingest_id", bcol, scols,
-          nb, s"${h.root}/$sfx")
-      }
-      CatalogMaintenance.recover(spark, tset(h))
-      return h
-    }
-    val m = graft.Shared.mark(spark)
-    try {
-      val sh = graft.Shared.materialize(
-        Dedup.shinglesOf(histDocs, "doc").toDF("doc", "sg"))
-      val sig = graft.Shared.materialize(Dedup.minhashSignaturesFrom(sh, "doc"))
-      def part(df: DataFrame) = df.withColumn("ingest_id", lit(0L))
-      BucketedLayout.write(part(Dedup.bandKeys(sig, "doc")), h.bandsT, "bk",
-        nBuckets, Seq("bk"), Some(s"${h.root}/bands"), Seq("ingest_id"))
-      BucketedLayout.write(part(sh), h.shinglesT, "doc",
-        nBuckets, Seq("doc", "sg"), Some(s"${h.root}/shingles"), Seq("ingest_id"))
-      BucketedLayout.write(part(sig.select("doc", "n")), h.sizesT, "doc",
-        nBuckets, Seq("doc"), Some(s"${h.root}/sizes"), Seq("ingest_id"))
-      // marker carries the bucket count so a restart re-registers the
-      // spec the files were actually written with
-      CatalogMaintenance.writeFile(fs(spark, h.root),
-        new Path(s"${h.root}/_LANDED"), s"nBuckets=$nBuckets")
-    } finally graft.Shared.releaseSince(spark, m)
-    h
+  private def rows(docs: DataFrame): Seq[DataFrame] = {
+    val sh = graft.Shared.materialize(
+      Dedup.shinglesOf(docs, "doc").toDF("doc", "sg"))
+    val sig = graft.Shared.materialize(Dedup.minhashSignaturesFrom(sh, "doc"))
+    Seq(Dedup.bandKeys(sig, "doc"), sh, sig.select("doc", "n"))
   }
 
-  private def tset(h: Handle) = CatalogMaintenance.TableSet(tables(h),
-    specs.map { case (sfx, _) => s"${h.root}/$sfx" }, h.root)
-
-  /** Fold ingest partitions 0..`upToIngestId` into the landing
-    * (partition 0) — same rows, same bucketing, a fraction of the
-    * partitions/files. Screen verdicts are identical before and after;
-    * appends and screen bounds at or below the fold are rejected
-    * afterwards ([[CatalogMaintenance]] for the full contract). Only
-    * compact up to checkpoint-COMMITTED batch ids.
+  /** Land `histDocs` (a (doc_id, text, …) frame) as the screening
+    * catalog `name`, as ingest partition 0.
     */
-  def compact(spark: SparkSession, h: Handle, upToIngestId: Long): Unit =
-    CatalogMaintenance.compact(spark, tset(h), upToIngestId)
+  def land(spark: SparkSession, histDocs: DataFrame, name: String,
+      nBuckets: Int = 8, base: String = LandedCatalog.defaultBase(Tag)): Handle =
+    LandedCatalog.land(spark, LandedCatalog.handle(Tag, name, base, specs),
+      nBuckets)(rows(histDocs))
 
-  /** Retention: drop ingest partitions below `minIngestId` (the aged
-    * state is forgotten, the reference's cleanUp.py analog). With
-    * `archiveDir`, partitions are copied to cold storage first
-    * (archive-then-advance).
+  /** Record `docs` (accepted batch members) as ingest partition
+    * `ingestId` so the next screen sees them as history.
     */
-  def expire(spark: SparkSession, h: Handle, minIngestId: Long,
-      archiveDir: Option[String] = None): Unit =
-    CatalogMaintenance.expire(spark, tset(h), minIngestId, archiveDir)
-
-  /** The catalog's maintenance floor (0 = never maintained). */
-  def floor(spark: SparkSession, h: Handle): Long =
-    CatalogMaintenance.readFloor(spark, h.root)
+  def append(spark: SparkSession, docs: DataFrame, h: Handle,
+      ingestId: Long): Unit =
+    LandedCatalog.append(spark, h, ingestId)(rows(docs))
 
   /** Screen a batch of documents against the landed catalog — the
     * per-ingest-batch operator. Everything batch-sized is derived
-    * in-plan; everything history-sized is a bucketed table read.
-    *
-    * @param maxIngestId only screen against ingest partitions ≤ this
-    *   id (partition-pruned). The streaming append loop passes its
-    *   batch id so a crash-replayed batch cannot see the partition it
-    *   appended before the crash — without the bound, every survivor
-    *   would self-match at jac 1.0 on replay.
+    * in-plan; everything history-sized is a bucketed table read,
+    * bounded by `maxIngestId` (see [[LandedCatalog.history]]).
     */
   def screen(spark: SparkSession, batchDocs: DataFrame, h: Handle,
       threshold: Double = Dedup.JaccardThreshold,
       maxIngestId: Option[Long] = None): DataFrame = {
-    // a bound below the maintenance floor cannot be honored: folded
-    // partition 0 contains batches up to the floor, so the filter
-    // would silently include history the caller asked to exclude
-    // (a compacted-away replay would self-match) — fail loudly instead
-    maxIngestId.foreach { x =>
-      val f = CatalogMaintenance.readFloor(spark, h.root)
-      require(x >= f,
-        s"screen bound $x is below the catalog's maintenance floor $f " +
-          s"(batches <= $f were compacted/expired; replaying one is invalid)")
-    }
-    def tbl(t: String) =
-      maxIngestId.fold(spark.table(t))(x => spark.table(t).filter(col("ingest_id") <= x))
+    val Seq(bands, shingles, sizes) = LandedCatalog.history(spark, h, maxIngestId)
     Dedup.minhashLshScreen(Dedup.shinglesOf(batchDocs, "doc"),
-      tbl(h.bandsT).select("doc", "bk"),
-      tbl(h.shinglesT).select("doc", "sg"),
-      tbl(h.sizesT).select("doc", "n"), threshold)
-  }
-
-  /** Record `docs` (accepted batch members) into the catalog as
-    * ingest partition `ingestId` so the next screen sees them as
-    * history. Replay-idempotent: the write is a dynamic partition
-    * OVERWRITE of exactly that ingest partition, so a crashed and
-    * re-run batch replaces its own state rows instead of duplicating
-    * them (duplicate shingle rows would inflate the screen's
-    * intersection counts — corruption, not mere duplication).
-    * `ingestId` must be > 0 (0 is the landed history).
-    */
-  def append(spark: SparkSession, docs: DataFrame, h: Handle,
-      ingestId: Long): Unit = {
-    require(ingestId > 0, s"ingestId must be > 0 (0 is the landing): $ingestId")
-    val f = CatalogMaintenance.readFloor(spark, h.root)
-    require(ingestId > f,
-      s"ingestId $ingestId is at or below the maintenance floor $f: that " +
-        "batch's state was folded into the landing (or expired) — " +
-        "re-appending it would duplicate state rows and corrupt screens")
-    val m = graft.Shared.mark(spark)
-    try {
-      val sh = graft.Shared.materialize(
-        Dedup.shinglesOf(docs, "doc").toDF("doc", "sg"))
-      val sig = graft.Shared.materialize(Dedup.minhashSignaturesFrom(sh, "doc"))
-      def part(df: DataFrame) = df.withColumn("ingest_id", lit(ingestId))
-      BucketedLayout.overwritePartitions(spark, part(Dedup.bandKeys(sig, "doc")),
-        h.bandsT)
-      BucketedLayout.overwritePartitions(spark, part(sh), h.shinglesT)
-      BucketedLayout.overwritePartitions(spark, part(sig.select("doc", "n")),
-        h.sizesT)
-    } finally graft.Shared.releaseSince(spark, m)
-  }
-
-  /** Drop the catalog: table entries AND files (a fresh stream over a
-    * reused location must start from a fresh catalog).
-    */
-  def drop(spark: SparkSession, h: Handle): Unit = {
-    tables(h).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    fs(spark, h.root).delete(new Path(h.root), true)
+      bands.select("doc", "bk"), shingles.select("doc", "sg"),
+      sizes.select("doc", "n"), threshold)
   }
 }

@@ -1,9 +1,9 @@
 package graft.plans
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
+import graft.plans.LandedCatalog.{Handle, Spec}
 
 /** Landed substring-dedup gram-stats catalog — the production shape
   * of [[graft.operators.Dedup.dupSpansIncrementalFrom]]'s history
@@ -20,96 +20,43 @@ import graft.operators.Dedup
   * `SUM(df), MIN(gmin) GROUP BY gram` across partitions — read
   * co-partitioned from the bucketed layout, so the merge aggregate
   * needs no Exchange (pinned in spec). Appends are per-batch stats,
-  * never recomputed history; dynamic partition overwrite makes a
-  * crash-replayed batch rewrite its own partition (the DedupCatalog /
-  * VecCatalog idempotence discipline).
+  * never recomputed history. The lifecycle (reattach, floors,
+  * compaction, retention) is [[LandedCatalog]]'s; compaction is
+  * verdict-invisible here because SUM and MIN are associative over
+  * the folded rows (pinned in GramCatalogSpec), and retention makes
+  * aged grams stop counting toward duplication.
   *
   * Contract shared with the other catalogs: ingest batches carry
-  * DISJOINT doc sets (df sums assume it), k is fixed per catalog
-  * (stored in the `_LANDED` marker and validated — mixing gram widths
-  * would merge apples with oranges), and the persisted bucket count
-  * wins over the call-site parameter on re-registration.
+  * DISJOINT doc sets (df sums assume it), and k is fixed per catalog
+  * (stored in the `_LANDED` marker — mixing gram widths would merge
+  * apples with oranges).
   */
 object GramCatalog {
 
-  case class Handle(statsT: String, root: String)
+  val Tag = "graft_gramcat"
 
-  def defaultBase: String = s"${sys.props("java.io.tmpdir")}/graft_gramcat"
-
-  private def handle(name: String, base: String): Handle = {
-    val n = name.replaceAll("[^A-Za-z0-9_]", "_") + "_" +
-      java.lang.Long.toHexString(graft.functions.TextImpl.fnv1a64(name)).take(8)
-    Handle(s"graft_gramcat_${n}_stats", s"$base/graft_gramcat_$n")
-  }
-
-  private def fs(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
-
-  private val ddl = "gram STRING, df BIGINT, gmin BIGINT, ingest_id BIGINT"
-
-  private def marker(h: Handle) = new Path(s"${h.root}/_LANDED")
-
-  private def readMarker(spark: SparkSession, h: Handle): Map[String, String] =
-    CatalogMaintenance.readFile(fs(spark, h.root), marker(h))
-      .map(_.split(",").flatMap { kv =>
-        kv.split("=", 2) match {
-          case Array(a, b) => Some(a.trim -> b.trim); case _ => None
-        }
-      }.toMap).getOrElse(Map.empty)
+  private val specs =
+    Seq(Spec("stats", "gram STRING, df BIGINT, gmin BIGINT, ingest_id BIGINT",
+      "gram", Seq("gram")))
 
   /** The catalog's fixed gram width (from the `_LANDED` marker). */
-  def kOf(spark: SparkSession, h: Handle): Int =
-    readMarker(spark, h).get("k").map(_.toInt).getOrElse(Dedup.ShingleN)
+  private def kOf(spark: SparkSession, h: Handle): Int =
+    LandedCatalog.marker(spark, h).get("k").map(_.toInt).getOrElse(Dedup.ShingleN)
 
-  /** Land `histDocs` as catalog `name`, ingest partition 0.
-    * Idempotent at the DedupCatalog levels: registered table → return;
-    * `_LANDED` marker with a missing table entry (new session over
-    * durable state) → re-register the existing files with the
-    * PERSISTED bucket count; only a truly absent catalog computes.
-    */
+  /** Land `histDocs` as catalog `name`, ingest partition 0. */
   def land(spark: SparkSession, histDocs: DataFrame, name: String,
       k: Int = Dedup.ShingleN, nBuckets: Int = 8,
-      base: String = defaultBase): Handle = {
-    val h = handle(name, base)
-    if (spark.catalog.tableExists(h.statsT)) return h
-    if (fs(spark, h.root).exists(marker(h))) {
-      val m = readMarker(spark, h)
-      val nb = m.get("nBuckets").flatMap(s =>
-        scala.util.Try(s.toInt).toOption).getOrElse(nBuckets)
-      BucketedLayout.register(spark, h.statsT, ddl, "ingest_id", "gram",
-        Seq("gram"), nb, s"${h.root}/stats")
-      return h
-    }
-    val mark = graft.Shared.mark(spark)
-    try {
-      val stats = Dedup.gramStats(histDocs, k).withColumn("ingest_id", lit(0L))
-      BucketedLayout.write(stats, h.statsT, "gram", nBuckets, Seq("gram"),
-        Some(s"${h.root}/stats"), Seq("ingest_id"))
-      CatalogMaintenance.writeFile(fs(spark, h.root), marker(h),
-        s"nBuckets=$nBuckets,k=$k")
-    } finally graft.Shared.releaseSince(spark, mark)
-    h
-  }
+      base: String = LandedCatalog.defaultBase(Tag)): Handle =
+    LandedCatalog.land(spark, LandedCatalog.handle(Tag, name, base, specs),
+      nBuckets, Seq("k" -> k))(Seq(Dedup.gramStats(histDocs, k)))
 
   /** Record an accepted batch's gram stats as ingest partition
-    * `ingestId` (> 0; 0 is the landing). Replay-idempotent: dynamic
-    * partition overwrite of exactly that partition.
+    * `ingestId`.
     */
   def append(spark: SparkSession, docs: DataFrame, h: Handle,
-      ingestId: Long): Unit = {
-    require(ingestId > 0, s"ingestId must be > 0 (0 is the landing): $ingestId")
-    val f = CatalogMaintenance.readFloor(spark, h.root)
-    require(ingestId > f,
-      s"ingestId $ingestId is at or below the maintenance floor $f: that " +
-        "batch's stats were folded into the landing (or expired) — " +
-        "re-appending would DOUBLE its df contributions in the merged view")
-    val mark = graft.Shared.mark(spark)
-    try {
-      val stats = Dedup.gramStats(docs, kOf(spark, h))
-        .withColumn("ingest_id", lit(ingestId))
-      BucketedLayout.overwritePartitions(spark, stats, h.statsT)
-    } finally graft.Shared.releaseSince(spark, mark)
-  }
+      ingestId: Long): Unit =
+    LandedCatalog.append(spark, h, ingestId)(
+      Seq(Dedup.gramStats(docs, kOf(spark, h))))
 
   /** The merged catalog view ≤ `maxIngestId`: SUM(df) / MIN(gmin) per
     * gram across ingest partitions — co-partitioned on the bucket key,
@@ -117,72 +64,16 @@ object GramCatalog {
     */
   def stats(spark: SparkSession, h: Handle,
       maxIngestId: Option[Long] = None): DataFrame = {
-    // a bound below the maintenance floor cannot be honored: folded
-    // partition 0 carries batches up to the floor, so the filter
-    // would silently include history the caller asked to exclude
-    maxIngestId.foreach { x =>
-      val f = CatalogMaintenance.readFloor(spark, h.root)
-      require(x >= f,
-        s"stats bound $x is below the catalog's maintenance floor $f " +
-          s"(batches <= $f were folded/expired; bounding below it is invalid)")
-    }
-    val t = maxIngestId.fold(spark.table(h.statsT))(x =>
-      spark.table(h.statsT).filter(col("ingest_id") <= x))
+    val Seq(t) = LandedCatalog.history(spark, h, maxIngestId)
     t.groupBy("gram").agg(sum("df").as("df"), min("gmin").as("gmin"))
   }
 
-  private def tset(h: Handle) = CatalogMaintenance.TableSet(
-    Seq(h.statsT), Seq(s"${h.root}/stats"), h.root)
-
-  /** Fold ingest partitions 0..`upToIngestId` into the landing. For
-    * THIS catalog the generic fold is provably verdict-invisible:
-    * the merged view is SUM(df)/MIN(gmin) per gram, both associative
-    * over the folded rows — and the fold's replay-idempotence
-    * `distinct()` can never merge two legitimate rows, because
-    * disjoint ingest batches give the same gram different `gmin`
-    * values (gmin is a doc of the contributing batch). Pinned in
-    * GramCatalogSpec.
-    */
-  def compact(spark: SparkSession, h: Handle, upToIngestId: Long): Unit =
-    CatalogMaintenance.compact(spark, tset(h), upToIngestId)
-
-  /** Retention: drop ingest partitions below `minIngestId` — their
-    * grams' df contributions are FORGOTTEN by the merged view (aged
-    * history stops counting toward duplication), the cleanUp.py
-    * analog. With `archiveDir`, partitions demote to cold storage
-    * first.
-    */
-  def expire(spark: SparkSession, h: Handle, minIngestId: Long,
-      archiveDir: Option[String] = None): Unit =
-    CatalogMaintenance.expire(spark, tset(h), minIngestId, archiveDir)
-
-  /** The catalog's maintenance floor (0 = never maintained). */
-  def floor(spark: SparkSession, h: Handle): Long =
-    CatalogMaintenance.readFloor(spark, h.root)
-
   /** Screen a batch against the landed catalog — the per-ingest-batch
     * substring-dedup operator. `maxIngestId` bounds visible history
-    * exactly as in [[DedupCatalog.screen]] (a crash-replayed batch
-    * passes its own id so it cannot see the partition it appended
-    * before the crash).
+    * (see [[LandedCatalog.history]]).
     */
   def screen(spark: SparkSession, batchDocs: DataFrame, h: Handle,
       minDocs: Int = 2, maxIngestId: Option[Long] = None): DataFrame =
     Dedup.dupSpansIncrementalFrom(batchDocs, stats(spark, h, maxIngestId),
       kOf(spark, h), minDocs)
-
-  /** Drop the catalog: table entry AND files. */
-  def drop(spark: SparkSession, h: Handle): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${h.statsT}")
-    fs(spark, h.root).delete(new Path(h.root), true)
-  }
-
-  /** Regen hygiene for fingerprint-named catalogs — see
-    * [[CatalogMaintenance.pruneCatalogSiblings]].
-    */
-  def pruneSiblings(spark: SparkSession, namePrefix: String, keepName: String,
-      base: String = defaultBase,
-      maxAgeMs: Long = 2L * 3600 * 1000): Unit =
-    CatalogMaintenance.pruneCatalogSiblings(spark, base, "graft_gramcat",
-      namePrefix, keepName, maxAgeMs)
 }

@@ -22,7 +22,7 @@ import org.apache.spark.sql.SparkSession
   * Like `cleanUp.py`, a sweep takes a per-directory policy map
   * ([[sweepAll]]) and is safe to re-run: deleting an already-deleted
   * partition is a no-op, so a crashed sweep is re-issued as-is (no
-  * marker needed — unlike [[CatalogMaintenance]] there is no
+  * marker needed — unlike [[LandedCatalog]] there is no
   * metastore/file split to keep consistent for bare-parquet landings;
   * for REGISTERED tables pass `table` so the catalog entry drops
   * first, and a crash between the two is healed by the next sweep or
@@ -41,7 +41,7 @@ object Retention {
   /** Partition values currently present under `dir` for `partCol`
     * (listed from the files — retention must see partitions whose
     * catalog entry is gone or stale, same rule as
-    * [[CatalogMaintenance]]).
+    * [[LandedCatalog]]).
     */
   def partitionValues(spark: SparkSession, dir: String,
       partCol: String): Seq[String] = {

@@ -1,9 +1,9 @@
 package graft.plans
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
+import graft.plans.LandedCatalog.{Handle, Spec}
 
 /** Landed semantic-dedup catalog — the SemDeDup twin of
   * [[VecCatalog]]: the history side of the cluster-then-prune screen
@@ -22,71 +22,42 @@ import graft.operators.Similarity
   *    shift because later arrivals displaced a seed, and a fresh
   *    session reattaches to the same geometry.
   *
-  * Partitioned by `ingest_id`, `_LANDED`-marked, dynamic-partition
-  * appends, and the full [[CatalogMaintenance]] lifecycle
-  * (compact/expire/floor) — identical state discipline to
-  * [[DedupCatalog]]/[[VecCatalog]]/[[GramCatalog]].
+  * Landing, appends, reattach and maintenance are [[LandedCatalog]]'s
+  * (compaction leaves the geometry untouched — cells only move
+  * between partitions; drop removes it with the root).
   */
 object SemCatalog {
 
-  /** The landed table name + storage root for one catalog. */
-  case class Handle(cellsT: String, root: String)
+  val Tag = "graft_smcat"
 
-  /** Default durable-enough location for tests/gates; production
-    * passes its own `base` to [[land]].
+  private val specs =
+    Seq(Spec("cells", "vec_id BIGINT, cid BIGINT, embedding ARRAY<FLOAT>, ingest_id BIGINT",
+      "cid", Seq("cid")))
+
+  /** `emb` assigned with the LANDED geometry. Empty-geometry guard:
+    * the literal-argmax assignment yields a typed NULL cid when the
+    * centroid set is empty; screens never match a null cid, but a
+    * PERSISTED null-cid state row would outlive the bootstrap, so it
+    * is filtered before landing or appending.
     */
-  def defaultBase: String = s"${sys.props("java.io.tmpdir")}/graft_smcat"
-
-  private def handle(name: String, base: String): Handle = {
-    val n = name.replaceAll("[^A-Za-z0-9_]", "_") + "_" +
-      java.lang.Long.toHexString(graft.functions.TextImpl.fnv1a64(name)).take(8)
-    Handle(s"graft_smcat_${n}_cells", s"$base/graft_smcat_$n")
-  }
-
-  private def fs(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
-
-  private val cellsDdl =
-    "vec_id BIGINT, cid BIGINT, embedding ARRAY<FLOAT>, ingest_id BIGINT"
+  private def cells(spark: SparkSession, emb: DataFrame, h: Handle): Seq[DataFrame] =
+    Seq(Similarity.withAssignedCid(emb, cents(spark, h))
+      .filter(col("cid").isNotNull)
+      .select(col("vec_id"), col("cid"), col("embedding")))
 
   /** Land `histEmb` as the semantic catalog `name` (ingest partition
     * 0): seed centroids, persist the geometry, assign, write the
-    * cid-bucketed cells table. Registered tables come straight back;
-    * `_LANDED` markers re-register after a restart; only a truly
-    * absent catalog is computed.
+    * cid-bucketed cells table.
     */
   def land(spark: SparkSession, histEmb: DataFrame, name: String,
       nCentroids: Int = 16, nBuckets: Int = 8,
-      base: String = defaultBase): Handle = {
-    val h = handle(name, base)
-    if (spark.catalog.tableExists(h.cellsT)) return h
-    if (fs(spark, h.root).exists(new Path(s"${h.root}/_LANDED"))) {
-      val nb = CatalogMaintenance.readFile(fs(spark, h.root),
-          new Path(s"${h.root}/_LANDED"))
-        .flatMap(s => scala.util.Try(s.stripPrefix("nBuckets=").trim.toInt).toOption)
-        .getOrElse(nBuckets)
-      BucketedLayout.register(spark, h.cellsT, cellsDdl, "ingest_id", "cid",
-        Seq("cid"), nb, s"${h.root}/cells")
-      CatalogMaintenance.recover(spark, tset(h))
-      return h
+      base: String = LandedCatalog.defaultBase(Tag)): Handle = {
+    val h = LandedCatalog.handle(Tag, name, base, specs)
+    LandedCatalog.land(spark, h, nBuckets) {
+      Similarity.ivfCentroids(histEmb, nCentroids)
+        .write.mode("overwrite").parquet(s"${h.root}/cents")
+      cells(spark, histEmb, h)
     }
-    val cents = Similarity.ivfCentroids(histEmb, nCentroids)
-    cents.write.mode("overwrite").parquet(s"${h.root}/cents")
-    // empty-geometry guard (round-21 advice): the literal-argmax
-    // assignment yields a typed NULL cid when the centroid set is
-    // empty (the former empty-crossJoin yielded zero rows). Screens
-    // never match a null cid either way, but a PERSISTED null-cid
-    // state row would outlive the bootstrap — filter before landing
-    // so durable state never carries one.
-    val assigned = Similarity.withAssignedCid(histEmb, this.cents(spark, h))
-      .filter(col("cid").isNotNull)
-      .select(col("vec_id"), col("cid"), col("embedding"))
-      .withColumn("ingest_id", lit(0L))
-    BucketedLayout.write(assigned, h.cellsT, "cid", nBuckets, Seq("cid"),
-      Some(s"${h.root}/cells"), Seq("ingest_id"))
-    CatalogMaintenance.writeFile(fs(spark, h.root),
-      new Path(s"${h.root}/_LANDED"), s"nBuckets=$nBuckets")
-    h
   }
 
   /** The landed centroid geometry (cid, ce) — k rows of parquet. */
@@ -94,73 +65,28 @@ object SemCatalog {
     spark.read.parquet(s"${h.root}/cents")
       .select(col("cid"), col("ce"))
 
-  private def tset(h: Handle) = CatalogMaintenance.TableSet(Seq(h.cellsT),
-    Seq(s"${h.root}/cells"), h.root)
-
-  /** Fold ingest partitions 0..`upToIngestId` into the landing (the
-    * geometry is untouched — cells only move between partitions).
+  /** Record accepted batch members as ingest partition `ingestId`,
+    * assigned with the LANDED geometry (never re-seeded).
     */
-  def compact(spark: SparkSession, h: Handle, upToIngestId: Long): Unit =
-    CatalogMaintenance.compact(spark, tset(h), upToIngestId)
-
-  /** Retention: drop ingest partitions below `minIngestId`. */
-  def expire(spark: SparkSession, h: Handle, minIngestId: Long,
-      archiveDir: Option[String] = None): Unit =
-    CatalogMaintenance.expire(spark, tset(h), minIngestId, archiveDir)
-
-  /** The catalog's maintenance floor (0 = never maintained). */
-  def floor(spark: SparkSession, h: Handle): Long =
-    CatalogMaintenance.readFloor(spark, h.root)
+  def append(spark: SparkSession, emb: DataFrame, h: Handle,
+      ingestId: Long): Unit =
+    LandedCatalog.append(spark, h, ingestId)(cells(spark, emb, h))
 
   /** Screen a batch against the landed cells: assign with the PINNED
     * landed geometry, then the within-cell candidate join against the
     * co-partitioned history — history-only verdicts
     * (vec_id, cid, kept_by, max_cos), the [[VecCatalog.screen]]
     * contract (the ingest loop adds the intra-batch rule itself).
-    * `maxIngestId` bounds visible history for crash-replayed batches;
-    * bounds below the maintenance floor are invalid.
+    * `maxIngestId` bounds visible history (see
+    * [[LandedCatalog.history]]).
     */
   def screen(spark: SparkSession, batchEmb: DataFrame, h: Handle,
       threshold: Double = 0.95, maxIngestId: Option[Long] = None): DataFrame = {
-    maxIngestId.foreach { x =>
-      val f = CatalogMaintenance.readFloor(spark, h.root)
-      require(x >= f,
-        s"screen bound $x is below the catalog's maintenance floor $f " +
-          s"(batches <= $f were compacted/expired; replaying one is invalid)")
-    }
-    val cells = maxIngestId.fold(spark.table(h.cellsT))(x =>
-      spark.table(h.cellsT).filter(col("ingest_id") <= x))
+    val Seq(hist) = LandedCatalog.history(spark, h, maxIngestId)
     val b = Similarity.withAssignedCid(batchEmb, cents(spark, h))
       .select(col("cid"), col("vec_id").as("b_id"), col("embedding").as("vb"))
     Similarity.semanticRollup(Similarity.semanticHits(b,
-      cells.select(col("cid"), col("vec_id").as("h_id"), col("embedding").as("vh")),
+      hist.select(col("cid"), col("vec_id").as("h_id"), col("embedding").as("vh")),
       threshold))
-  }
-
-  /** Record accepted batch members as ingest partition `ingestId`,
-    * assigned with the LANDED geometry (never re-seeded). Same
-    * replay-idempotence and floor contract as [[VecCatalog.append]].
-    */
-  def append(spark: SparkSession, emb: DataFrame, h: Handle,
-      ingestId: Long): Unit = {
-    require(ingestId > 0, s"ingestId must be > 0 (0 is the landing): $ingestId")
-    val f = CatalogMaintenance.readFloor(spark, h.root)
-    require(ingestId > f,
-      s"ingestId $ingestId is at or below the maintenance floor $f: that " +
-        "batch's state was folded into the landing (or expired) — " +
-        "re-appending it would duplicate state rows and corrupt screens")
-    // same empty-geometry guard as land(): never persist a null-cid
-    // state row (see the landing-side comment)
-    val assigned = Similarity.withAssignedCid(emb, cents(spark, h))
-      .filter(col("cid").isNotNull)
-      .select(col("vec_id"), col("cid"), col("embedding"))
-      .withColumn("ingest_id", lit(ingestId))
-    BucketedLayout.overwritePartitions(spark, assigned, h.cellsT)
-  }
-
-  /** Drop the catalog: table entry AND files (geometry included). */
-  def drop(spark: SparkSession, h: Handle): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${h.cellsT}")
-    fs(spark, h.root).delete(new Path(h.root), true)
   }
 }

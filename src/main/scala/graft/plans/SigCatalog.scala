@@ -1,9 +1,9 @@
 package graft.plans
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
+import graft.plans.LandedCatalog.{Handle, Spec}
 
 /** Landed perceptual-signature catalog — the production state store
   * behind the banded at-ingest screens (`mm_phash_incr` /
@@ -21,88 +21,36 @@ import graft.operators.Dedup
   * One catalog implementation serves EVERY 64-bit Hamming modality —
   * image dHash, audio envelope, video frame-mean fingerprints are
   * all `(doc_id, sh)` tables; the modality lives in the catalog
-  * name. Partitioned by `ingest_id`, `_LANDED`-marked, and
-  * re-registrable in a fresh session exactly like [[DedupCatalog]]
-  * (appends are dynamic partition overwrites; restarts reattach
-  * instead of re-landing). Same persisted-state shape as the
-  * reference's incremental pipeline (honeycomb/owt/hcOwt.py:250-331
-  * diffs new input against landed state).
+  * name. Landing, appends, reattach and maintenance are
+  * [[LandedCatalog]]'s.
   */
 object SigCatalog {
 
-  /** The landed table name + storage root for one catalog. */
-  case class Handle(bandsT: String, root: String)
+  val Tag = "graft_sgcat"
 
-  /** Default durable-enough location for tests/gates; production
-    * passes its own `base` to [[land]].
-    */
-  def defaultBase: String = s"${sys.props("java.io.tmpdir")}/graft_sgcat"
+  private val specs =
+    Seq(Spec("bands", "doc BIGINT, bk BIGINT, sh BIGINT, ingest_id BIGINT",
+      "bk", Seq("bk")))
 
-  private def handle(name: String, base: String): Handle = {
-    val n = name.replaceAll("[^A-Za-z0-9_]", "_") + "_" +
-      java.lang.Long.toHexString(graft.functions.TextImpl.fnv1a64(name)).take(8)
-    Handle(s"graft_sgcat_${n}_bands", s"$base/graft_sgcat_$n")
-  }
-
-  private def fs(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
-
-  private val ddl = "doc BIGINT, bk BIGINT, sh BIGINT, ingest_id BIGINT"
-
-  private def bandRows(sigs: DataFrame): DataFrame =
-    Dedup.bandKeys(sigs)
+  private def bandRows(sigs: DataFrame): Seq[DataFrame] =
+    Seq(Dedup.bandKeys(sigs)
       .select(col("doc_id").as("doc"),
-        (col("band") * 65536 + col("bv")).as("bk"), col("sh"))
+        (col("band") * 65536 + col("bv")).as("bk"), col("sh")))
 
   /** Land `histSigs` (a (doc_id, sh) signature frame) as the
-    * screening catalog `name`, as ingest partition 0. Registered
-    * tables come straight back; a `_LANDED` marker with a missing
-    * catalog entry (new session over durable state) re-registers the
-    * existing files — appended partitions survive a restart; only a
-    * truly absent catalog is computed and written.
+    * screening catalog `name`, as ingest partition 0.
     */
   def land(spark: SparkSession, histSigs: DataFrame, name: String,
-      nBuckets: Int = 8, base: String = defaultBase): Handle = {
-    val h = handle(name, base)
-    if (spark.catalog.tableExists(h.bandsT)) return h
-    if (fs(spark, h.root).exists(new Path(s"${h.root}/_LANDED"))) {
-      val nb = CatalogMaintenance.readFile(fs(spark, h.root),
-          new Path(s"${h.root}/_LANDED"))
-        .flatMap(s => scala.util.Try(s.stripPrefix("nBuckets=").trim.toInt).toOption)
-        .getOrElse(nBuckets)
-      BucketedLayout.register(spark, h.bandsT, ddl, "ingest_id", "bk",
-        Seq("bk"), nb, s"${h.root}/bands")
-      CatalogMaintenance.recover(spark, tset(h))
-      return h
-    }
-    BucketedLayout.write(
-      bandRows(histSigs).withColumn("ingest_id", lit(0L)),
-      h.bandsT, "bk", nBuckets, Seq("bk"),
-      Some(s"${h.root}/bands"), Seq("ingest_id"))
-    CatalogMaintenance.writeFile(fs(spark, h.root),
-      new Path(s"${h.root}/_LANDED"), s"nBuckets=$nBuckets")
-    h
-  }
+      nBuckets: Int = 8, base: String = LandedCatalog.defaultBase(Tag)): Handle =
+    LandedCatalog.land(spark, LandedCatalog.handle(Tag, name, base, specs),
+      nBuckets)(bandRows(histSigs))
 
-  private def tset(h: Handle) = CatalogMaintenance.TableSet(Seq(h.bandsT),
-    Seq(s"${h.root}/bands"), h.root)
-
-  /** Fold ingest partitions 0..`upToIngestId` into the landing — the
-    * signature twin of [[DedupCatalog.compact]]; same contract.
+  /** Record `sigs` (accepted batch members) as ingest partition
+    * `ingestId` so the next screen sees them as history.
     */
-  def compact(spark: SparkSession, h: Handle, upToIngestId: Long): Unit =
-    CatalogMaintenance.compact(spark, tset(h), upToIngestId)
-
-  /** Retention: drop ingest partitions below `minIngestId`; with
-    * `archiveDir`, archive-then-advance (see [[DedupCatalog.expire]]).
-    */
-  def expire(spark: SparkSession, h: Handle, minIngestId: Long,
-      archiveDir: Option[String] = None): Unit =
-    CatalogMaintenance.expire(spark, tset(h), minIngestId, archiveDir)
-
-  /** The catalog's maintenance floor (0 = never maintained). */
-  def floor(spark: SparkSession, h: Handle): Long =
-    CatalogMaintenance.readFloor(spark, h.root)
+  def append(spark: SparkSession, sigs: DataFrame, h: Handle,
+      ingestId: Long): Unit =
+    LandedCatalog.append(spark, h, ingestId)(bandRows(sigs))
 
   /** Screen a batch of signatures `(doc_id, sh)` against the landed
     * catalog — the per-ingest-batch operator, with exactly
@@ -114,20 +62,13 @@ object SigCatalog {
     * (history never rescans itself); intra-batch twins from the
     * in-plan banded pair join over the batch alone — both branches
     * scale with the batch, never with the corpus. `maxIngestId`
-    * bounds the visible history exactly like [[DedupCatalog.screen]].
+    * bounds the visible history (see [[LandedCatalog.history]]).
     */
   def screen(spark: SparkSession, batchSigs: DataFrame, h: Handle,
       maxHamming: Int = 3, maxIngestId: Option[Long] = None): DataFrame = {
     require(maxHamming <= 3, "4 x 16-bit bands are only complete for d <= 3")
-    maxIngestId.foreach { x =>
-      val f = CatalogMaintenance.readFloor(spark, h.root)
-      require(x >= f,
-        s"screen bound $x is below the catalog's maintenance floor $f " +
-          s"(batches <= $f were compacted/expired; replaying one is invalid)")
-    }
-    val hist = maxIngestId.fold(spark.table(h.bandsT))(x =>
-      spark.table(h.bandsT).filter(col("ingest_id") <= x))
-    val bb = bandRows(batchSigs)
+    val Seq(hist) = LandedCatalog.history(spark, h, maxIngestId)
+    val Seq(bb) = bandRows(batchSigs)
     // b != p mirrors the in-plan screen's strict pair inequality: a
     // crash-replayed batch bounded ABOVE its own append (maxIngestId)
     // cannot see itself anyway, but an unbounded mis-call must not
@@ -147,37 +88,4 @@ object SigCatalog {
         count(lit(1)).as("n_matches"))
       .orderBy("doc_id")
   }
-
-  /** Record `sigs` (accepted batch members) into the catalog as
-    * ingest partition `ingestId` so the next screen sees them as
-    * history. Replay-idempotent like [[DedupCatalog.append]]: a
-    * dynamic partition overwrite of exactly that partition.
-    * `ingestId` > 0 (0 is the landed history).
-    */
-  def append(spark: SparkSession, sigs: DataFrame, h: Handle,
-      ingestId: Long): Unit = {
-    require(ingestId > 0, s"ingestId must be > 0 (0 is the landing): $ingestId")
-    val f = CatalogMaintenance.readFloor(spark, h.root)
-    require(ingestId > f,
-      s"ingestId $ingestId is at or below the maintenance floor $f: that " +
-        "batch's state was folded into the landing (or expired) — " +
-        "re-appending it would duplicate state rows and corrupt screens")
-    BucketedLayout.overwritePartitions(spark,
-      bandRows(sigs).withColumn("ingest_id", lit(ingestId)), h.bandsT)
-  }
-
-  /** Drop the catalog: table entry AND files. */
-  def drop(spark: SparkSession, h: Handle): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${h.bandsT}")
-    fs(spark, h.root).delete(new Path(h.root), true)
-  }
-
-  /** Regen hygiene for fingerprint-named catalogs — see
-    * [[CatalogMaintenance.pruneCatalogSiblings]].
-    */
-  def pruneSiblings(spark: SparkSession, namePrefix: String, keepName: String,
-      base: String = defaultBase,
-      maxAgeMs: Long = 2L * 3600 * 1000): Unit =
-    CatalogMaintenance.pruneCatalogSiblings(spark, base, "graft_sgcat",
-      namePrefix, keepName, maxAgeMs)
 }

@@ -1,9 +1,8 @@
 package graft.plans
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.operators.Similarity
+import graft.plans.LandedCatalog.{Handle, Spec}
 
 /** Landed embedding-screening catalog — the vector twin of
   * [[DedupCatalog]]: the history side of the hyperplane-LSH near-dup
@@ -18,154 +17,44 @@ import graft.operators.Similarity
   *  - `<name>_vectors` (vec_id, embedding): the raw vectors, bucketed
   *    by `vec_id` — the decimal-verify join key.
   *
-  * Partitioned by `ingest_id`, `_LANDED`-marked, and re-registrable
-  * in a fresh session exactly like [[DedupCatalog]] (appends are
-  * dynamic partition overwrites; restarts reattach instead of
-  * re-landing). Same persisted-state shape as the reference's
-  * incremental pipeline (honeycomb/owt/hcOwt.py:250-331 diffs new
-  * input against landed state), expressed as Spark bucketed tables.
+  * Landing, appends, reattach and maintenance are [[LandedCatalog]]'s.
   */
 object VecCatalog {
 
-  /** The two landed table names + storage root for one catalog. */
-  case class Handle(bucketsT: String, vectorsT: String, root: String)
-
-  /** Default durable-enough location for tests/gates; production
-    * passes its own `base` to [[land]].
-    */
-  def defaultBase: String = s"${sys.props("java.io.tmpdir")}/graft_vccat"
-
-  private def handle(name: String, base: String): Handle = {
-    val n = name.replaceAll("[^A-Za-z0-9_]", "_") + "_" +
-      java.lang.Long.toHexString(graft.functions.TextImpl.fnv1a64(name)).take(8)
-    Handle(s"graft_vccat_${n}_buckets", s"graft_vccat_${n}_vectors",
-      s"$base/graft_vccat_$n")
-  }
-
-  private def fs(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
+  val Tag = "graft_vccat"
 
   private val specs = Seq(
-    "buckets" -> ("vec_id BIGINT, tk STRING, ingest_id BIGINT", "tk", Seq("tk")),
-    "vectors" -> ("vec_id BIGINT, embedding ARRAY<FLOAT>, ingest_id BIGINT",
+    Spec("buckets", "vec_id BIGINT, tk STRING, ingest_id BIGINT", "tk", Seq("tk")),
+    Spec("vectors", "vec_id BIGINT, embedding ARRAY<FLOAT>, ingest_id BIGINT",
       "vec_id", Seq("vec_id")))
 
-  private def tables(h: Handle) = Seq(h.bucketsT, h.vectorsT)
+  private def rows(emb: DataFrame): Seq[DataFrame] =
+    Seq(Similarity.bucketKeys(emb, "vec_id"), emb.select("vec_id", "embedding"))
 
   /** Land `histEmb` (a (vec_id, embedding) frame) as the screening
-    * catalog `name`, as ingest partition 0. Registered tables come
-    * straight back; `_LANDED` files with missing catalog entries are
-    * re-registered (appends survive restarts); only a truly absent
-    * catalog is computed.
+    * catalog `name`, as ingest partition 0.
     */
   def land(spark: SparkSession, histEmb: DataFrame, name: String,
-      nBuckets: Int = 8, base: String = defaultBase): Handle = {
-    val h = handle(name, base)
-    if (tables(h).forall(spark.catalog.tableExists)) return h
-    if (fs(spark, h.root).exists(new Path(s"${h.root}/_LANDED"))) {
-      // persisted bucket count wins over the call-site parameter (see
-      // DedupCatalog.land: a mismatched re-register makes the bucketed
-      // scan silently drop files); pre-field markers fall back to it
-      val nb = CatalogMaintenance.readFile(fs(spark, h.root),
-          new Path(s"${h.root}/_LANDED"))
-        .flatMap(s => scala.util.Try(s.stripPrefix("nBuckets=").trim.toInt).toOption)
-        .getOrElse(nBuckets)
-      tables(h).zip(specs).foreach { case (t, (sfx, (ddl, bcol, scols))) =>
-        BucketedLayout.register(spark, t, ddl, "ingest_id", bcol, scols,
-          nb, s"${h.root}/$sfx")
-      }
-      CatalogMaintenance.recover(spark, tset(h))
-      return h
-    }
-    def part(df: DataFrame) = df.withColumn("ingest_id", lit(0L))
-    BucketedLayout.write(part(Similarity.bucketKeys(histEmb, "vec_id")),
-      h.bucketsT, "tk", nBuckets, Seq("tk"), Some(s"${h.root}/buckets"),
-      Seq("ingest_id"))
-    BucketedLayout.write(part(histEmb.select("vec_id", "embedding")),
-      h.vectorsT, "vec_id", nBuckets, Seq("vec_id"), Some(s"${h.root}/vectors"),
-      Seq("ingest_id"))
-    CatalogMaintenance.writeFile(fs(spark, h.root),
-      new Path(s"${h.root}/_LANDED"), s"nBuckets=$nBuckets")
-    h
-  }
+      nBuckets: Int = 8, base: String = LandedCatalog.defaultBase(Tag)): Handle =
+    LandedCatalog.land(spark, LandedCatalog.handle(Tag, name, base, specs),
+      nBuckets)(rows(histEmb))
 
-  private def tset(h: Handle) = CatalogMaintenance.TableSet(tables(h),
-    specs.map { case (sfx, _) => s"${h.root}/$sfx" }, h.root)
-
-  /** Fold ingest partitions 0..`upToIngestId` into the landing — the
-    * vector twin of [[DedupCatalog.compact]]; same contract.
+  /** Record `emb` (accepted batch members) as ingest partition
+    * `ingestId` so the next screen sees them as history.
     */
-  def compact(spark: SparkSession, h: Handle, upToIngestId: Long): Unit =
-    CatalogMaintenance.compact(spark, tset(h), upToIngestId)
-
-  /** Retention: drop ingest partitions below `minIngestId`; with
-    * `archiveDir`, archive-then-advance (see [[DedupCatalog.expire]]).
-    */
-  def expire(spark: SparkSession, h: Handle, minIngestId: Long,
-      archiveDir: Option[String] = None): Unit =
-    CatalogMaintenance.expire(spark, tset(h), minIngestId, archiveDir)
-
-  /** The catalog's maintenance floor (0 = never maintained). */
-  def floor(spark: SparkSession, h: Handle): Long =
-    CatalogMaintenance.readFloor(spark, h.root)
+  def append(spark: SparkSession, emb: DataFrame, h: Handle,
+      ingestId: Long): Unit =
+    LandedCatalog.append(spark, h, ingestId)(rows(emb))
 
   /** Screen a batch of vectors against the landed catalog — the
     * per-ingest-batch operator. `maxIngestId` bounds the visible
-    * history exactly like [[DedupCatalog.screen]] (the streaming
-    * append loop passes its batch id so a crash-replayed batch cannot
-    * self-match against its own pre-crash append).
+    * history (see [[LandedCatalog.history]]).
     */
   def screen(spark: SparkSession, batchEmb: DataFrame, h: Handle,
       threshold: Double = 0.95, maxIngestId: Option[Long] = None,
       multiProbe: Boolean = false): DataFrame = {
-    // bounds below the maintenance floor are invalid (see
-    // DedupCatalog.screen: the fold makes them unhonorable)
-    maxIngestId.foreach { x =>
-      val f = CatalogMaintenance.readFloor(spark, h.root)
-      require(x >= f,
-        s"screen bound $x is below the catalog's maintenance floor $f " +
-          s"(batches <= $f were compacted/expired; replaying one is invalid)")
-    }
-    def tbl(t: String) =
-      maxIngestId.fold(spark.table(t))(x => spark.table(t).filter(col("ingest_id") <= x))
-    Similarity.embeddingScreen(batchEmb,
-      tbl(h.bucketsT).select("vec_id", "tk"),
-      tbl(h.vectorsT).select("vec_id", "embedding"), threshold,
-      multiProbe = multiProbe)
+    val Seq(buckets, vectors) = LandedCatalog.history(spark, h, maxIngestId)
+    Similarity.embeddingScreen(batchEmb, buckets.select("vec_id", "tk"),
+      vectors.select("vec_id", "embedding"), threshold, multiProbe = multiProbe)
   }
-
-  /** Record `emb` (accepted batch members) into the catalog as ingest
-    * partition `ingestId` so the next screen sees them as history.
-    * Replay-idempotent like [[DedupCatalog.append]]: a dynamic
-    * partition overwrite of exactly that partition. `ingestId` > 0.
-    */
-  def append(spark: SparkSession, emb: DataFrame, h: Handle,
-      ingestId: Long): Unit = {
-    require(ingestId > 0, s"ingestId must be > 0 (0 is the landing): $ingestId")
-    val f = CatalogMaintenance.readFloor(spark, h.root)
-    require(ingestId > f,
-      s"ingestId $ingestId is at or below the maintenance floor $f: that " +
-        "batch's state was folded into the landing (or expired) — " +
-        "re-appending it would duplicate state rows and corrupt screens")
-    def part(df: DataFrame) = df.withColumn("ingest_id", lit(ingestId))
-    BucketedLayout.overwritePartitions(spark,
-      part(Similarity.bucketKeys(emb, "vec_id")), h.bucketsT)
-    BucketedLayout.overwritePartitions(spark,
-      part(emb.select("vec_id", "embedding")), h.vectorsT)
-  }
-
-  /** Drop the catalog: table entries AND files. */
-  def drop(spark: SparkSession, h: Handle): Unit = {
-    tables(h).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    fs(spark, h.root).delete(new Path(h.root), true)
-  }
-
-  /** Regen hygiene for fingerprint-named catalogs — see
-    * [[CatalogMaintenance.pruneCatalogSiblings]].
-    */
-  def pruneSiblings(spark: SparkSession, namePrefix: String, keepName: String,
-      base: String = defaultBase,
-      maxAgeMs: Long = 2L * 3600 * 1000): Unit =
-    CatalogMaintenance.pruneCatalogSiblings(spark, base, "graft_vccat",
-      namePrefix, keepName, maxAgeMs)
 }

@@ -141,12 +141,12 @@ object TrainingPack {
           .otherwise(col("text")).as("text"))
     val cat = graft.plans.DedupCatalog.land(s,
       docs.filter(col("doc_id") % 6 === 0), s"cmp_$d")
-    if (graft.plans.DedupCatalog.floor(s, cat) < 2) {
+    if (graft.plans.LandedCatalog.floor(s, cat) < 2) {
       graft.plans.DedupCatalog.append(s,
         docs.filter(col("doc_id") % 6 === 2), cat, ingestId = 1)
       graft.plans.DedupCatalog.append(s,
         docs.filter(col("doc_id") % 6 === 4), cat, ingestId = 2)
-      graft.plans.DedupCatalog.compact(s, cat, upToIngestId = 2)
+      graft.plans.LandedCatalog.compact(s, cat, upToIngestId = 2)
     }
     graft.plans.DedupCatalog.screen(s, batch, cat)
   }
@@ -458,10 +458,10 @@ object TrainingPack {
     val cat = graft.plans.SemCatalog.land(s,
       emb.filter(col("vec_id") % 6 === 0),
       s"smc_${d}_${graft.Shared.srcFingerprint(s, d)}")
-    if (graft.plans.SemCatalog.floor(s, cat) < 2) {
+    if (graft.plans.LandedCatalog.floor(s, cat) < 2) {
       graft.plans.SemCatalog.append(s, emb.filter(col("vec_id") % 6 === 2), cat, 1L)
       graft.plans.SemCatalog.append(s, emb.filter(col("vec_id") % 6 === 4), cat, 2L)
-      graft.plans.SemCatalog.compact(s, cat, 2L)
+      graft.plans.LandedCatalog.compact(s, cat, 2L)
     }
     graft.plans.SemCatalog.screen(s, batch, cat)
   }
@@ -1284,12 +1284,12 @@ object TrainingPack {
           .otherwise(col("sh")).as("sh"))
     val cat = graft.plans.SigCatalog.land(s,
       hist.filter(col("doc_id") % 6 === 0), s"fp_$d")
-    if (graft.plans.SigCatalog.floor(s, cat) < 2) {
+    if (graft.plans.LandedCatalog.floor(s, cat) < 2) {
       graft.plans.SigCatalog.append(s,
         hist.filter(col("doc_id") % 6 === 2), cat, ingestId = 1)
       graft.plans.SigCatalog.append(s,
         hist.filter(col("doc_id") % 6 === 4), cat, ingestId = 2)
-      graft.plans.SigCatalog.compact(s, cat, upToIngestId = 2)
+      graft.plans.LandedCatalog.compact(s, cat, upToIngestId = 2)
     }
     graft.plans.SigCatalog.screen(s, batch, cat)
   }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, expr}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import graft.operators.{Classifier, Elections}
 
@@ -86,7 +85,8 @@ object ClsScreen {
       checkpointDir: String, minMargin: Long = 0L,
       buckets: Int = Classifier.Buckets,
       maxFilesPerTrigger: Int = 1): Unit = {
-    val screen: (DataFrame, Long) => Unit = { (batch, batchId) =>
+    EventStream.drainBatches(spark, srcDir, schema, checkpointDir,
+        maxFilesPerTrigger) { (batch, batchId) =>
       val s = batch.sparkSession
       // the artifact read is per-batch by design: a deployment swaps
       // the model by replacing the directory between retrains, and a
@@ -111,17 +111,6 @@ object ClsScreen {
         } else scored.filter(col("margin_e9") >= minMargin)
       out.write.mode("overwrite").parquet(s"$sinkDir/batch_id=$batchId")
       graft.Shared.releaseAll(s)
-    }
-    // input-derived fan-out for the per-batch screen jobs (AQE is off
-    // on the streaming plan; see EventStream.withStateParts)
-    EventStream.withStateParts(spark, srcDir) {
-      val q = EventStream.fromDirectory(spark, srcDir, schema, maxFilesPerTrigger)
-        .writeStream
-        .foreachBatch(screen)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
     }
   }
 

@@ -1,10 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import graft.operators.Dedup
-import graft.plans.DedupCatalog
+import graft.plans.{DedupCatalog, LandedCatalog}
 
 /** Streaming dedup-at-ingest: new documents arriving as files are
   * screened for near-duplicates against the LANDED signature catalog
@@ -45,7 +44,7 @@ object DocScreen {
     * survivor partitions) without recomputation. A stream over a
     * different history must use a fresh checkpoint dir; reusing a
     * checkpoint PATH after wiping its contents requires dropping the
-    * catalog too ([[DedupCatalog.drop]]) — batch ids restart at 0 and
+    * catalog too ([[LandedCatalog.drop]]) — batch ids restart at 0 and
     * would collide with the previous run's ingest partitions.
     */
   def incrementalNeardupScreen(spark: SparkSession, srcDir: String,
@@ -84,10 +83,11 @@ object DocScreen {
     * verdict sink.
     */
   def screenAgainstCatalog(spark: SparkSession, srcDir: String,
-      schema: StructType, cat: DedupCatalog.Handle,
+      schema: StructType, cat: LandedCatalog.Handle,
       sinkDir: String, checkpointDir: String,
       maxFilesPerTrigger: Int = 1, appendAccepted: Boolean = false): Unit = {
-    val screen: (DataFrame, Long) => Unit = { (batch, batchId) =>
+    EventStream.drainBatches(spark, srcDir, schema, checkpointDir,
+        maxFilesPerTrigger) { (batch, batchId) =>
       val s = batch.sparkSession
       // materialized once: the verdicts feed the sink write AND the
       // accepted-set anti-join without recomputing the screen. In the
@@ -123,17 +123,6 @@ object DocScreen {
       // session alone drops them without touching anything the caller
       // pinned on the outer session
       graft.Shared.releaseAll(s)
-    }
-    // input-derived fan-out for the per-batch screen jobs (AQE is off
-    // on the streaming plan; see EventStream.withStateParts)
-    EventStream.withStateParts(spark, srcDir) {
-      val q = EventStream.fromDirectory(spark, srcDir, schema, maxFilesPerTrigger)
-        .writeStream
-        .foreachBatch(screen)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
     }
   }
 }

@@ -232,6 +232,26 @@ object EventStream {
     try f finally spark.conf.set(key, was)
   }
 
+  /** Drain `srcDir`'s files through `batchFn` once per micro-batch
+    * (checkpointed file source, foreachBatch, AvailableNow) and block
+    * until every available file is processed — the one drain of the
+    * foreachBatch screens. Runs under [[withStateParts]]: AQE is off
+    * on the streaming plan, so the per-batch screen jobs take their
+    * fan-out from the source's size.
+    */
+  def drainBatches(spark: SparkSession, srcDir: String,
+      schema: org.apache.spark.sql.types.StructType, checkpointDir: String,
+      maxFilesPerTrigger: Int)(batchFn: (DataFrame, Long) => Unit): Unit =
+    withStateParts(spark, srcDir) {
+      fromDirectory(spark, srcDir, schema, maxFilesPerTrigger)
+        .writeStream
+        .foreachBatch(batchFn)
+        .option("checkpointLocation", checkpointDir)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
+
   /** Land the replay source once per (scale dir, content fingerprint)
     * and return its path + schema — shared by the streaming replay
     * gates, which all micro-batch over the same 8 time-range slices.

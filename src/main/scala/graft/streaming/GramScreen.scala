@@ -1,9 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
-import graft.plans.GramCatalog
+import graft.plans.{GramCatalog, LandedCatalog}
 
 /** Streaming substring-dedup-at-ingest: each micro-batch of documents
   * is span-screened against the landed gram-stats catalog
@@ -33,9 +32,10 @@ import graft.plans.GramCatalog
 object GramScreen {
 
   def spanScreen(spark: SparkSession, srcDir: String, schema: StructType,
-      cat: GramCatalog.Handle, sinkDir: String, checkpointDir: String,
+      cat: LandedCatalog.Handle, sinkDir: String, checkpointDir: String,
       minDocs: Int = 2, maxFilesPerTrigger: Int = 1): Unit = {
-    val screen: (DataFrame, Long) => Unit = { (batch, batchId) =>
+    EventStream.drainBatches(spark, srcDir, schema, checkpointDir,
+        maxFilesPerTrigger) { (batch, batchId) =>
       val s = batch.sparkSession
       // no checkpoint: the span frame has exactly one reader (the
       // sink write), so an eager materialization job would be pure
@@ -46,17 +46,6 @@ object GramScreen {
       spans.write.mode("overwrite").parquet(s"$sinkDir/batch_id=$batchId")
       GramCatalog.append(s, batch, cat, batchId + 1)
       graft.Shared.releaseAll(s)
-    }
-    // input-derived fan-out for the per-batch screen jobs (AQE is off
-    // on the streaming plan; see EventStream.withStateParts)
-    EventStream.withStateParts(spark, srcDir) {
-      val q = EventStream.fromDirectory(spark, srcDir, schema, maxFilesPerTrigger)
-        .writeStream
-        .foreachBatch(screen)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
     }
   }
 
@@ -79,7 +68,7 @@ object GramScreen {
     * invocation are invisible to the replayed batches and the
     * re-append overwrites identical content.
     */
-  def spanScreenReplayGate(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
+  def spanScreenReplayGate(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val docs = graft.Tables.documents(spark, dir).select("doc_id", "text")
     val hist = docs.filter(col("doc_id") < 250)
@@ -87,8 +76,8 @@ object GramScreen {
       docs.filter(col("doc_id") >= 250), "doc_id")
     // fingerprint-named catalog regenerates with the slices; prune the
     // stale incarnations a testdata regen would otherwise strand
-    GramCatalog.pruneSiblings(spark, ReplayGate.catalogNamePrefix(srcDir),
-      ReplayGate.catalogName(srcDir))
+    LandedCatalog.pruneSiblings(spark, GramCatalog.Tag,
+      ReplayGate.catalogNamePrefix(srcDir), ReplayGate.catalogName(srcDir))
     val cat = GramCatalog.land(spark, hist, ReplayGate.catalogName(srcDir))
     val base = ReplayGate.gateBase(spark, dir, "graft_gram_gate")
     spanScreen(spark, srcDir, docs.schema, cat, s"$base/sink", s"$base/ck")

@@ -44,7 +44,7 @@ private[streaming] object ReplayGate {
       arriving.filter(col(idCol) >= 375)
         .coalesce(1).write.mode("append").parquet(srcDir)
       alsoLand(srcDir)
-      graft.plans.CatalogMaintenance.writeFile(fs,
+      graft.plans.LandedCatalog.writeFile(fs,
         new org.apache.hadoop.fs.Path(s"$srcDir/_SLICED"), "ok")
     }
     srcDir

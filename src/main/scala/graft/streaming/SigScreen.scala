@@ -2,9 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
-import graft.plans.SigCatalog
+import graft.plans.{LandedCatalog, SigCatalog}
 
 /** Streaming perceptual dedup-at-ingest — the banded-signature twin
   * of [[DocScreen]]/[[VecScreen]]: micro-batches of 64-bit
@@ -33,9 +32,10 @@ import graft.plans.SigCatalog
 object SigScreen {
 
   def sigScreen(spark: SparkSession, srcDir: String, schema: StructType,
-      cat: SigCatalog.Handle, sinkDir: String, checkpointDir: String,
+      cat: LandedCatalog.Handle, sinkDir: String, checkpointDir: String,
       maxHamming: Int = 3, maxFilesPerTrigger: Int = 1): Unit = {
-    val screen: (DataFrame, Long) => Unit = { (batch, batchId) =>
+    EventStream.drainBatches(spark, srcDir, schema, checkpointDir,
+        maxFilesPerTrigger) { (batch, batchId) =>
       val s = batch.sparkSession
       val verdicts = SigCatalog.screen(s, batch, cat, maxHamming,
         maxIngestId = Some(batchId)).localCheckpoint(true)
@@ -44,17 +44,6 @@ object SigScreen {
         batch.join(verdicts.select("doc_id"), Seq("doc_id"), "left_anti"),
         cat, batchId + 1)
       graft.Shared.releaseAll(s)
-    }
-    // input-derived fan-out for the per-batch screen jobs (AQE is off
-    // on the streaming plan; see EventStream.withStateParts)
-    EventStream.withStateParts(spark, srcDir) {
-      val q = EventStream.fromDirectory(spark, srcDir, schema, maxFilesPerTrigger)
-        .writeStream
-        .foreachBatch(screen)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
     }
   }
 
@@ -116,8 +105,8 @@ object SigScreen {
       sigs.filter(col("doc_id") >= 250), "doc_id")
     // fingerprint-named catalog regenerates with the slices; prune the
     // stale incarnations a testdata regen would otherwise strand
-    SigCatalog.pruneSiblings(spark, ReplayGate.catalogNamePrefix(srcDir),
-      ReplayGate.catalogName(srcDir))
+    LandedCatalog.pruneSiblings(spark, SigCatalog.Tag,
+      ReplayGate.catalogNamePrefix(srcDir), ReplayGate.catalogName(srcDir))
     val cat = SigCatalog.land(spark, hist, ReplayGate.catalogName(srcDir))
     val base = ReplayGate.gateBase(spark, dir,
       s"graft_sig_gate_$tag".stripSuffix("_"))

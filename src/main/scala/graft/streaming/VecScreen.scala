@@ -1,9 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
-import graft.plans.{SemCatalog, VecCatalog}
+import graft.plans.{LandedCatalog, SemCatalog, VecCatalog}
 
 /** Streaming embedding dedup-at-ingest — the vector twin of
   * [[DocScreen]]: new vectors arriving as files are screened for
@@ -34,7 +33,7 @@ object VecScreen {
     * (raw-name-hashed): a RESUMED stream — same checkpoint, even in a
     * new session after a crash — reattaches to the landed tables and
     * appended partitions without recomputation. Reusing a checkpoint
-    * PATH after wiping its contents requires [[VecCatalog.drop]] too
+    * PATH after wiping its contents requires [[LandedCatalog.drop]] too
     * (batch ids restart and would collide with old partitions).
     */
   def incrementalEmbScreen(spark: SparkSession, srcDir: String,
@@ -61,11 +60,12 @@ object VecScreen {
     * sink), so batch N+1 is screened against batch N's survivors.
     */
   def screenAgainstCatalog(spark: SparkSession, srcDir: String,
-      schema: StructType, cat: VecCatalog.Handle,
+      schema: StructType, cat: LandedCatalog.Handle,
       sinkDir: String, checkpointDir: String,
       maxFilesPerTrigger: Int = 1, appendAccepted: Boolean = false,
       multiProbe: Boolean = false): Unit = {
-    val screen: (DataFrame, Long) => Unit = { (batch, batchId) =>
+    EventStream.drainBatches(spark, srcDir, schema, checkpointDir,
+        maxFilesPerTrigger) { (batch, batchId) =>
       val s = batch.sparkSession
       // bounded to ingest partitions <= batchId in the append loop so
       // a crash-replayed batch cannot self-match against its own
@@ -93,17 +93,6 @@ object VecScreen {
           batch.join(verdicts.select("vec_id"), Seq("vec_id"), "left_anti"),
           cat, batchId + 1)
     }
-    // input-derived fan-out for the per-batch screen jobs (AQE is off
-    // on the streaming plan; see EventStream.withStateParts)
-    EventStream.withStateParts(spark, srcDir) {
-      val q = EventStream.fromDirectory(spark, srcDir, schema, maxFilesPerTrigger)
-        .writeStream
-        .foreachBatch(screen)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
   }
 
   /** Driver-gate REPLAY of the STREAMING semantic-decontamination
@@ -130,8 +119,8 @@ object VecScreen {
       corpus, "vec_id")
     // the benchmark catalog is fingerprint-named like the slices; a
     // regen prunes the stale catalog too instead of stranding it
-    VecCatalog.pruneSiblings(spark, ReplayGate.catalogNamePrefix(srcDir),
-      ReplayGate.catalogName(srcDir))
+    LandedCatalog.pruneSiblings(spark, VecCatalog.Tag,
+      ReplayGate.catalogNamePrefix(srcDir), ReplayGate.catalogName(srcDir))
     val cat = VecCatalog.land(spark, bench, ReplayGate.catalogName(srcDir))
     val base = ReplayGate.gateBase(spark, dir, "graft_decon_gate")
     screenAgainstCatalog(spark, srcDir, corpus.schema, cat,
@@ -178,12 +167,13 @@ object VecScreen {
     * already-landed [[SemCatalog]] (history landed out-of-band).
     */
   def semanticScreenAgainstCatalog(spark: SparkSession, srcDir: String,
-      schema: StructType, cat: SemCatalog.Handle,
+      schema: StructType, cat: LandedCatalog.Handle,
       sinkDir: String, checkpointDir: String,
       threshold: Double = 0.95, maxFilesPerTrigger: Int = 1): Unit = {
     import org.apache.spark.sql.functions.col
     import graft.operators.Similarity
-    val screen: (DataFrame, Long) => Unit = { (batch, batchId) =>
+    EventStream.drainBatches(spark, srcDir, schema, checkpointDir,
+        maxFilesPerTrigger) { (batch, batchId) =>
       val s = batch.sparkSession
       val catalogV = SemCatalog.screen(s, batch, cat, threshold,
           maxIngestId = Some(batchId))
@@ -208,17 +198,6 @@ object VecScreen {
       SemCatalog.append(s,
         batch.join(verdicts.select("vec_id"), Seq("vec_id"), "left_anti"),
         cat, batchId + 1)
-    }
-    // input-derived fan-out for the per-batch screen jobs (AQE is off
-    // on the streaming plan; see EventStream.withStateParts)
-    EventStream.withStateParts(spark, srcDir) {
-      val q = EventStream.fromDirectory(spark, srcDir, schema, maxFilesPerTrigger)
-        .writeStream
-        .foreachBatch(screen)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
     }
   }
 }

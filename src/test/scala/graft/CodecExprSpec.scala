@@ -72,6 +72,31 @@ class CodecExprSpec extends AnyFunSuite {
     assert(out === Seq((1, "00-11-22-33-44-55"), (2, "12345"), (7, "3600")))
   }
 
+  test("tlv_decode routes a truncated frame to null, interpreted and codegen") {
+    CE.register(spark)
+    // header claims 10 value bytes but 2 follow; a lone half header;
+    // one well-formed frame. Built over range() (not a local relation,
+    // which the optimizer would evaluate interpreted) so the codegen
+    // pass really runs generated code.
+    def bin(b: Array[Byte]) = lit(b)
+    val raw = when(col("id") === 0, bin(Array[Byte](0, 1, 0, 10, 0x41, 0x42)))
+      .when(col("id") === 1, bin(Array[Byte](0)))
+      .otherwise(bin(CodecImpl.tlvEncode(Seq(1 -> "ab".getBytes))))
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    for (mode <- Seq(Seq("false", "NO_CODEGEN"), Seq("true", "CODEGEN_ONLY"))) {
+      keys.zip(mode).foreach { case (k, v) => spark.conf.set(k, v) }
+      try withClue(mode) {
+        val q = spark.range(3).select(col("id"), CE.tlv_decode(raw).as("f"))
+        assert(q.queryExecution.executedPlan.toString.contains("*(") === (mode.head == "true"))
+        val got = q.orderBy("id").collect()
+        assert(got.take(2).forall(_.isNullAt(1)), "truncated frame did not decode to null")
+        assert(got(2).getSeq[org.apache.spark.sql.Row](1).map(_.getInt(0)) === Seq(1))
+      } finally keys.foreach(spark.conf.unset)
+    }
+    // the SQL form from the bug report (constant-folded, interpreted)
+    assert(spark.sql("SELECT tlv_decode(unhex('0001000A4142')) AS f").head().isNullAt(0))
+  }
+
   test("SQL registration: functions callable from spark.sql") {
     CE.register(spark)
     val row = spark.sql(

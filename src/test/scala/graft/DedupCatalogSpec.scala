@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Dedup
-import graft.plans.DedupCatalog
+import graft.plans.{DedupCatalog, LandedCatalog}
 
 /** Landed near-dup catalog: the screen over bucketed state tables must
   * return exactly what the self-contained in-plan operator returns,
@@ -46,7 +46,7 @@ class DedupCatalogSpec extends AnyFunSuite {
       Shared.releaseAll(spark)
       assert(want.nonEmpty, "no catalog matches in the corpus")
       assert(got === want)
-    } finally DedupCatalog.drop(spark, cat)
+    } finally LandedCatalog.drop(spark, cat)
   }
 
   test("append makes a batch part of history; replay and ingest bounds hold") {
@@ -85,7 +85,7 @@ class DedupCatalogSpec extends AnyFunSuite {
       Shared.releaseAll(spark)
       assert(!bounded.exists(_.getLong(0) == 10260L),
         "maxIngestId=0 still sees the appended partition")
-    } finally DedupCatalog.drop(spark, cat)
+    } finally LandedCatalog.drop(spark, cat)
   }
 
   test("a fresh session catalog reattaches to landed state without losing appends") {
@@ -99,7 +99,7 @@ class DedupCatalogSpec extends AnyFunSuite {
       DedupCatalog.append(spark, batch1, cat, ingestId = 1)
       // simulate a crash-restart: the in-memory catalog loses the
       // table entries, the files survive (external tables)
-      Seq(cat.bandsT, cat.shinglesT, cat.sizesT)
+      Seq(cat.table("bands"), cat.table("shingles"), cat.table("sizes"))
         .foreach(t => spark.sql(s"DROP TABLE $t"))
       val cat2 = DedupCatalog.land(spark, hist, "spec_restart")
       assert(cat2 === cat)
@@ -109,7 +109,7 @@ class DedupCatalogSpec extends AnyFunSuite {
       Shared.releaseAll(spark)
       assert(after.exists(r => r.getLong(0) == 10260L && r.getLong(2) == 260L),
         s"appended history lost across the restart: ${after.toSeq}")
-    } finally DedupCatalog.drop(spark, cat)
+    } finally LandedCatalog.drop(spark, cat)
   }
 
   test("candidate join reads the landed band table without shuffling it") {
@@ -155,7 +155,7 @@ class DedupCatalogSpec extends AnyFunSuite {
       Shared.releaseAll(spark)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      DedupCatalog.drop(spark, cat)
+      LandedCatalog.drop(spark, cat)
     }
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Dedup
-import graft.plans.GramCatalog
+import graft.plans.{GramCatalog, LandedCatalog}
 
 /** Landed gram-stats catalog: the screen over the bucketed stats
   * table must equal the self-contained in-plan incremental screen,
@@ -41,7 +41,7 @@ class GramCatalogSpec extends AnyFunSuite {
         .orderBy("doc_id", "span_start").collect().toSeq
       Shared.releaseAll(spark)
       assert(landed.nonEmpty && landed === inPlan)
-    } finally GramCatalog.drop(spark, cat)
+    } finally LandedCatalog.drop(spark, cat)
   }
 
   test("append merges into history: a cross-partition gram flags; the bound excludes it") {
@@ -69,7 +69,7 @@ class GramCatalogSpec extends AnyFunSuite {
       val replayed = GramCatalog.screen(spark, b2, cat)
         .as[(Long, Int, Int, Long)].collect()
       assert(replayed === after)
-    } finally GramCatalog.drop(spark, cat)
+    } finally LandedCatalog.drop(spark, cat)
   }
 
   test("the merge aggregate reads the bucketed stats table without an Exchange") {
@@ -99,7 +99,7 @@ class GramCatalogSpec extends AnyFunSuite {
         assert(!path.exists(_.isInstanceOf[ShuffleExchangeExec]),
           s"merge aggregate shuffled the bucketed stats table:\n$top")
       }
-    } finally GramCatalog.drop(spark, cat)
+    } finally LandedCatalog.drop(spark, cat)
   }
 
   test("compact is invisible to the merged view; floors reject folded replays and stale bounds") {
@@ -116,12 +116,12 @@ class GramCatalogSpec extends AnyFunSuite {
       def nParts = new java.io.File(s"${cat.root}/stats")
         .listFiles().count(_.getName.startsWith("ingest_id="))
       assert(nParts === 3)
-      GramCatalog.compact(spark, cat, 2L)
+      LandedCatalog.compact(spark, cat, 2L)
       val after = GramCatalog.stats(spark, cat)
         .as[(String, Long, Long)].collect().toSet
       assert(after === before, "compaction changed the merged view")
       assert(nParts === 1, "folded partitions not dropped")
-      assert(GramCatalog.floor(spark, cat) === 2L)
+      assert(LandedCatalog.floor(spark, cat) === 2L)
       // folded batch ids can never re-append (their df would double)
       intercept[IllegalArgumentException](GramCatalog.append(spark, b1, cat, 1L))
       // a screen bound below the floor cannot be honored
@@ -130,7 +130,7 @@ class GramCatalogSpec extends AnyFunSuite {
       // at the floor is fine
       assert(GramCatalog.stats(spark, cat, maxIngestId = Some(2L))
         .as[(String, Long, Long)].collect().toSet === before)
-    } finally GramCatalog.drop(spark, cat)
+    } finally LandedCatalog.drop(spark, cat)
   }
 
   test("compact invariance holds across randomized disjoint batches") {
@@ -153,15 +153,15 @@ class GramCatalogSpec extends AnyFunSuite {
         GramCatalog.append(spark, b2, cat, 2L)
         val before = GramCatalog.stats(spark, cat)
           .as[(String, Long, Long)].collect().toSet
-        GramCatalog.compact(spark, cat, 1L)
+        LandedCatalog.compact(spark, cat, 1L)
         assert(GramCatalog.stats(spark, cat)
           .as[(String, Long, Long)].collect().toSet === before,
           s"trial $trial: partial compact changed the view")
-        GramCatalog.compact(spark, cat, 2L)
+        LandedCatalog.compact(spark, cat, 2L)
         assert(GramCatalog.stats(spark, cat)
           .as[(String, Long, Long)].collect().toSet === before,
           s"trial $trial: full compact changed the view")
-      } finally GramCatalog.drop(spark, cat)
+      } finally LandedCatalog.drop(spark, cat)
     }
   }
 
@@ -175,10 +175,10 @@ class GramCatalogSpec extends AnyFunSuite {
       GramCatalog.append(spark, b1, cat, 1L)
       assert(GramCatalog.screen(spark, probe, cat).count() === 1L)
       // drop the landing (partition 0): its aa..ee run is forgotten
-      GramCatalog.expire(spark, cat, minIngestId = 1L)
+      LandedCatalog.expire(spark, cat, minIngestId = 1L)
       assert(GramCatalog.screen(spark, probe, cat).count() === 0L,
         "expired history still flags")
-    } finally GramCatalog.drop(spark, cat)
+    } finally LandedCatalog.drop(spark, cat)
   }
 
   test("a fresh session catalog reattaches to landed state without losing appends") {
@@ -190,13 +190,13 @@ class GramCatalogSpec extends AnyFunSuite {
     try {
       GramCatalog.append(spark, b1, cat, 1L)
       // crash-restart: table entry lost, files survive
-      spark.sql(s"DROP TABLE ${cat.statsT}")
+      spark.sql(s"DROP TABLE ${cat.table("stats")}")
       val cat2 = GramCatalog.land(spark, hist, "spec_restart")
       assert(cat2 === cat)
       val after = GramCatalog.screen(spark, b2, cat2)
         .as[(Long, Int, Int, Long)].collect()
       assert(after === Array((200L, 1, 5, 1L)),
         s"appended history lost across the restart: ${after.toSeq}")
-    } finally GramCatalog.drop(spark, cat)
+    } finally LandedCatalog.drop(spark, cat)
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Similarity
-import graft.plans.SemCatalog
+import graft.plans.{LandedCatalog, SemCatalog}
 
 /** Landed semantic-dedup catalog: the screen over the cid-bucketed
   * cells table must equal the self-contained in-plan screen, appends
@@ -52,7 +52,7 @@ class SemCatalogSpec extends AnyFunSuite {
       val want = Similarity.semanticScreenFrom(batch, hist).collect().toSeq
       assert(want.nonEmpty, "no planted matches in the corpus")
       assert(got === want)
-    } finally SemCatalog.drop(spark, cat)
+    } finally LandedCatalog.drop(spark, cat)
   }
 
   test("append joins history under the LANDED geometry; earlier verdicts unchanged") {
@@ -75,7 +75,7 @@ class SemCatalogSpec extends AnyFunSuite {
       val after = SemCatalog.screen(spark, batch1, cat, maxIngestId = Some(0L))
         .collect().toSeq
       assert(after === before)
-    } finally SemCatalog.drop(spark, cat)
+    } finally LandedCatalog.drop(spark, cat)
   }
 
   test("within-cell candidate join reads the landed cells without shuffling them") {
@@ -112,7 +112,7 @@ class SemCatalogSpec extends AnyFunSuite {
       }
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      SemCatalog.drop(spark, cat)
+      LandedCatalog.drop(spark, cat)
     }
   }
 }

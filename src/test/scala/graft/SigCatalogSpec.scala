@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Dedup, Multimodal}
-import graft.plans.SigCatalog
+import graft.plans.{LandedCatalog, SigCatalog}
 
 /** Landed perceptual-signature catalog: the screen over the bucketed
   * band table must return exactly what the self-contained in-plan
@@ -72,7 +72,7 @@ class SigCatalogSpec extends AnyFunSuite {
         bid % 10 == 1 && p % 2 == 0 && d == 1 },
         "no planted history drop in the corpus")
       assert(got === want)
-    } finally SigCatalog.drop(spark, cat)
+    } finally LandedCatalog.drop(spark, cat)
   }
 
   test("append makes a batch part of history; replay idempotent; ingest bound honored") {
@@ -103,7 +103,7 @@ class SigCatalogSpec extends AnyFunSuite {
         maxIngestId = Some(0L)).collect()
       assert(!bounded.exists(_.getLong(0) == 10261L),
         "maxIngestId=0 still sees the appended partition")
-    } finally SigCatalog.drop(spark, cat)
+    } finally LandedCatalog.drop(spark, cat)
   }
 
   test("compaction folds partitions without changing one verdict") {
@@ -123,19 +123,19 @@ class SigCatalogSpec extends AnyFunSuite {
       // appended row would change a verdict below
       assert(before.exists(r => r.getLong(1) % 2 == 0),
         "no history witness before compaction")
-      SigCatalog.compact(spark, cat, upToIngestId = 2)
-      assert(SigCatalog.floor(spark, cat) === 2L)
+      LandedCatalog.compact(spark, cat, upToIngestId = 2)
+      assert(LandedCatalog.floor(spark, cat) === 2L)
       val after = SigCatalog.screen(spark, batch, cat).collect().toSeq
       assert(after === before, "compaction changed screen verdicts")
       // partitions really folded: only the landing remains
-      val parts = spark.table(cat.bandsT)
+      val parts = spark.table(cat.table("bands"))
         .select("ingest_id").distinct().as[Long].collect().sorted
       assert(parts.toSeq === Seq(0L), s"unfolded partitions: ${parts.toSeq}")
       // a bound below the floor is no longer honorable
       intercept[IllegalArgumentException] {
         SigCatalog.screen(spark, batch, cat, maxIngestId = Some(1L))
       }
-    } finally SigCatalog.drop(spark, cat)
+    } finally LandedCatalog.drop(spark, cat)
   }
 
   test("expire forgets aged signature state and blocks resurrection") {
@@ -152,19 +152,19 @@ class SigCatalogSpec extends AnyFunSuite {
       val before = SigCatalog.screen(spark, batch, cat).collect()
       assert(before.exists(r => r.getLong(0) == 9001L && r.getLong(1) == 100L),
         s"landing twin not matched before expire: ${before.toSeq}")
-      SigCatalog.expire(spark, cat, minIngestId = 1)
+      LandedCatalog.expire(spark, cat, minIngestId = 1)
       val after = SigCatalog.screen(spark, batch, cat).collect()
       assert(after.isEmpty,
         s"expired landing still matched: ${after.toSeq}")
       // age out batch 1 too; the floor rises and a re-append of the
       // expired id is blocked
-      SigCatalog.expire(spark, cat, minIngestId = 2)
-      assert(SigCatalog.floor(spark, cat) === 1L)
+      LandedCatalog.expire(spark, cat, minIngestId = 2)
+      assert(LandedCatalog.floor(spark, cat) === 1L)
       intercept[IllegalArgumentException] {
         SigCatalog.append(spark, fresh, cat, ingestId = 1)
       }
       assert(SigCatalog.screen(spark, batch, cat).collect().isEmpty)
-    } finally SigCatalog.drop(spark, cat)
+    } finally LandedCatalog.drop(spark, cat)
   }
 
   test("candidate join reads the landed band table without shuffling it") {
@@ -204,7 +204,7 @@ class SigCatalogSpec extends AnyFunSuite {
       }
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      SigCatalog.drop(spark, cat)
+      LandedCatalog.drop(spark, cat)
     }
   }
 }

@@ -322,7 +322,7 @@ class StreamingSpec extends AnyFunSuite {
       graft.streaming.DocScreen.screenAgainstCatalog(
         spark, src, f1.schema, cat, sink, chk, appendAccepted = true)
       assert(spark.read.parquet(sink).count() === flagged.size.toLong)
-    } finally graft.plans.DedupCatalog.drop(spark, cat)
+    } finally graft.plans.LandedCatalog.drop(spark, cat)
   }
 
   test("streaming embedding screen equals the batch screen, any micro-batching") {
@@ -418,14 +418,14 @@ class StreamingSpec extends AnyFunSuite {
       assert(streamed === loop, s"stream/loop diverged: ${streamed.diff(loop)} ${loop.diff(streamed)}")
       // checkpointed replay: no new files -> sink and catalog unchanged
       val before = spark.read.parquet(sink).count()
-      val cellsBefore = spark.table(cat.cellsT).count()
+      val cellsBefore = spark.table(cat.table("cells")).count()
       graft.streaming.VecScreen.semanticScreenAgainstCatalog(
         spark, src, schema, cat, sink, chk)
       assert(spark.read.parquet(sink).count() === before,
         "replay with same checkpoint re-emitted verdicts")
-      assert(spark.table(cat.cellsT).count() === cellsBefore,
+      assert(spark.table(cat.table("cells")).count() === cellsBefore,
         "replay with same checkpoint re-appended survivors")
-    } finally graft.plans.SemCatalog.drop(spark, cat)
+    } finally graft.plans.LandedCatalog.drop(spark, cat)
   }
 
   test("vector appendAccepted: batch N+1 screened against batch N's survivors") {
@@ -456,7 +456,7 @@ class StreamingSpec extends AnyFunSuite {
       graft.streaming.VecScreen.screenAgainstCatalog(
         spark, src, f1.schema, cat, sink, chk, appendAccepted = true)
       assert(spark.read.parquet(sink).count() === flagged.size.toLong)
-    } finally graft.plans.VecCatalog.drop(spark, cat)
+    } finally graft.plans.LandedCatalog.drop(spark, cat)
   }
 
   test("intraBatchVerdicts: component-min survives, members flag to the min") {
@@ -473,7 +473,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("ingest loop: an intra-batch twin pair yields one survivor, any micro-batching") {
     import spark.implicits._
-    import graft.plans.DedupCatalog
+    import graft.plans.{DedupCatalog, LandedCatalog}
     // history = docs 0-99; the batch stream lands doc 300 (novel) and
     // 10300, a near-twin of 300. Delivered in ONE file the catalog-only
     // screen is blind to the pair — the within-batch pass must flag the
@@ -495,13 +495,13 @@ class StreamingSpec extends AnyFunSuite {
         graft.streaming.DocScreen.screenAgainstCatalog(
           spark, src, a.schema, cat, sink, chk, appendAccepted = true)
         // survivor 300 is catalog history; the flagged twin is not
-        val inCat = spark.table(cat.sizesT)
+        val inCat = spark.table(cat.table("sizes"))
           .filter(col("doc").isin(300L, 10300L))
           .select("doc").as[Long].collect().toSet
         assert(inCat === Set(300L), s"[$tag] catalog content: $inCat")
         spark.read.parquet(sink)
           .select("doc_id", "matched_id").as[(Long, Long)].collect().toSet
-      } finally DedupCatalog.drop(spark, cat)
+      } finally LandedCatalog.drop(spark, cat)
     }
     val oneFile = run("one") { src =>
       a.union(b).coalesce(1).write.mode("append").parquet(src)
@@ -518,7 +518,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("vector ingest loop: an intra-batch twin pair yields one survivor") {
     import spark.implicits._
-    import graft.plans.VecCatalog
+    import graft.plans.{LandedCatalog, VecCatalog}
     // vector twin of the doc test, single-file delivery only (the
     // split-file path is the existing vector appendAccepted test)
     val emb = Tables.embeddings(spark, dir).select("vec_id", "embedding")
@@ -537,11 +537,11 @@ class StreamingSpec extends AnyFunSuite {
       val flagged = spark.read.parquet(sink)
         .select("vec_id", "matched_id").as[(Long, Long)].collect().toSet
       assert(flagged === Set((10300L, 300L)), s"verdicts: $flagged")
-      val inCat = spark.table(cat.vectorsT)
+      val inCat = spark.table(cat.table("vectors"))
         .filter(col("vec_id").isin(300L, 10300L))
         .select("vec_id").as[Long].collect().toSet
       assert(inCat === Set(300L), s"catalog content: $inCat")
-    } finally VecCatalog.drop(spark, cat)
+    } finally LandedCatalog.drop(spark, cat)
   }
 
   test("streaming beacon DAG equals the batch pipeline") {
@@ -689,7 +689,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming gram screen equals the sequential batch loop; replay appends nothing") {
     import spark.implicits._
-    import graft.plans.GramCatalog
+    import graft.plans.{GramCatalog, LandedCatalog}
     import graft.operators.Dedup
     // history carries run H; file 0 introduces run R (novel -> no
     // span); file 1 repeats R (only the append loop can flag it) AND
@@ -729,7 +729,7 @@ class StreamingSpec extends AnyFunSuite {
         .select("doc_id", "span_start", "span_end", "n_grams")
         .as[(Long, Int, Int, Long)].collect().toSet === streamed)
       assert(GramCatalog.stats(spark, cat).count() === statsBefore)
-    } finally GramCatalog.drop(spark, cat)
+    } finally LandedCatalog.drop(spark, cat)
   }
 
   test("streaming perceptual screen equals the sequential survivor loop") {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Similarity
-import graft.plans.VecCatalog
+import graft.plans.{LandedCatalog, VecCatalog}
 
 /** Landed embedding catalog: the screen over bucketed state tables
   * must return exactly what the self-contained in-plan operator
@@ -49,7 +49,7 @@ class VecCatalogSpec extends AnyFunSuite {
       val want = Similarity.embeddingNearDupIncremental(batch, hist).collect().toSeq
       assert(want.nonEmpty, "no catalog matches in the corpus")
       assert(got === want)
-    } finally VecCatalog.drop(spark, cat)
+    } finally LandedCatalog.drop(spark, cat)
   }
 
   test("append makes a batch part of history for the next screen") {
@@ -80,7 +80,7 @@ class VecCatalogSpec extends AnyFunSuite {
         maxIngestId = Some(0L)).collect()
       assert(!bounded.exists(_.getLong(0) == 10260L),
         "maxIngestId=0 still sees the appended partition")
-    } finally VecCatalog.drop(spark, cat)
+    } finally LandedCatalog.drop(spark, cat)
   }
 
   test("candidate join reads the landed bucket table without shuffling it") {
@@ -120,7 +120,7 @@ class VecCatalogSpec extends AnyFunSuite {
       }
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      VecCatalog.drop(spark, cat)
+      LandedCatalog.drop(spark, cat)
     }
   }
 
@@ -172,6 +172,6 @@ class VecCatalogSpec extends AnyFunSuite {
       assert(multi.length === 1 && multi.head.getLong(0) === 0L &&
         multi.head.getLong(2) === 100L,
         s"multi-probe screen missed the 1-bit-away twin: ${multi.toSeq}")
-    } finally VecCatalog.drop(spark, cat)
+    } finally LandedCatalog.drop(spark, cat)
   }
 }
