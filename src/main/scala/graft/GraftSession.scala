@@ -13,13 +13,18 @@ import graft.functions.{CodecExpressions, TextExpressions, VectorExpressions}
   * scale AQE coalesces from an over-provisioned initial count),
   * 128 MB scan partitions, UTC semantics everywhere.
   *
-  * Known cross-PROCESS hazard: catalog partition overwrites
-  * ([[graft.plans.BucketedLayout.overwritePartitions]]) briefly toggle
-  * the session-wide `partitionOverwriteMode` to `dynamic` under a JVM
-  * lock. Concurrent maintenance from two separate driver processes on
-  * the same catalog directory is not serialized by that lock — run
-  * catalog maintenance from one writer process at a time (the same
-  * single-writer discipline any non-transactional table format needs).
+  * The engine never writes this session's conf while a query runs:
+  * work that needs another setting (the connected-components rounds'
+  * fan-out, dynamic partition overwrite, the nanos-parquet retry) runs
+  * on a clone of the session ([[org.apache.spark.sql.graft.SessionClone]]),
+  * so concurrent queries on it always plan under the caller's values.
+  * The one exception is a streaming gate, which sets its shuffle
+  * partition count around `DataStreamWriter.start()` only: the stream
+  * snapshots the session there, and the setting is restored as soon
+  * as `start()` returns. Catalog appends are not serialized across
+  * driver processes — run catalog maintenance on one catalog
+  * directory from one writer process at a time (the single-writer
+  * discipline any non-transactional table format needs).
   */
 object GraftSession {
 
@@ -36,9 +41,8 @@ object GraftSession {
       .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.compression.codec", "zstd")
-      // nanos parquet (events.ts) reads as raw BIGINT everywhere; set
-      // once at build so concurrent readers never race a conf toggle
-      // (Tables.events still self-heals on foreign sessions)
+      // nanos parquet (events.ts) reads as raw BIGINT everywhere
+      // (Tables.events retries on a clone of a foreign session)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
@@ -64,44 +68,12 @@ object GraftSession {
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    import graft.functions.{CodecExpressions => CE, TextExpressions => TE, VectorExpressions => VE}
     import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-
-    def inject(name: String, b: Seq[Expression] => Expression): Unit =
+    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+    (CodecExpressions.builders ++ TextExpressions.builders ++
+        VectorExpressions.builders).foreach { case (name, b) =>
       ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo("graft", name), (es: Seq[Expression]) => b(es)))
-
-    inject("crc16_ccitt", es => CE.Crc16(es.head))
-    inject("ip_cksum", es => CE.IpCksum(es.head))
-    inject("xtea_encrypt", es => CE.XteaEncrypt(es(0), es(1)))
-    inject("xtea_decrypt", es => CE.XteaDecrypt(es(0), es(1)))
-    inject("size_decode", es => CE.SizeDecode(es.head))
-    inject("size_encode", es => CE.SizeEncode(es.head))
-    inject("key_extract", es => CE.KeyExtract(es.head))
-    inject("seed_xor", es => CE.SeedXor(es.head))
-    inject("sliding_xor", es => CE.SlidingXor(es(0), es(1), es(2)))
-    inject("dns_name_decode", es => CE.DnsNameDecode(es(0), es(1)))
-    inject("dns_name_encode", es => CE.DnsNameEncode(es.head))
-    inject("mac_format", es => CE.MacFormat(es.head))
-    inject("tlv_decode", es => CE.TlvDecode(es.head))
-    inject("tlv_encode", es => CE.TlvEncode(es.head))
-    inject("bthp_strip", es => CE.BthpStrip(es.head))
-    inject("bthp_frame", es => CE.BthpFrame(es))
-    inject("aes_frame_encode", es => CE.AesFrameEncode(es(0), es(1)))
-    inject("aes_frame_decode", es => CE.AesFrameDecode(es(0), es(1), es(2)))
-    inject("ppm_decode", es => CE.PpmDecode(es.head))
-    inject("bmp_decode", es => CE.BmpDecode(es.head))
-    inject("wav_decode", es => CE.WavDecode(es.head))
-    inject("y4m_decode", es => CE.Y4mDecode(es.head))
-    inject("simhash64", es => TE.SimHash64(es.head))
-    inject("hamming64", es => TE.Hamming64(es(0), es(1)))
-    inject("fnv1a64", es => TE.Fnv1a64(es.head))
-    inject("rolling_fingerprint", es => TE.RollingFingerprint(es.head))
-    inject("lang_id", es => TE.LangId(es.head))
-    inject("argv_tokenize", es => TE.ArgvTokenize(es.head))
-    inject("expand_env", es => TE.ExpandEnv(es(0), es(1)))
-    inject("dot_f32", es => VE.DotF32(es(0), es(1)))
-    inject("dot_f32_dec", es => VE.DotF32Dec(es(0), es(1)))
+        new ExpressionInfo("graft", name), b))
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SessionClone
 
 /** Table registry over the driver-generated parquet test data
   * (`/root/testdata/sf*`; see TESTDATA.md / FIXTURES.md §1).
@@ -54,25 +55,17 @@ object Tables {
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     // GraftSession sets the legacy flag at build (harmless for µs files —
     // it only affects NANOS). On a foreign session without it, a ns file
-    // fails schema inference; retry with the flag scoped to this read
-    // (inference captures conf eagerly at read.parquet(), so restoring
-    // right after doesn't affect the returned DataFrame). The toggle
-    // mutates shared session conf, so it's serialized per session.
+    // fails schema inference; retry on a clone carrying the flag. The
+    // scan resolved there keeps the clone's reader settings after the
+    // frame is rebound, so the caller's session never sees the flag.
     try adapt(spark.read.parquet(path(dir, "events")))
     catch {
       case e: Exception if !spark.conf.getOption(key).contains("true") =>
-        spark.synchronized {
-          val prev = spark.conf.getOption(key)
-          spark.conf.set(key, "true")
-          try adapt(spark.read.parquet(path(dir, "events")))
-          catch { case e2: Exception =>
-            // surface the retry's own failure instead of discarding it
-            e.addSuppressed(e2); throw e
-          }
-          finally prev match {
-            case Some(v) => spark.conf.set(key, v)
-            case None    => spark.conf.unset(key)
-          }
+        try SessionClone.rebind(SessionClone.withConf(spark, key -> "true")(
+          clone => adapt(clone.read.parquet(path(dir, "events")))), spark)
+        catch { case e2: Exception =>
+          // surface the retry's own failure instead of discarding it
+          e.addSuppressed(e2); throw e
         }
     }
   }

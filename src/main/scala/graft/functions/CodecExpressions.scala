@@ -725,44 +725,47 @@ object CodecExpressions {
   def wav_decode(col: Column): Column = c(WavDecode(e(col)))
   def y4m_decode(col: Column): Column = c(Y4mDecode(e(col)))
 
+  /** SQL name -> builder of every function this pack registers; both
+    * [[register]] and `graft.GraftExtensions` read it.
+    */
+  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("crc16_ccitt", es => Crc16(es.head)),
+    ("ip_cksum", es => IpCksum(es.head)),
+    ("xtea_encrypt", es => XteaEncrypt(es(0), es(1))),
+    ("xtea_decrypt", es => XteaDecrypt(es(0), es(1))),
+    ("size_decode", es => SizeDecode(es.head)),
+    ("size_encode", es => SizeEncode(es.head)),
+    ("key_extract", es => KeyExtract(es.head)),
+    ("seed_xor", es => SeedXor(es.head)),
+    ("sliding_xor", es => SlidingXor(es(0), es(1), es(2))),
+    ("dns_name_decode", es => DnsNameDecode(es(0), es(1))),
+    ("dns_name_encode", es => DnsNameEncode(es.head)),
+    ("mac_format", es => MacFormat(es.head)),
+    ("tlv_decode", es => TlvDecode(es.head)),
+    ("tlv_encode", es => TlvEncode(es.head)),
+    ("bthp_strip", es => BthpStrip(es.head)),
+    ("bthp_frame", es => BthpFrame(es)),
+    ("aes_frame_encode", es => AesFrameEncode(es(0), es(1))),
+    ("aes_frame_decode", es => AesFrameDecode(es(0), es(1), es(2))),
+    ("bz2_compress", es => Bz2Compress(es.head)),
+    ("bz2_decompress", es => Bz2Decompress(es(0), es(1))),
+    ("ppm_decode", es => PpmDecode(es.head)),
+    ("ppm_resize", es => PpmResize(es(0), es(1), es(2))),
+    ("ppm_dhash", es => PpmDhash(es.head)),
+    ("ppm_ahash", es => PpmAhash(es.head)),
+    ("y4m_frame_lumas", es => Y4mFrameLumas(es.head)),
+    ("scene_y4m_payload", es => SceneY4mPayload(es.head)),
+    ("vfp_y4m_payload", es => VfpY4mPayload(es.head)),
+    ("beacon_raw_tlv", es => BeaconRawTlv(es(0), es(1))),
+    ("wav_windows", es => WavWindows(es(0), es(1))),
+    ("bmp_decode", es => BmpDecode(es.head)),
+    ("wav_decode", es => WavDecode(es.head)),
+    ("wav_fingerprint", es => WavFingerprint(es.head)),
+    ("y4m_fingerprint", es => Y4mFingerprint(es.head)),
+    ("y4m_decode", es => Y4mDecode(es.head)))
+
   /** SQL registration so the functions are usable from `spark.sql`. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def one(name: String, b: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, b, "scala_udf")
-    one("crc16_ccitt", es => Crc16(es.head))
-    one("ip_cksum", es => IpCksum(es.head))
-    one("xtea_encrypt", es => XteaEncrypt(es(0), es(1)))
-    one("xtea_decrypt", es => XteaDecrypt(es(0), es(1)))
-    one("size_decode", es => SizeDecode(es.head))
-    one("size_encode", es => SizeEncode(es.head))
-    one("key_extract", es => KeyExtract(es.head))
-    one("seed_xor", es => SeedXor(es.head))
-    one("sliding_xor", es => SlidingXor(es(0), es(1), es(2)))
-    one("dns_name_decode", es => DnsNameDecode(es(0), es(1)))
-    one("dns_name_encode", es => DnsNameEncode(es.head))
-    one("mac_format", es => MacFormat(es.head))
-    one("tlv_decode", es => TlvDecode(es.head))
-    one("tlv_encode", es => TlvEncode(es.head))
-    one("bthp_strip", es => BthpStrip(es.head))
-    one("bthp_frame", es => BthpFrame(es))
-    one("aes_frame_encode", es => AesFrameEncode(es(0), es(1)))
-    one("aes_frame_decode", es => AesFrameDecode(es(0), es(1), es(2)))
-    one("bz2_compress", es => Bz2Compress(es.head))
-    one("bz2_decompress", es => Bz2Decompress(es(0), es(1)))
-    one("ppm_decode", es => PpmDecode(es.head))
-    one("ppm_resize", es => PpmResize(es(0), es(1), es(2)))
-    one("ppm_dhash", es => PpmDhash(es.head))
-    one("ppm_ahash", es => PpmAhash(es.head))
-    one("y4m_frame_lumas", es => Y4mFrameLumas(es.head))
-    one("scene_y4m_payload", es => SceneY4mPayload(es.head))
-    one("vfp_y4m_payload", es => VfpY4mPayload(es.head))
-    one("beacon_raw_tlv", es => BeaconRawTlv(es(0), es(1)))
-    one("wav_windows", es => WavWindows(es(0), es(1)))
-    one("bmp_decode", es => BmpDecode(es.head))
-    one("wav_decode", es => WavDecode(es.head))
-    one("wav_fingerprint", es => WavFingerprint(es.head))
-    one("y4m_fingerprint", es => Y4mFingerprint(es.head))
-    one("y4m_decode", es => Y4mDecode(es.head))
+  def register(spark: SparkSession): Unit = builders.foreach { case (name, b) =>
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "scala_udf")
   }
 }

@@ -1099,9 +1099,9 @@ object CodecImpl {
 
   /** Native synthesis of the scene-cut gate's planted Y4M payload —
     * byte-identical to the Column formula it replaces
-    * ([[graft.operators.Multimodal.scenePayloadColumns]], pinned by
-    * spec): per-frame constant luma = shot base (40 + id%30 before
-    * the cut, 180 + id%40 after) + deterministic jitter
+    * (`PayloadReferences.scenePayloadColumns` in the tests, pinned
+    * by PayloadParitySpec): per-frame constant luma = shot base
+    * (40 + id%30 before the cut, 180 + id%40 after) + deterministic jitter
     * ((id·7 + f·13) % 9 − 4), chroma bytes from the "sc" md5 chain,
     * docs ≡ 0 (mod 4) single-shot, docs ≡ 6 (mod 11) truncated by one
     * byte. Moved into one static call because the 8-frame concat
@@ -1141,8 +1141,8 @@ object CodecImpl {
 
   /** Native synthesis of the video-fingerprint gates' twin-planted
     * Y4M payload — byte-identical to the Column formula it replaces
-    * ([[graft.operators.Multimodal.vfpPayloadColumns]], pinned by
-    * spec): constant-luma frames whose per-frame byte is byte f of
+    * (`PayloadReferences.vfpPayloadColumns` in the tests, pinned by
+    * PayloadParitySpec): constant-luma frames whose per-frame byte is byte f of
     * the BASE doc's "vf" md5 chain (exact twins at id−8, retouched
     * twins at id−16 with frame 0 forced to 0xFF, short clips at
     * 20 frames, docs ≡ 4 (mod 9) truncated by one byte), chroma a
@@ -1183,8 +1183,8 @@ object CodecImpl {
 
   /** Native synthesis of the beacon DAG's planted TLV wire payload
     * from (user_id, event_id) — byte-identical to the Column formula
-    * it replaces ([[graft.plans.BeaconPipeline.beaconRawTlvColumns]],
-    * pinned by PayloadParitySpec over a dense residue grid). The
+    * it replaces (`PayloadReferences.beaconRawTlvColumns` in the tests,
+    * pinned by PayloadParitySpec over dense residue grids). The
     * Column tree built five survey blobs through per-piece
     * hex/lpad/format_string/concat chains (~20 µs/row of UTF8String
     * churn over 100k rows per run); one static call assembles the

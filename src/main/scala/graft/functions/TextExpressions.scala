@@ -132,17 +132,20 @@ object TextExpressions {
   def lang_id(s: Column): Column = c(LangId(e(s)))
   def bpe_encode(s: Column): Column = c(BpeEncode(e(s)))
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def one(name: String, b: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, b, "scala_udf")
-    one("simhash64", es => SimHash64(es.head))
-    one("hamming64", es => Hamming64(es(0), es(1)))
-    one("fnv1a64", es => Fnv1a64(es.head))
-    one("rolling_fingerprint", es => RollingFingerprint(es.head))
-    one("lang_id", es => LangId(es.head))
-    one("argv_tokenize", es => ArgvTokenize(es.head))
-    one("expand_env", es => ExpandEnv(es(0), es(1)))
-    one("bpe_encode", es => BpeEncode(es.head))
+  /** SQL name -> builder of every function this pack registers; both
+    * [[register]] and `graft.GraftExtensions` read it.
+    */
+  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("simhash64", es => SimHash64(es.head)),
+    ("hamming64", es => Hamming64(es(0), es(1))),
+    ("fnv1a64", es => Fnv1a64(es.head)),
+    ("rolling_fingerprint", es => RollingFingerprint(es.head)),
+    ("lang_id", es => LangId(es.head)),
+    ("argv_tokenize", es => ArgvTokenize(es.head)),
+    ("expand_env", es => ExpandEnv(es(0), es(1))),
+    ("bpe_encode", es => BpeEncode(es.head)))
+
+  def register(spark: SparkSession): Unit = builders.foreach { case (name, b) =>
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "scala_udf")
   }
 }

@@ -223,10 +223,14 @@ object VectorExpressions {
   def bq_pack(a: Column): Column = c(BqPack(e(a)))
   def dot_i8(a: Column, b: Column): Column = c(DotI8(e(a), e(b)))
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_f32", es => DotF32(es(0), es(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_f32_dec", es => DotF32Dec(es(0), es(1)), "scala_udf")
+  /** SQL name -> builder of every function this pack registers; both
+    * [[register]] and `graft.GraftExtensions` read it.
+    */
+  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("dot_f32", es => DotF32(es(0), es(1))),
+    ("dot_f32_dec", es => DotF32Dec(es(0), es(1))))
+
+  def register(spark: SparkSession): Unit = builders.foreach { case (name, b) =>
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, b, "scala_udf")
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SessionClone
 import graft.Tables
 import graft.functions.TextExpressions
 
@@ -600,7 +601,7 @@ object Dedup {
       r.getLong(0) == r.getLong(1) && r.getInt(2) == 0
     }
 
-    var cur = e0.localCheckpoint(true)
+    val e0Cut = e0.localCheckpoint(true)
     // Input-derived loop fan-out (the EventStream.statePartitionsFor
     // discipline applied to the batch loop; guide §2.2 fewer-larger
     // partitions): every star round runs 3-4 shuffles over the CURRENT
@@ -611,29 +612,31 @@ object Dedup {
     // O(log n) rounds (AQE's parallelismFirst coalescing deliberately
     // keeps utilization-many tiny partitions; the driver's 8-core
     // sweep ran this gate 4x faster than 32-core on identical code).
-    // At corpus scale the cap keeps the session's configured fan-out —
-    // the override can only shrink, never grow, and is restored even
-    // on a non-converging throw. Edge counts only shrink across star
-    // rounds, so sizing once from e0 is an upper bound for every
-    // round.
+    // At corpus scale the cap keeps the session's configured fan-out.
+    // Edge counts only shrink across star rounds, so sizing once from
+    // e0 is an upper bound for every round. The rounds run on a clone
+    // of the caller's session carrying that count, so a query running
+    // concurrently on the caller's session keeps the caller's own; the
+    // returned frame is lazy and plans under the caller's setting.
     val spark = pairs.sparkSession
     val partsKey = "spark.sql.shuffle.partitions"
-    val wasParts = spark.conf.get(partsKey)
-    spark.conf.set(partsKey, ccLoopPartitions(cur.count(),
-      scala.util.Try(wasParts.toInt).getOrElse(200)).toString)
-    var converged = false
-    var rounds = 0
-    try {
-      converged = isStarForest(cur)
+    val parts = ccLoopPartitions(e0Cut.count(),
+      scala.util.Try(spark.conf.get(partsKey).toInt).getOrElse(200))
+    val stars = SessionClone.withConf(spark, partsKey -> parts.toString) { clone =>
+      var cur = SessionClone.rebind(e0Cut, clone)
+      var rounds = 0
+      var converged = isStarForest(cur)
       while (!converged && rounds < maxRounds) {
         cur = smallStar(largeStar(cur)).localCheckpoint(true)
         rounds += 1
         converged = isStarForest(cur)
       }
-    } finally spark.conf.set(partsKey, wasParts)
-    require(converged,
-      s"connectedComponents did not converge in $maxRounds rounds")
+      require(converged,
+        s"connectedComponents did not converge in $maxRounds rounds")
+      cur
+    }
     // converged state is a set of stars: every edge is (member, root)
+    val cur = SessionClone.rebind(stars, spark)
     cur.select(col("u").as("doc_id"), col("v").as("cluster_id"))
       .union(cur.select(col("v").as("doc_id"), col("v").as("cluster_id")).distinct())
   }

@@ -629,44 +629,6 @@ object Multimodal {
   private[graft] def vfpPayload(did: Column): Column =
     graft.functions.CodecExpressions.vfp_y4m_payload(did)
 
-  /** The original Column formulation of [[vfpPayload]] — kept as the
-    * parity oracle for the native expression (PayloadParitySpec pins
-    * byte equality over the corpus and the planted slices); the
-    * query path uses the native call, whose single static invocation
-    * replaces this tree's regexp template expansion.
-    */
-  private[graft] def vfpPayloadColumns(did: Column): Column = {
-    val exact = did % 7 === 3 && did >= 8
-    val pert = did % 11 === 7 && did >= 16 && !exact
-    val base = when(exact, did - 8).when(pert, did - 16).otherwise(did)
-    val w = (lit(4) + (did % 3) * 2).cast("int")   // 4, 6, 8 — even
-    val h = (lit(2) + (did % 2) * 2).cast("int")   // 2, 4 — even
-    val nf = when(did % 13 === 2, 20)
-      .otherwise(lit(65) + did % 8).cast("int")
-    val cs = (w / 2) * (h / 2) * 2
-    val chain = concat((0 until 5).map(i =>
-      md5(concat(lit(s"vf$i|"), base.cast("string")).cast("binary"))): _*)
-    // per-frame luma bytes as one hex string (2 chars per frame)
-    val lums = when(pert, concat(lit("ff"), substr(chain, lit(3), nf * 2 - 2)))
-      .otherwise(substr(chain, lit(1), nf * 2))
-    // ONE codegen'd regexp pass assembles every frame: each 2-char
-    // luma group expands to FRAME\n (hex 4652414d450a) + the luma
-    // byte repeated across the Y plane + the constant-0x80 chroma
-    // block. The first cut of this payload was a 72-branch concat of
-    // per-frame segments — it blew janino's method limit exactly as
-    // DESIGN §2's codegen lesson warns (7 Failed-to-compile stages,
-    // 24 MiB task binaries); the single-regexp shape keeps the whole
-    // projection compiled and the expression tree ~25 nodes.
-    val frameTpl = concat(lit("4652414d450a"), repeat(lit("$1"), w * h),
-      repeat(lit("80"), cs))
-    val header = concat(lit("YUV4MPEG2 W"), w.cast("string"),
-      lit(" H"), h.cast("string"), lit(" F25:1 Ip A0:0 C420\n")).cast("binary")
-    val full = concat(header,
-      unhex(regexp_replace(lums, lit("(..)"), frameTpl)))
-    when(did % 9 === 4,
-      substr(full, lit(1), octet_length(full) - 1)).otherwise(full)
-  }
-
   /** Per-document video fingerprints over the twin-planted Y4M
     * corpus: the 64-bit delta-sign of the per-frame mean-luma series
     * as a native codegen expression — header grammar, frame walk,
@@ -744,40 +706,6 @@ object Multimodal {
     */
   private[graft] def scenePayload(did: Column): Column =
     graft.functions.CodecExpressions.scene_y4m_payload(did)
-
-  /** The original Column formulation of [[scenePayload]] — kept as
-    * the parity oracle for the native expression (PayloadParitySpec
-    * pins byte equality); the query path uses the native call. The
-    * 8-frame concat tree generated a projection method past the
-    * JIT's huge-method limit (~3.6 ms/doc interpreted).
-    */
-  private[graft] def scenePayloadColumns(did: Column): Column = {
-    val w = (lit(4) + (did % 3) * 2).cast("int")
-    val h = (lit(2) + (did % 2) * 2).cast("int")
-    val nf = (lit(4) + did % 5).cast("int")
-    val cutAt = when(did % 4 === 0, nf).otherwise((lit(2) + did % 3).cast("int"))
-    val cs = (w / 2) * (h / 2) * 2
-    val chain = concat((0 until 8).map(i =>
-      md5(concat(lit(s"sc$i|"), did.cast("string")).cast("binary"))): _*)
-    val header = concat(lit("YUV4MPEG2 W"), w.cast("string"),
-      lit(" H"), h.cast("string"), lit(" F25:1 Ip A0:0 C420\n")).cast("binary")
-    val frameSegs = (0 until 8).map { f =>
-      val byteF = when(lit(f) < cutAt, lit(40) + did % 30)
-        .otherwise(lit(180) + did % 40) + (did * 7 + f * 13) % 9 - 4
-      val hx = lpad(lower(hex(byteF.cast("bigint"))), 2, "0")
-      // repeat to the max raster (8·4 px) then cut to w·h — one hx
-      // evaluation per frame, not one per raster element
-      val yHex = substr(repeat(hx, 32), lit(1), w * h * lit(2))
-      when(lit(f) < nf,
-        concat(lit("FRAME\n").cast("binary"),
-          unhex(yHex),
-          unhex(substr(chain, cs * lit(2) * f + 1, cs * 2))))
-        .otherwise(lit(Array.emptyByteArray))
-    }
-    val full = concat(header +: frameSegs: _*)
-    when(did % 11 === 6,
-      substr(full, lit(1), octet_length(full) - 1)).otherwise(full)
-  }
 
   /** Scene-cut detection over the video modality — the temporal
     * analysis pass of a frame-sampling pipeline: per-frame luma sums

@@ -27,27 +27,16 @@ import graft.functions.{CodecExpressions => CE}
   */
 object BeaconPipeline {
 
-  private def octet(ip: Column, shift: Int): Column =
-    floor(ip.cast("double") / math.pow(256, shift).toLong).cast("bigint") % 256
-
-  private def hexByte(c: Column): Column = lpad(hex(c), 2, "0")
-
-  /** /proc/net-style little-endian hex addr "0100007F:1F90". */
-  private def hexAddr(ip: Column, port: Column): Column =
-    concat(hexByte(octet(ip, 0)), hexByte(octet(ip, 1)),
-      hexByte(octet(ip, 2)), hexByte(octet(ip, 3)),
-      lit(":"), lpad(hex(port), 4, "0"))
-
   /** Deterministic beacon corpus derived from events (one beacon per
     * event; one implant per user). ~10% of beacons get an unknown TLV
     * type; ~10% are version 22 (pre-compression wire version).
     *
     * The TLV payload is assembled by the native `beacon_raw_tlv`
     * expression (one static call per row inside whole-stage codegen);
-    * the original Column formulation is kept as
-    * [[beaconRawTlvColumns]] and PayloadParitySpec pins byte-for-byte
-    * equality between the two over a dense residue grid, so the
-    * corpus bytes — and every decode gate downstream — are unchanged.
+    * the original Column formulation is kept in the tests as
+    * `PayloadReferences.beaconRawTlvColumns`, and PayloadParitySpec
+    * pins byte-for-byte equality between the two, so the corpus bytes
+    * — and every decode gate downstream — are unchanged.
     */
   def syntheticBeacons(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(spark, dir)
@@ -62,64 +51,6 @@ object BeaconPipeline {
       dialect.as("dialect"),
       CE.beacon_raw_tlv(uid, eid).as("raw_tlv"))
   }
-
-  /** The original Column formulation of the beacon TLV payload —
-    * retained as the parity reference for the native
-    * `beacon_raw_tlv` expression (PayloadParitySpec compares the two
-    * byte-for-byte; see [[syntheticBeacons]]).
-    */
-  def beaconRawTlvColumns(uid: Column, eid: Column): Column = {
-    val ip = (eid * 2654435761L) % 4294967296L
-    val gwIp = (uid * 16843009L + 167772161L) % 4294967296L
-    val macHex = lpad(hex(uid * 131071 % 281474976710656L), 12, "0")
-    val mac = lower(concat_ws("-", (0 until 6).map(i => substring(macHex, 1 + 2 * i, 2)): _*))
-    val dialect = when(uid % 3 === 0, "linux").when(uid % 3 === 1, "solaris").otherwise("mikrotik")
-
-    val procBlob = concat(
-      format_string("%d (beacond) S %d %d %d", (eid % 32768).cast("int"),
-        (uid % 1000).cast("int"), (uid % 100).cast("int"), (eid % 100).cast("int")),
-      lit("\n"),
-      format_string("%d (survey) R %d %d %d", ((eid + 1) % 32768).cast("int"),
-        (eid % 32768).cast("int"), (uid % 100).cast("int"), (eid % 100).cast("int")))
-
-    val netstatAn = concat(
-      lit("  0: "), hexAddr(ip, uid % 65536), lit(" "), hexAddr(gwIp, lit(443)),
-      lit(" "), hexByte((eid % 11 + 1).cast("int")), lit(" "),
-      hexByte(eid % 256), lit(":"), hexByte(uid % 256))
-
-    val netstatRn = concat(
-      lit("eth0 "), hexByte(octet(ip, 0)), hexByte(octet(ip, 1)), hexByte(octet(ip, 2)),
-      hexByte(octet(ip, 3)), lit(" "),
-      hexByte(octet(gwIp, 0)), hexByte(octet(gwIp, 1)), hexByte(octet(gwIp, 2)),
-      hexByte(octet(gwIp, 3)),
-      lit(" 0003 0 0 0 00FFFFFF 1500 0 0"))
-
-    val ipconfig = when(dialect === "linux", concat(
-        lit("eth0      Link encap:Ethernet  HWaddr "), upper(translate(mac, "-", ":")),
-        lit("\n          inet addr:"), dottedIp(ip), lit("  Mask:255.255.255.0")))
-      .when(dialect === "solaris", concat(
-        lit("e1000g0: flags=1000843<UP> mtu 1500\n\tinet "), dottedIp(ip),
-        lit(" netmask ffffff00\n\tether "), translate(mac, "-", ":")))
-      .otherwise(concat(
-        lit("0 R name=\"ether1\" mac-address="), upper(translate(mac, "-", ":")),
-        lit(" address="), dottedIp(ip), lit("/24")))
-
-    val knownTlv = array(
-      struct(lit(1).as("type"), mac.cast("binary").as("value")),
-      struct(lit(2).as("type"), (uid * 37 % 864000).cast("string").cast("binary").as("value")),
-      struct(lit(3).as("type"), procBlob.cast("binary").as("value")),
-      struct(lit(4).as("type"), ipconfig.cast("binary").as("value")),
-      struct(lit(5).as("type"), netstatRn.cast("binary").as("value")),
-      struct(lit(6).as("type"), netstatAn.cast("binary").as("value")),
-      struct(lit(7).as("type"), (eid % 86400).cast("string").cast("binary").as("value")))
-    val withUnknown = concat(knownTlv,
-      array(struct(lit(99).as("type"), lit("??").cast("binary").as("value"))))
-
-    CE.tlv_encode(when(eid % 10 === 3, withUnknown).otherwise(knownTlv))
-  }
-
-  private def dottedIp(ip: Column): Column =
-    concat_ws(".", octet(ip, 3), octet(ip, 2), octet(ip, 1), octet(ip, 0))
 
   // ------------------------------------------------- v1 wire format
 

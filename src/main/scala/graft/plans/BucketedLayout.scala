@@ -2,6 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SessionClone
 
 /** Bucketed table layout: the 100 TB landing format for per-implant
   * analytics (DESIGN §5's deferred item, closing `honeycomb`'s
@@ -84,36 +85,33 @@ object BucketedLayout {
     * blind-appending duplicate state rows (which would corrupt
     * downstream counts, not just duplicate output). Columns are
     * aligned by name to the table's schema (insertInto is positional).
+    *
+    * The dynamic mode can only come from session conf (a
+    * DataFrameWriter option does not reach insertInto's plan), so the
+    * write runs on a clone of `spark` set to `dynamic`: the caller's
+    * session stays `static`, and a concurrent write through it can
+    * never pick up the mode and erase other partitions.
     */
-  /** Serializes every [[overwritePartitions]] in the JVM: the dynamic
-    * mode can only be set on the session conf (a DataFrameWriter
-    * option does not reach insertInto's plan — verified: appends
-    * collapse to one partition — and session cloning is private[sql]),
-    * and two concurrent appends racing a set/restore toggle could
-    * leave one mid-write when the other restores `static`, turning a
-    * dynamic overwrite into a full-table overwrite that erases every
-    * other ingest partition. All partition-overwrite writes must go
-    * through this method; the toggle-restore window is the lock.
-    */
-  private val overwriteLock = new Object
-
   def overwritePartitions(spark: SparkSession, df: DataFrame,
-      table: String): Unit = overwriteLock.synchronized {
-    val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      table: String): Unit = {
     // same clustering as write(): land each appended partition at one
     // file per bucket instead of one per (input task, bucket) — the
     // per-ingest-batch appends are exactly where the small files pile
     // up (every batch otherwise adds task-count x nBuckets files the
     // next screen must open)
-    val bucketSpec = spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser
-        .parseTableIdentifier(table)).bucketSpec
+    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
+    val bucketSpec = spark.sessionState.catalog.getTableMetadata(ident).bucketSpec
     val clustered = bucketSpec.fold(df)(bs =>
       df.repartition(bs.numBuckets, bs.bucketColumnNames.map(col): _*))
-    try clustered.select(spark.table(table).columns.map(col): _*)
-      .write.mode("overwrite").insertInto(table)
-    finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+      .select(spark.table(table).columns.map(col): _*)
+    SessionClone.withConf(spark,
+        "spark.sql.sources.partitionOverwriteMode" -> "dynamic") { clone =>
+      SessionClone.rebind(clustered, clone).write.mode("overwrite").insertInto(table)
+    }
+    // the write refreshed the clone's relation cache only; a cached
+    // relation here would keep listing the overwritten partition's
+    // old files
+    spark.sessionState.catalog.refreshTable(ident)
   }
 
   /** Per-key aggregation over a bucketed table: count + byte total per

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** Streaming operators mirroring the reference's stateful semantics
   * (SURVEY §2.9): incremental file ingest with checkpoints (the
@@ -148,15 +148,17 @@ object EventStream {
   /** Drain a streaming DataFrame into an in-memory table and block
     * until every available file is processed. Returns the sink name.
     */
-  def runToMemory(df: DataFrame, name: String, outputMode: String = "append"): Unit = {
-    val q = df.writeStream
+  def runToMemory(df: DataFrame, name: String, outputMode: String = "append"): Unit =
+    startToMemory(df, name, outputMode).awaitTermination()
+
+  private def startToMemory(df: DataFrame, name: String,
+      outputMode: String): StreamingQuery =
+    df.writeStream
       .format("memory")
       .queryName(name)
       .outputMode(outputMode)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-  }
 
   /** One memory-sink table per replay gate, dropped and rebuilt per
     * invocation: a unique name per call would leak the full aggregated
@@ -164,10 +166,12 @@ object EventStream {
     * each gate many times; memory-sink temp views outlive
     * clearCache/releaseAll).
     */
-  private def replayToTable(spark: SparkSession, agg: DataFrame,
+  private def replayToTable(spark: SparkSession, dir: String, agg: DataFrame,
       name: String): DataFrame = {
     spark.catalog.dropTempView(name)
-    runToMemory(agg, name, outputMode = "complete")
+    withStateParts(spark, replaySrcDir(spark, dir)._1) {
+      startToMemory(agg, name, "complete")
+    }.awaitTermination()
     spark.table(name)
   }
 
@@ -203,39 +207,46 @@ object EventStream {
       math.ceil(bytes.toDouble / math.max(minPart, 1L)).toInt))
   }
 
-  /** Run `f` (which starts and drains a streaming query over the
-    * landed source at `srcDir`) under the input-derived shuffle
-    * partition count, restoring the session setting afterwards (never
-    * leak a gate-local override into the caller's session — the
-    * setCheckpointDir lesson). Two consumers share this:
+  /** Start a streaming query over the landed source at `srcDir` with
+    * the input-derived shuffle partition count. Structured Streaming
+    * snapshots the session when `start()` builds the query (the
+    * stream's own session clone and its offset-log conf), so the state
+    * operators and every foreachBatch `batch.sparkSession` keep the
+    * count, while the caller's setting is restored as soon as
+    * `start()` returns.
+    * The stream itself must start on the caller's session: one started
+    * on a clone registers with the clone's StreamingQueryManager, out
+    * of reach of the caller's `spark.streams` listeners. Two consumers
+    * share this:
     *
     *  - STATEFUL replay gates: the state-store fan-out is pinned at
     *    query start from spark.sql.shuffle.partitions and AQE cannot
     *    run inside a streaming query, so an unconditioned session
     *    constant is wrong at one of the two scales;
-    *  - foreachBatch SCREEN gates (round 22): the per-batch screen
-    *    jobs plan while the stream drains, with AQE disabled on the
-    *    streaming plan — every batch-sized shuffle (gram distinct/df
-    *    screen, banded join, verdict rollup, catalog append) fanned
-    *    out to the session's core-count setting over KB-sized batches
-    *    (measured: the span screen spent 3-5 s per 125-doc batch,
-    *    dominated by 32-way task launch across ~8 tiny shuffles).
+    *  - foreachBatch SCREEN gates: the per-batch screen jobs plan
+    *    while the stream drains, with AQE disabled on the streaming
+    *    plan — every batch-sized shuffle (gram distinct/df screen,
+    *    banded join, verdict rollup, catalog append) fanned out to the
+    *    session's core-count setting over KB-sized batches (measured:
+    *    the span screen spent 3-5 s per 125-doc batch, dominated by
+    *    32-way task launch across ~8 tiny shuffles).
     *
     * The count can only SHRINK from the session setting (capped), so
     * cluster-scale behavior is unchanged; it derives from landed
     * source bytes, not core count, so it is not a local[32] tune.
     */
-  private[streaming] def withStateParts[A](spark: SparkSession, srcDir: String)(f: => A): A = {
+  private[streaming] def withStateParts(spark: SparkSession, srcDir: String)(
+      start: => StreamingQuery): StreamingQuery = {
     val key = "spark.sql.shuffle.partitions"
     val was = spark.conf.get(key)
     spark.conf.set(key, statePartitionsFor(spark, srcDir).toString)
-    try f finally spark.conf.set(key, was)
+    try start finally spark.conf.set(key, was)
   }
 
   /** Drain `srcDir`'s files through `batchFn` once per micro-batch
     * (checkpointed file source, foreachBatch, AvailableNow) and block
     * until every available file is processed — the one drain of the
-    * foreachBatch screens. Runs under [[withStateParts]]: AQE is off
+    * foreachBatch screens. Starts under [[withStateParts]]: AQE is off
     * on the streaming plan, so the per-batch screen jobs take their
     * fan-out from the source's size.
     */
@@ -249,14 +260,13 @@ object EventStream {
         .option("checkpointLocation", checkpointDir)
         .trigger(Trigger.AvailableNow())
         .start()
-        .awaitTermination()
-    }
+    }.awaitTermination()
 
   /** Land the replay source once per (scale dir, content fingerprint)
     * and return its path + schema — shared by the streaming replay
     * gates, which all micro-batch over the same 8 time-range slices.
     */
-  private def replaySrcDir(spark: SparkSession, dir: String):
+  private[graft] def replaySrcDir(spark: SparkSession, dir: String):
       (String, org.apache.spark.sql.types.StructType) = {
     val src = graft.Tables.events(spark, dir)
       .select(col("user_id"), col("ts"), col("event_type"), col("value"))
@@ -301,9 +311,7 @@ object EventStream {
         unix_micros(col("session_window.start")).as("s_start"),
         unix_micros(col("session_window.end")).as("s_end"),
         col("n_events"))
-    withStateParts(spark, replaySrcDir(spark, dir)._1) {
-      replayToTable(spark, agg, "sess_replay_gate")
-    }.orderBy("user_id", "s_start")
+    replayToTable(spark, dir, agg, "sess_replay_gate").orderBy("user_id", "s_start")
   }
 
   /** Windowed-aggregation twin of [[sessionReplayGate]]
@@ -321,9 +329,7 @@ object EventStream {
       .select(unix_micros(col("window.start")).as("w_start"),
         col("event_type"), col("n"),
         round(col("total_raw"), 2).cast("double").as("total"))
-    withStateParts(spark, replaySrcDir(spark, dir)._1) {
-      replayToTable(spark, agg, "win_replay_gate")
-    }.orderBy("w_start", "event_type")
+    replayToTable(spark, dir, agg, "win_replay_gate").orderBy("w_start", "event_type")
   }
 
   /** Checkpointed-ingest parity gate (ig_stream_ingest): run
@@ -340,16 +346,8 @@ object EventStream {
     val (srcDir, schema) = replaySrcDir(spark, dir)
     // sink/checkpoint keyed by (scale dir, process): a concurrent
     // driver process (bench sweep vs verify run, or another scale
-    // factor) must never delete a live checkpoint mid-stream. Own key
-    // is recreated per invocation; other processes' leftovers are
-    // GC'd only once stale (2h past their last write).
-    val dirPart = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_ingest_gate_${dirPart}_" +
-      ProcessHandle.current().pid()
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sessionState.newHadoopConf())
-    graft.Shared.gcStaleSiblings(spark, sys.props("java.io.tmpdir"),
-      "graft_ingest_gate_", new org.apache.hadoop.fs.Path(base).getName)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    // factor) must never delete a live checkpoint mid-stream
+    val base = ReplayGate.gateBase(spark, dir, "graft_ingest_gate")
     val sink = s"$base/sink"
     val ck = s"$base/ck"
     incrementalIngest(spark, srcDir, schema, sink, ck)

@@ -98,22 +98,35 @@ class FixtureSpec extends AnyFunSuite {
     // layout 3: raw INT64 nanoseconds (what TIMESTAMP(NANOS) parquet
     // becomes under spark.sql.legacy.parquet.nanosAsLong — the exact
     // column shape the legacy branch sees, sub-µs digits included).
-    // NOTE: this writes plain INT64, which the reader accepts on the
-    // FIRST attempt (LongType adapt branch); the nanosAsLong
-    // retry-on-foreign-session path itself is only covered indirectly,
-    // because Spark cannot write a true TIMESTAMP(NANOS) file.
+    // This writes plain INT64, which the reader accepts on the FIRST
+    // attempt (LongType adapt branch).
     micros.zipWithIndex.map { case (us, i) => (i.toLong, us * 1000L + 789L) }
       .toDF("event_id", "ts")
       .write.mode("overwrite").parquet(s"${dirFor("ns")}/events.parquet")
 
-    val read = Seq("tsv", "ntz", "ns").map { n =>
-      val df = Tables.events(spark, dirFor(n))
-      assert(df.schema("ts").dataType === TimestampType, s"layout $n type")
-      n -> df.select($"event_id", unix_micros($"ts").as("us"))
+    def readUs(s: SparkSession, d: String): Seq[(Long, Long)] = {
+      val df = Tables.events(s, d)
+      assert(df.schema("ts").dataType === TimestampType, s"layout $d type")
+      df.select($"event_id", unix_micros($"ts").as("us"))
         .as[(Long, Long)].collect().sortBy(_._1).toSeq
-    }.toMap
+    }
+    val read = Seq("tsv", "ntz", "ns").map(n => n -> readUs(spark, dirFor(n))).toMap
     assert(read("tsv") === micros.zipWithIndex.map { case (us, i) => (i.toLong, us) })
     assert(read("ntz") === read("tsv"), "NTZ cast must preserve the stored µs value in a UTC session")
     assert(read("ns") === read("tsv"), "ns INT64 must truncate to the same µs values")
+
+    // layout 4: a true TIMESTAMP(NANOS) file (pyarrow-written fixture,
+    // see FIXTURES.md §5; the same µs values plus sub-µs digits) read
+    // through a foreign session without the legacy flag: Spark rejects
+    // the file there, so Tables.events must take its retry path, and
+    // that retry must leave the session's own flag as it was.
+    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+    val foreign = spark.newSession()
+    foreign.conf.set(nanosKey, "false")
+    val fixture = getClass.getResource("/nanos_events").getPath
+    intercept[Exception](foreign.read.parquet(Tables.path(fixture, "events")))
+    assert(readUs(foreign, fixture) === read("tsv"),
+      "TIMESTAMP(NANOS) must truncate to the same µs values")
+    assert(foreign.conf.get(nanosKey) === "false", "the retry leaked the legacy flag")
   }
 }

@@ -32,6 +32,14 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions injects functions at session build time") {
+    // every name registerAll adds to a fresh session must also resolve
+    // on a session built with the extension
+    val fresh = spark.newSession()
+    val builtin = fresh.sessionState.functionRegistry.listFunction().toSet
+    GraftSession.registerAll(fresh)
+    val registered = (fresh.sessionState.functionRegistry.listFunction().toSet -- builtin)
+      .map(_.funcName)
+    assert(registered.size >= 44, registered.toSeq.sorted.mkString(","))
     val active = SparkSession.getActiveSession
     try {
       SparkSession.clearActiveSession()
@@ -44,6 +52,13 @@ class GraftSessionSpec extends AnyFunSuite {
       val crc = s2.sql("SELECT crc16_ccitt(CAST('123456789' AS BINARY)) AS c")
         .head().getInt(0)
       assert(crc === 0x29B1)
+      val missing = registered.filterNot(n =>
+        s2.sessionState.functionRegistry.functionExists(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+      assert(missing.isEmpty, s"not injected: ${missing.toSeq.sorted.mkString(", ")}")
+      val beacon = s2.sql("SELECT CAST(bz2_decompress(bz2_compress(" +
+        "CAST('beacon payload' AS BINARY)), 1024) AS STRING) AS s").head().getString(0)
+      assert(beacon === "beacon payload")
     } finally {
       active.foreach { s =>
         SparkSession.setActiveSession(s); SparkSession.setDefaultSession(s)

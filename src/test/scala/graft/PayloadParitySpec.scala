@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the JIT's huge-method limit — measured ~3.6 ms/doc interpreted).
   * The optimization claim is BYTE IDENTITY, so this spec compares the
   * native expression against the original Column formulation (kept in
-  * Multimodal as *Columns) over a dense id range that covers every
+  * PayloadReferences as *Columns) over a dense id range that covers every
   * planted slice: exact twins (vfp: ≡3 mod 7, ≥8), retouched twins
   * (≡7 mod 11, ≥16), short clips (≡2 mod 13), truncation slices
   * (scene: ≡6 mod 11; vfp: ≡4 mod 9), single-shot docs (scene: ≡0
@@ -29,7 +29,7 @@ class PayloadParitySpec extends AnyFunSuite {
     val diff = spark.range(0, 2000)
       .select(col("id").as("doc_id"),
         graft.operators.Multimodal.scenePayload(col("doc_id")).as("nat"),
-        graft.operators.Multimodal.scenePayloadColumns(col("doc_id")).as("ref"))
+        PayloadReferences.scenePayloadColumns(col("doc_id")).as("ref"))
       .filter(not(col("nat") === col("ref")))
       .count()
     assert(diff === 0, "native scene payload diverges from the Column formula")
@@ -39,7 +39,7 @@ class PayloadParitySpec extends AnyFunSuite {
     val diff = spark.range(0, 2000)
       .select(col("id").as("doc_id"),
         graft.operators.Multimodal.vfpPayload(col("doc_id")).as("nat"),
-        graft.operators.Multimodal.vfpPayloadColumns(col("doc_id")).as("ref"))
+        PayloadReferences.vfpPayloadColumns(col("doc_id")).as("ref"))
       .filter(not(col("nat") === col("ref")))
       .count()
     assert(diff === 0, "native vfp payload diverges from the Column formula")
@@ -47,6 +47,12 @@ class PayloadParitySpec extends AnyFunSuite {
 
   test("beacon_raw_tlv == the Column formulation, byte for byte") {
     import graft.functions.{CodecExpressions => CE}
+    def diff(pairs: org.apache.spark.sql.DataFrame): Long = pairs
+      .select(
+        CE.beacon_raw_tlv(col("uid"), col("eid")).as("nat"),
+        PayloadReferences.beaconRawTlvColumns(col("uid"), col("eid")).as("ref"))
+      .filter(not(col("nat") === col("ref")))
+      .count()
     // two (uid, eid) mappings: a dense small grid hitting every
     // branch residue (dialect uid%3, unknown-TLV eid%10==3, version
     // eid%10, state byte eid%11, pid eid%32768, port uid%65536, hex
@@ -56,13 +62,24 @@ class PayloadParitySpec extends AnyFunSuite {
       .select((col("id") % 101).as("uid"), col("id").as("eid"))
     val large = spark.range(0, 2000)
       .select((col("id") * 7919 + 3).as("uid"), (col("id") * 104729 + 11).as("eid"))
-    val diff = small.union(large)
-      .select(
-        CE.beacon_raw_tlv(col("uid"), col("eid")).as("nat"),
-        graft.plans.BeaconPipeline.beaconRawTlvColumns(col("uid"), col("eid")).as("ref"))
-      .filter(not(col("nat") === col("ref")))
-      .count()
-    assert(diff === 0, "native beacon TLV diverges from the Column formula")
+    assert(diff(small.union(large)) === 0,
+      "native beacon TLV diverges from the Column formula")
+    // a third mapping past the corpus domain: uids from 2^31 to 2^62,
+    // so uid*131071 crosses 2^48 (the mac's mod-2^48 step) and, from
+    // 2^46 on, wraps Long negative (16-digit hex, lpad left-truncation,
+    // negative modulus); eids up to ~2^53 wrap eid*2654435761 the same
+    // way. ANSI arithmetic raises on that overflow, so the grid runs on
+    // a session with the wrapping semantics the native code mirrors.
+    val legacy = spark.newSession()
+    legacy.conf.set("spark.sql.ansi.enabled", "false")
+    val huge = legacy.range(0, 2000)
+      .select((pow(lit(2.0), lit(31) + col("id") % 32).cast("long") +
+          col("id") * 7919).as("uid"),
+        (col("id") * 4611686018427L + 11).as("eid"))
+    assert(huge.filter(col("uid") * 131071 < 0).count() > 0,
+      "the grid must reach the Long wraparound")
+    assert(diff(huge) === 0,
+      "native beacon TLV diverges from the Column formula past 2^48")
   }
 
   test("native payloads decode through the same Y4M walk (spot lengths)") {
