@@ -482,10 +482,10 @@ object CodecExpressions {
     override def prettyName: String = "vfp_y4m_payload"
   }
 
-  /** `beacon_raw_tlv(BIGINT, BIGINT) → BINARY` — native synthesis of
-    * the beacon DAG's planted TLV wire payload from (user_id,
-    * event_id) (byte-identical to the Column formula it replaced; see
-    * [[CodecImpl.beaconRawTlv]]).
+  /** `beacon_raw_tlv(BIGINT, BIGINT) → BINARY` — the beacon DAG's
+    * planted TLV wire payload for (user_id, event_id), written by one
+    * byte-level writer per row (byte-identical to the reference Column
+    * formula on the whole Long domain; see [[CodecImpl.beaconRawTlv]]).
     */
   case class BeaconRawTlv(left: Expression, right: Expression)
       extends BinaryExpression with ImplicitCastInputTypes {

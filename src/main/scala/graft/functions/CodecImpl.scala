@@ -1181,84 +1181,193 @@ object CodecImpl {
     if (docId % 9 == 4) java.util.Arrays.copyOf(out, total - 1) else out
   }
 
-  /** Native synthesis of the beacon DAG's planted TLV wire payload
-    * from (user_id, event_id) — byte-identical to the Column formula
-    * it replaces (`PayloadReferences.beaconRawTlvColumns` in the tests,
-    * pinned by PayloadParitySpec over dense residue grids). The
-    * Column tree built five survey blobs through per-piece
-    * hex/lpad/format_string/concat chains (~20 µs/row of UTF8String
-    * churn over 100k rows per run); one static call assembles the
-    * identical bytes directly. Every arithmetic step mirrors the
-    * Column semantics literally (same Long wraparound, the same
-    * double-division octet extraction, hex() minimal-digit uppercase,
-    * lpad's left-truncation) so equality holds on any input, not just
-    * the planted domain.
+  /** The beacon DAG's planted TLV wire payload for (user_id, event_id):
+    * seven ASCII survey fields (mac, uptime, process list, ipconfig
+    * blob in one of three dialects, route table, socket table, next
+    * beacon) plus an unknown type-99 field on `eid % 10 == 3`, in
+    * `tlvEncode`'s framing. One writer fills a byte array sized
+    * exactly up front: each field's 4-byte header is reserved, its
+    * value written digit by digit, and the length backfilled. Every
+    * numeric step is the reference formula's
+    * (`PayloadReferences.beaconRawTlvColumns` in the tests): Java `%`
+    * signs and Long wraparound, octets through the same double
+    * division, `hex()`'s minimal uppercase digits (16 for a negative),
+    * `lpad`'s left truncation and `%d` of the Int narrowing, so the
+    * bytes equal the reference on the whole Long domain
+    * (PayloadParitySpec: residue grids plus a random property).
     */
   def beaconRawTlv(uid: Long, eid: Long): Array[Byte] = {
-    import java.nio.charset.StandardCharsets.UTF_8
     val ip = (eid * 2654435761L) % 4294967296L
     val gwIp = (uid * 16843009L + 167772161L) % 4294967296L
-    // octet(): floor(ip/256^s) via double division, exactly like the
-    // Column's cast("double")/pow chain (exact for |v| < 2^52)
-    def octet(v: Long, shift: Int): Long =
-      math.floor(v.toDouble / math.pow(256, shift).toLong).toLong % 256
-    def hexMin(v: Long): String = java.lang.Long.toHexString(v).toUpperCase
-    def lpad(s: String, n: Int): String =
-      if (s.length >= n) s.substring(0, n)
-      else ("0" * (n - s.length)) + s
-    def hexByte(v: Long): String = lpad(hexMin(v), 2)
-    def hexAddr(v: Long, port: Long): String =
-      hexByte(octet(v, 0)) + hexByte(octet(v, 1)) + hexByte(octet(v, 2)) +
-        hexByte(octet(v, 3)) + ":" + lpad(hexMin(port), 4)
-    def dottedIp(v: Long): String =
-      s"${octet(v, 3)}.${octet(v, 2)}.${octet(v, 1)}.${octet(v, 0)}"
-
-    val macHex = lpad(hexMin(uid * 131071 % 281474976710656L), 12)
-    val mac = (0 until 6).map(i => macHex.substring(2 * i, 2 * i + 2))
-      .mkString("-").toLowerCase
-    val macColons = mac.replace('-', ':')
-
-    val procBlob =
-      String.format(java.util.Locale.US, "%d (beacond) S %d %d %d",
-        Int.box((eid % 32768).toInt), Int.box((uid % 1000).toInt),
-        Int.box((uid % 100).toInt), Int.box((eid % 100).toInt)) + "\n" +
-      String.format(java.util.Locale.US, "%d (survey) R %d %d %d",
-        Int.box(((eid + 1) % 32768).toInt), Int.box((eid % 32768).toInt),
-        Int.box((uid % 100).toInt), Int.box((eid % 100).toInt))
-
-    val netstatAn = "  0: " + hexAddr(ip, uid % 65536) + " " +
-      hexAddr(gwIp, 443L) + " " + hexByte((eid % 11 + 1).toInt.toLong) + " " +
-      hexByte(eid % 256) + ":" + hexByte(uid % 256)
-
-    val netstatRn = "eth0 " +
-      hexByte(octet(ip, 0)) + hexByte(octet(ip, 1)) +
-      hexByte(octet(ip, 2)) + hexByte(octet(ip, 3)) + " " +
-      hexByte(octet(gwIp, 0)) + hexByte(octet(gwIp, 1)) +
-      hexByte(octet(gwIp, 2)) + hexByte(octet(gwIp, 3)) +
-      " 0003 0 0 0 00FFFFFF 1500 0 0"
-
+    val ipO = Array(beaconOctet(ip, 0), beaconOctet(ip, 1),
+      beaconOctet(ip, 2), beaconOctet(ip, 3))
+    val gwO = Array(beaconOctet(gwIp, 0), beaconOctet(gwIp, 1),
+      beaconOctet(gwIp, 2), beaconOctet(gwIp, 3))
+    val mac = uid * 131071 % 281474976710656L
+    val uptime = uid * 37 % 864000
+    val pid = (eid % 32768).toInt
+    val uid1000 = (uid % 1000).toInt
+    val uid100 = (uid % 100).toInt
+    val eid100 = (eid % 100).toInt
+    val pid1 = ((eid + 1) % 32768).toInt
+    val next = eid % 86400
     val dialect = uid % 3
-    val ipconfig =
-      if (dialect == 0)
-        "eth0      Link encap:Ethernet  HWaddr " + macColons.toUpperCase +
-          "\n          inet addr:" + dottedIp(ip) + "  Mask:255.255.255.0"
-      else if (dialect == 1)
-        "e1000g0: flags=1000843<UP> mtu 1500\n\tinet " + dottedIp(ip) +
-          " netmask ffffff00\n\tether " + macColons
-      else
-        "0 R name=\"ether1\" mac-address=" + macColons.toUpperCase +
-          " address=" + dottedIp(ip) + "/24"
+    val unknown = eid % 10 == 3
 
-    val known = Seq(
-      1 -> mac.getBytes(UTF_8),
-      2 -> String.valueOf(uid * 37 % 864000).getBytes(UTF_8),
-      3 -> procBlob.getBytes(UTF_8),
-      4 -> ipconfig.getBytes(UTF_8),
-      5 -> netstatRn.getBytes(UTF_8),
-      6 -> netstatAn.getBytes(UTF_8),
-      7 -> String.valueOf(eid % 86400).getBytes(UTF_8))
-    val fields =
-      if (eid % 10 == 3) known :+ (99 -> "??".getBytes(UTF_8)) else known
-    tlvEncode(fields)
+    val dotted = 3 + decLen(ipO(0)) + decLen(ipO(1)) + decLen(ipO(2)) + decLen(ipO(3))
+    val procLen = BProcA.length + BProcB.length + 5 + decLen(pid) + decLen(uid1000) +
+      2 * (decLen(uid100) + decLen(eid100)) + decLen(pid1) + decLen(pid)
+    val ipconfigLen = 17 + dotted + (
+      if (dialect == 0) BLinuxA.length + BLinuxB.length + BLinuxC.length
+      else if (dialect == 1) BSolarisA.length + BSolarisB.length
+      else BMikrotikA.length + BMikrotikB.length + BMikrotikC.length)
+    val values = 17 + decLen(uptime) + procLen + ipconfigLen +
+      BRouteHead.length + 17 + BRouteTail.length + // two 8-digit addresses
+      BAnHead.length + 36 + // two 13-char addr:port, three hex bytes
+      decLen(next) + (if (unknown) 2 else 0)
+    val w = new AsciiTlvWriter(values + 4 * (if (unknown) 8 else 7) + 4)
+
+    def hexByte(v: Long): Unit = w.hex(v, 2, HexUpper)
+    def hexAddr(o: Array[Long], port: Long): Unit = {
+      hexByte(o(0)); hexByte(o(1)); hexByte(o(2)); hexByte(o(3))
+      w.put(':'); w.hex(port, 4, HexUpper)
+    }
+    def dottedIp(): Unit = {
+      w.dec(ipO(3)); w.put('.'); w.dec(ipO(2)); w.put('.')
+      w.dec(ipO(1)); w.put('.'); w.dec(ipO(0))
+    }
+
+    w.open(1); w.mac(mac, '-', HexLower); w.close()
+    w.open(2); w.dec(uptime); w.close()
+    w.open(3)
+    w.dec(pid); w.str(BProcA); w.dec(uid1000); w.put(' '); w.dec(uid100)
+    w.put(' '); w.dec(eid100); w.put('\n')
+    w.dec(pid1); w.str(BProcB); w.dec(pid); w.put(' '); w.dec(uid100)
+    w.put(' '); w.dec(eid100)
+    w.close()
+    w.open(4)
+    if (dialect == 0) {
+      w.str(BLinuxA); w.mac(mac, ':', HexUpper); w.str(BLinuxB); dottedIp(); w.str(BLinuxC)
+    } else if (dialect == 1) {
+      w.str(BSolarisA); dottedIp(); w.str(BSolarisB); w.mac(mac, ':', HexLower)
+    } else {
+      w.str(BMikrotikA); w.mac(mac, ':', HexUpper); w.str(BMikrotikB); dottedIp()
+      w.str(BMikrotikC)
+    }
+    w.close()
+    w.open(5)
+    w.str(BRouteHead)
+    hexByte(ipO(0)); hexByte(ipO(1)); hexByte(ipO(2)); hexByte(ipO(3)); w.put(' ')
+    hexByte(gwO(0)); hexByte(gwO(1)); hexByte(gwO(2)); hexByte(gwO(3))
+    w.str(BRouteTail)
+    w.close()
+    w.open(6)
+    w.str(BAnHead); hexAddr(ipO, uid % 65536); w.put(' '); hexAddr(gwO, 443L)
+    w.put(' '); hexByte((eid % 11 + 1).toInt.toLong); w.put(' ')
+    hexByte(eid % 256); w.put(':'); hexByte(uid % 256)
+    w.close()
+    w.open(7); w.dec(next); w.close()
+    if (unknown) { w.open(99); w.put('?'); w.put('?'); w.close() }
+    w.buf
+  }
+
+  private val BProcA = ascii(" (beacond) S ")
+  private val BProcB = ascii(" (survey) R ")
+  private val BLinuxA = ascii("eth0      Link encap:Ethernet  HWaddr ")
+  private val BLinuxB = ascii("\n          inet addr:")
+  private val BLinuxC = ascii("  Mask:255.255.255.0")
+  private val BSolarisA = ascii("e1000g0: flags=1000843<UP> mtu 1500\n\tinet ")
+  private val BSolarisB = ascii(" netmask ffffff00\n\tether ")
+  private val BMikrotikA = ascii("0 R name=\"ether1\" mac-address=")
+  private val BMikrotikB = ascii(" address=")
+  private val BMikrotikC = ascii("/24")
+  private val BRouteHead = ascii("eth0 ")
+  private val BRouteTail = ascii(" 0003 0 0 0 00FFFFFF 1500 0 0")
+  private val BAnHead = ascii("  0: ")
+  private val HexUpper = ascii("0123456789ABCDEF")
+  private val HexLower = ascii("0123456789abcdef")
+  private def ascii(s: String): Array[Byte] = s.getBytes(StandardCharsets.US_ASCII)
+
+  /** `floor(v / 256^shift) % 256` through a double division, as the
+    * reference's `cast("double")`/`pow` chain computes it. */
+  private def beaconOctet(v: Long, shift: Int): Long =
+    math.floor(v.toDouble / OctetDivisors(shift)).toLong % 256
+  private val OctetDivisors = Array.tabulate(4)(s => math.pow(256, s).toLong)
+
+  /** Characters of `v` in decimal, sign included. */
+  private def decLen(v: Long): Int = {
+    val x = if (v < 0) v else -v
+    var n = 1
+    var p = -10L
+    while (n < 19 && x <= p) { n += 1; p *= 10 }
+    if (v < 0) n + 1 else n
+  }
+
+  /** ASCII writer over one byte array of the payload's exact size; the
+    * four zero bytes of the TLV terminator are the array's tail. */
+  private final class AsciiTlvWriter(size: Int) {
+    val buf = new Array[Byte](size)
+    private var pos = 0
+    private var valueAt = 0
+
+    /** Writes the type and reserves the length of a new field. */
+    def open(t: Int): Unit = {
+      buf(pos) = (t >>> 8).toByte; buf(pos + 1) = t.toByte
+      pos += 4; valueAt = pos
+    }
+
+    /** Backfills the open field's length. */
+    def close(): Unit = {
+      val n = pos - valueAt
+      buf(valueAt - 2) = (n >>> 8).toByte; buf(valueAt - 1) = n.toByte
+    }
+
+    def put(c: Char): Unit = { buf(pos) = c.toByte; pos += 1 }
+
+    def str(s: Array[Byte]): Unit = {
+      System.arraycopy(s, 0, buf, pos, s.length)
+      pos += s.length
+    }
+
+    /** `String.valueOf(v)`; digits come off a non-positive copy so
+      * Long.MinValue needs no special case. */
+    def dec(v: Long): Unit = {
+      val n = decLen(v)
+      var x = v
+      if (x < 0) buf(pos) = '-'.toByte else x = -x
+      var i = pos + n
+      while ({ i -= 1; buf(i) = ('0' - x % 10).toByte; x /= 10; x != 0 }) ()
+      pos += n
+    }
+
+    /** `lpad(hex(v), n, "0")`: the minimal hex digits of `v` (16 for a
+      * negative), zero-padded on the left to `n`, or cut to their
+      * leftmost `n` when longer. */
+    def hex(v: Long, n: Int, digits: Array[Byte]): Unit = {
+      val nd = math.max(1, (67 - java.lang.Long.numberOfLeadingZeros(v)) / 4)
+      val pad = math.max(0, n - nd)
+      var i = 0
+      while (i < n) {
+        buf(pos + i) =
+          if (i < pad) '0'.toByte
+          else digits(((v >>> (4 * (nd - 1 - (i - pad)))) & 0xF).toInt)
+        i += 1
+      }
+      pos += n
+    }
+
+    /** The 12-digit `lpad(hex(v), 12, "0")` as six pairs joined by
+      * `sep`. */
+    def mac(v: Long, sep: Char, digits: Array[Byte]): Unit = {
+      val at = pos
+      hex(v, 12, digits)
+      var i = 5
+      while (i > 0) {
+        buf(at + 3 * i + 1) = buf(at + 2 * i + 1); buf(at + 3 * i) = buf(at + 2 * i)
+        buf(at + 3 * i - 1) = sep.toByte
+        i -= 1
+      }
+      pos = at + 17
+    }
   }
 }

@@ -497,6 +497,16 @@ object Dedup {
       hSig.select("doc", "n"), threshold)
   }
 
+  /** Shuffle fan-out for one CC star round, from the canonical edge
+    * count: one partition per ~2M (u, v) long-pair rows (≈ 32 MB of
+    * shuffle per task — guide §2.2's 100 MB-1 GB band, conservative
+    * because a round's symmetrized frame doubles the rows), capped at
+    * the session's configured setting and floored at 1. Pure so the
+    * spec can pin the curve.
+    */
+  private[graft] def ccLoopPartitions(edgeRows: Long, sessionCap: Int): Int =
+    math.max(1L, math.min(sessionCap.toLong, edgeRows / 2000000L + 1)).toInt
+
   /** Connected components over a near-dup pair set — the step that
     * turns pairwise matches into an actionable dedup decision: pairs
     * are not transitive (A~B and B~C does not imply the pair (A,C)
@@ -529,16 +539,6 @@ object Dedup {
     * @return (doc_id, cluster_id) — one row per node that appears in
     *   ≥1 pair; cluster_id is the component's min doc_id.
     */
-  /** Shuffle fan-out for one CC star round, from the canonical edge
-    * count: one partition per ~2M (u, v) long-pair rows (≈ 32 MB of
-    * shuffle per task — guide §2.2's 100 MB-1 GB band, conservative
-    * because a round's symmetrized frame doubles the rows), capped at
-    * the session's configured setting and floored at 1. Pure so the
-    * spec can pin the curve.
-    */
-  private[graft] def ccLoopPartitions(edgeRows: Long, sessionCap: Int): Int =
-    math.max(1L, math.min(sessionCap.toLong, edgeRows / 2000000L + 1)).toInt
-
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 24): DataFrame = {
     // canonical orientation everywhere: u > v, no self-loops
     val e0 = pairs.select(

@@ -2,6 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SessionClone
 import graft.Tables
 import graft.operators.{Dims, Surveys}
 import graft.functions.{CodecExpressions => CE}
@@ -23,7 +24,12 @@ import graft.functions.{CodecExpressions => CE}
   * partitioned by beacon date (daily pruning); at 100 TB the landing
   * tables additionally bucket by implant for co-located session joins
   * (`plans/BucketedLayout.scala`, shuffle-free paths pinned by
-  * BucketedLayoutSpec).
+  * BucketedLayoutSpec). The heavy stage (payload synthesis + decode)
+  * runs in the `events` scan's tasks, and that scan is split with no
+  * per-file open cost: a split is `min(maxPartitionBytes, bytes /
+  * cores)`, so a small file of k row groups runs as min(k, cores) busy
+  * tasks instead of one, while at scale (bytes / cores past
+  * `maxPartitionBytes`) the splits are the session's own.
   */
 object BeaconPipeline {
 
@@ -39,7 +45,10 @@ object BeaconPipeline {
     * — and every decode gate downstream — are unchanged.
     */
   def syntheticBeacons(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
+    // resolved on a clone with no open cost so the scan splits by
+    // bytes / cores; the rebound frame keeps the clone's split sizing
+    val e = SessionClone.rebind(SessionClone.withConf(spark,
+      "spark.sql.files.openCostInBytes" -> "0")(Tables.events(_, dir)), spark)
     val uid = col("user_id")
     val eid = col("event_id")
     val dialect = when(uid % 3 === 0, "linux").when(uid % 3 === 1, "solaris").otherwise("mikrotik")

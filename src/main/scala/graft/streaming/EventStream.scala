@@ -166,10 +166,10 @@ object EventStream {
     * each gate many times; memory-sink temp views outlive
     * clearCache/releaseAll).
     */
-  private def replayToTable(spark: SparkSession, dir: String, agg: DataFrame,
+  private def replayToTable(spark: SparkSession, srcDir: String, agg: DataFrame,
       name: String): DataFrame = {
     spark.catalog.dropTempView(name)
-    withStateParts(spark, replaySrcDir(spark, dir)._1) {
+    withStateParts(spark, srcDir) {
       startToMemory(agg, name, "complete")
     }.awaitTermination()
     spark.table(name)
@@ -283,16 +283,15 @@ object EventStream {
     (srcDir, src.schema)
   }
 
-  /** The landed replay source opened as a file stream, two files per
-    * micro-batch (8 slices → 4 batches).
+  /** The landed replay source ([[replaySrcDir]]) opened as a file
+    * stream, two files per micro-batch (8 slices → 4 batches).
     */
-  private def replaySource(spark: SparkSession, dir: String): DataFrame = {
-    val (srcDir, schema) = replaySrcDir(spark, dir)
+  private def replaySource(spark: SparkSession, srcDir: String,
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", 2)
       .parquet(srcDir)
-  }
 
   /** Deterministic micro-batch REPLAY of the session-window stream for
     * the driver gate (ig_stream_sessions): the 30-minute session-window
@@ -304,14 +303,15 @@ object EventStream {
     * the driver's DuckDB oracle, not only the ScalaTest suite.
     */
   def sessionReplayGate(spark: SparkSession, dir: String): DataFrame = {
-    val agg = replaySource(spark, dir)
+    val (srcDir, schema) = replaySrcDir(spark, dir)
+    val agg = replaySource(spark, srcDir, schema)
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"),
         unix_micros(col("session_window.start")).as("s_start"),
         unix_micros(col("session_window.end")).as("s_end"),
         col("n_events"))
-    replayToTable(spark, dir, agg, "sess_replay_gate").orderBy("user_id", "s_start")
+    replayToTable(spark, srcDir, agg, "sess_replay_gate").orderBy("user_id", "s_start")
   }
 
   /** Windowed-aggregation twin of [[sessionReplayGate]]
@@ -322,14 +322,15 @@ object EventStream {
     * SQL oracle.
     */
   def windowReplayGate(spark: SparkSession, dir: String): DataFrame = {
-    val agg = replaySource(spark, dir)
+    val (srcDir, schema) = replaySrcDir(spark, dir)
+    val agg = replaySource(spark, srcDir, schema)
       .groupBy(window(col("ts"), "6 hours"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,6)")).as("total_raw"))
       .select(unix_micros(col("window.start")).as("w_start"),
         col("event_type"), col("n"),
         round(col("total_raw"), 2).cast("double").as("total"))
-    replayToTable(spark, dir, agg, "win_replay_gate").orderBy("w_start", "event_type")
+    replayToTable(spark, srcDir, agg, "win_replay_gate").orderBy("w_start", "event_type")
   }
 
   /** Checkpointed-ingest parity gate (ig_stream_ingest): run

@@ -167,4 +167,43 @@ class BeaconPipelineSpec extends AnyFunSuite {
     assert(oneDay.count() > 0)
     assert(!plan.contains("PartitionFilters: []"), "partition filter not pushed")
   }
+
+  test("the beacon scan splits a small multi-row-group events file over the cores") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val key = "spark.sql.files.openCostInBytes"
+    val before = spark.conf.getOption(key)
+    // the same 1,000 events in one file of several row groups
+    val copy = Files.createTempDirectory("beacon_rg").toString
+    Tables.events(spark, dir).coalesce(1).write
+      .option("parquet.block.size", 4096).parquet(Tables.path(copy, "events"))
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val rowGroups = new java.io.File(Tables.path(copy, "events")).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.toString), hconf))
+        try r.getRowGroups.size finally r.close()
+      }.sum
+    assert(rowGroups >= 2, s"fixture has $rowGroups row group(s)")
+    val want = math.min(rowGroups, spark.sparkContext.defaultParallelism)
+
+    val scan = BeaconPipeline.syntheticBeacons(spark, copy).queryExecution.toRdd
+    val rowsPerTask = scan.mapPartitions(it => Iterator(it.size)).collect()
+    assert(scan.getNumPartitions >= want, s"${scan.getNumPartitions} partitions")
+    // a row group is read by the split holding its midpoint, and the
+    // footer's bytes count too, so the tail split of a file this small
+    // may hold no row group: ask only that the rows left the one task
+    assert(rowsPerTask.count(_ > 0) > 1, s"rows per task: ${rowsPerTask.toSeq}")
+    // the caller's own scan of the same file still plans under its
+    // open cost: one split
+    assert(spark.conf.getOption(key) === before)
+    assert(Tables.events(spark, copy).queryExecution.toRdd.getNumPartitions === 1)
+
+    def counts(d: String): (Long, Long) = {
+      val r = BeaconPipeline.enriched(spark, d)
+        .agg(count(lit(1)), sum(when(col("parse_error"), 1L).otherwise(0L))).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    assert(counts(copy) === counts(dir))
+  }
 }

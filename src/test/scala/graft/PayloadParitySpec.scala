@@ -14,6 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * (≡7 mod 11, ≥16), short clips (≡2 mod 13), truncation slices
   * (scene: ≡6 mod 11; vfp: ≡4 mod 9), single-shot docs (scene: ≡0
   * mod 4), and all width/height/frame-count residues (mod 2/3/5/8).
+  * `beacon_raw_tlv` is checked on residue grids, past the Long
+  * wraparound, on negative ids, and on random pairs over the whole
+  * Long domain.
   */
 class PayloadParitySpec extends AnyFunSuite {
 
@@ -24,6 +27,16 @@ class PayloadParitySpec extends AnyFunSuite {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+
+  /** ANSI arithmetic raises where the beacon reference's Long products
+    * overflow, while the native expression wraps; grids past the
+    * wraparound run on a session with the wrapping semantics the
+    * native code mirrors. */
+  lazy val legacy: org.apache.spark.sql.SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.ansi.enabled", "false")
+    s
+  }
 
   test("scene_y4m_payload == the Column formulation, byte for byte") {
     val diff = spark.range(0, 2000)
@@ -68,10 +81,7 @@ class PayloadParitySpec extends AnyFunSuite {
     // so uid*131071 crosses 2^48 (the mac's mod-2^48 step) and, from
     // 2^46 on, wraps Long negative (16-digit hex, lpad left-truncation,
     // negative modulus); eids up to ~2^53 wrap eid*2654435761 the same
-    // way. ANSI arithmetic raises on that overflow, so the grid runs on
-    // a session with the wrapping semantics the native code mirrors.
-    val legacy = spark.newSession()
-    legacy.conf.set("spark.sql.ansi.enabled", "false")
+    // way; it runs on the wrapping session.
     val huge = legacy.range(0, 2000)
       .select((pow(lit(2.0), lit(31) + col("id") % 32).cast("long") +
           col("id") * 7919).as("uid"),
@@ -80,6 +90,43 @@ class PayloadParitySpec extends AnyFunSuite {
       "the grid must reach the Long wraparound")
     assert(diff(huge) === 0,
       "native beacon TLV diverges from the Column formula past 2^48")
+    // a fourth mapping with both ids negative: a dense grid of small
+    // negatives (every residue, negative Java remainders, the dialect's
+    // fall-through on uid % 3 < 0) crossed with edge values up to
+    // Long.MinValue, where decimal fields carry a sign and every hex
+    // field takes the 16-digit two's-complement form
+    val edges = Seq(Long.MinValue, Long.MinValue + 1, -1L, -2L, -3L, -10L,
+      -255L, -256L, -65536L, Int.MinValue.toLong, -(1L << 46), -(1L << 48),
+      -4294967296L)
+    val edgeIds = legacy.createDataFrame(edges.map(Tuple1(_))).toDF("v")
+    val negative = legacy.range(0, 3000)
+      .select((-(col("id") % 101) - 1).as("uid"), (-col("id") - 1).as("eid"))
+      .union(edgeIds.select(col("v").as("uid"))
+        .crossJoin(edgeIds.select(col("v").as("eid"))))
+    assert(negative.filter(col("uid") >= 0 || col("eid") >= 0).count() === 0)
+    assert(diff(negative) === 0,
+      "native beacon TLV diverges from the Column formula on negative ids")
+  }
+
+  test("beacon_raw_tlv == the Column formulation on arbitrary (Long, Long)") {
+    import org.scalacheck.{Arbitrary, Gen, Prop, Test}
+    import org.scalacheck.util.Pretty
+    import graft.functions.{CodecExpressions => CE}
+    // every bit length and both signs, plus the extremes
+    val id: Gen[Long] = Gen.frequency(
+      9 -> (for { v <- Arbitrary.arbitrary[Long]; s <- Gen.choose(0, 63) } yield v >> s),
+      1 -> Gen.oneOf(Long.MinValue, Long.MinValue + 1, -1L, 0L, 1L, Long.MaxValue))
+    // one batch of pairs, compared in one Spark job that returns the
+    // first diverging pair
+    val prop = Prop.forAllNoShrink(Gen.listOfN(20000, Gen.zip(id, id))) { pairs =>
+      val bad = legacy.createDataFrame(pairs).toDF("uid", "eid")
+        .filter(not(CE.beacon_raw_tlv(col("uid"), col("eid")) ===
+          PayloadReferences.beaconRawTlvColumns(col("uid"), col("eid"))))
+        .limit(1).collect()
+      Prop(bad.isEmpty) :| s"first diverging (uid, eid): ${bad.mkString}"
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(1), prop)
+    assert(res.passed, Pretty.pretty(res))
   }
 
   test("native payloads decode through the same Y4M walk (spot lengths)") {
