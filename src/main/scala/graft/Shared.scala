@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
@@ -35,68 +37,121 @@ object Shared {
   }
 
   /** Content fingerprint of a source-table directory: a short stable
-    * hash over the (name, length, mtime) of its files. Landing paths
-    * derived from a scale dir embed this, so a DRIVER-side testdata
-    * regeneration can never pair a stale `/tmp` landing with fresh
-    * source parquet (the landing's `_SUCCESS`-gated idempotence would
-    * otherwise happily serve the old corpus). Pure FileSystem listing,
-    * no Spark job.
+    * hash over the (name, length, mtime) of its files. Pure FileSystem
+    * listing, no Spark job.
     */
-  def srcFingerprint(spark: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val listing = fs.listStatus(p).sortBy(_.getPath.getName)
+  def srcFingerprint(spark: SparkSession, dir: String): String =
+    fingerprint(spark.sessionState.newHadoopConf(), dir)
+
+  private def fingerprint(conf: Configuration, dir: String): String = {
+    val p = new Path(dir)
+    val listing = p.getFileSystem(conf).listStatus(p).sortBy(_.getPath.getName)
       .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
       .mkString("|")
     f"${scala.util.hashing.MurmurHash3.stringHash(listing)}%08x"
   }
 
-  /** Regen hygiene for fingerprint-suffixed landings: delete every
-    * sibling under `parentDir` that shares `prefix` but is not
-    * `keepName` — otherwise each testdata regeneration strands a full
-    * corpus copy in tmp forever.
+  /** A sibling younger than this is taken to be in use by another
+    * process ([[landOnce]]).
     */
-  def pruneSiblings(spark: SparkSession, parentDir: String, prefix: String,
-      keepName: String): Unit = {
-    val parent = new org.apache.hadoop.fs.Path(parentDir)
-    val fs = parent.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(parent))
-      fs.listStatus(parent).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith(prefix) && n != keepName) fs.delete(st.getPath, true)
-      }
+  val StaleAfterMs: Long = 2L * 3600 * 1000
+
+  /** The shape of a landing's key: an 8-hex-digit content fingerprint. */
+  private[graft] val FingerprintShape: String = "[0-9a-f]{8}"
+
+  /** `s` as a name segment: every non-alphanumeric byte mapped to `_`. */
+  private[graft] def nameSegment(s: String): String = s.replaceAll("[^A-Za-z0-9]", "_")
+
+  /** `<prefix>_<dirPart>_`: every landing of `dir` under `prefix`
+    * starts with it, followed by its key.
+    */
+  private[graft] def keyPrefix(dir: String, prefix: String): String =
+    s"${prefix}_${nameSegment(dir)}_"
+
+  /** `<prefix>_<dirPart>_<fp8>`: the name of `dir`'s landing under
+    * `prefix` ([[landOnce]]).
+    */
+  def landingName(spark: SparkSession, dir: String, prefix: String): String =
+    keyPrefix(dir, prefix) + srcFingerprint(spark, dir)
+
+  /** Land `dir`'s derived state under `prefix` in the temp dir once,
+    * and return its path. This is the one policy for state that is
+    * derived from a scale dir and kept on disk:
+    *
+    *  - Key. The landing is named `<prefix>_<dirPart>_<fp8>`
+    *    ([[landingName]]): the scale dir with every non-alphanumeric
+    *    byte mapped to `_`, then its content fingerprint. A testdata
+    *    regeneration therefore mints a new name and lands fresh; it
+    *    can never pair a stale landing with fresh source parquet.
+    *  - Land once. When the `_LANDED` marker is absent, stale siblings
+    *    are swept, the path is cleared, `body(path)` writes the landing
+    *    and the marker is written LAST, so a crash mid-write lands
+    *    again. The marker is checked and written through the path's
+    *    own FileSystem. A call that finds it costs one fingerprint
+    *    listing and one marker check.
+    *  - Sweep ([[gcStaleSiblings]]). A fresh landing prunes its stale
+    *    incarnations, or each regen would strand a corpus copy. A
+    *    sibling goes only when the newest file anywhere under it is
+    *    older than [[StaleAfterMs]]: two processes mid-regen hold
+    *    different fingerprints, and without the guard each would delete
+    *    the other's just-landed, in-use copy.
+    *  - Match. A sibling matches only when the rest of its name after
+    *    `<prefix>_<dirPart>_` has the shape of a fingerprint, so the
+    *    landings of `/x/sf1_skew` are never siblings of `/x/sf1`'s.
+    *
+    * Landed catalogs take their name and sweep from the same helpers
+    * (`LandedCatalog.fingerprinted`); their own `_LANDED` marker
+    * carries the bucket count a reattach needs.
+    */
+  def landOnce(spark: SparkSession, dir: String, prefix: String)(
+      body: String => Unit): String = {
+    val conf = spark.sessionState.newHadoopConf()
+    val tmp = sys.props("java.io.tmpdir")
+    val stem = keyPrefix(dir, prefix)
+    val name = stem + fingerprint(conf, dir)
+    val path = new Path(tmp, name)
+    val fs = path.getFileSystem(conf)
+    val marker = new Path(path, "_LANDED")
+    if (!fs.exists(marker)) {
+      gcStaleSiblings(spark, tmp, stem, name)
+      fs.delete(path, true)
+      body(path.toString)
+      fs.create(marker, true).close()
+    }
+    path.toString
   }
 
-  /** GC for per-process gate leftovers (streaming replay gates key
-    * their sink/checkpoint dirs by pid): delete every sibling of
-    * `keepName` under `parentDir` matching `prefix` whose NEWEST
-    * recursive mtime is older than `maxAgeMs`. The top-level dir's
-    * own mtime is NOT enough: POSIX directory mtime only changes when
-    * a direct child is added/removed, so a live stream writing under
-    * nested ck/offsets for hours looks idle at the top — staleness
-    * must be judged by the newest timestamp anywhere in the tree.
-    * Gate dirs are small (one sink + one checkpoint), so the
-    * recursive listing is bounded.
+  /** The one sibling sweep ([[landOnce]]): delete every entry of
+    * `parentDir` other than `keepName` whose name is `prefix` followed
+    * by a match of `keyShape`, and whose newest mtime anywhere in its
+    * tree is older than [[StaleAfterMs]]. A directory's own mtime is
+    * not enough: it changes only when a direct child is added or
+    * removed, so a live stream writing nested checkpoint files for
+    * hours looks idle at the top. `onDelete` sees each victim's name
+    * just before its files go.
     */
   def gcStaleSiblings(spark: SparkSession, parentDir: String, prefix: String,
-      keepName: String, maxAgeMs: Long = 2L * 3600 * 1000): Unit = {
-    val parent = new org.apache.hadoop.fs.Path(parentDir)
+      keepName: String, keyShape: String = FingerprintShape,
+      onDelete: String => Unit = _ => ()): Unit = {
+    val parent = new Path(parentDir)
     val fs = parent.getFileSystem(spark.sessionState.newHadoopConf())
-    val cutoff = System.currentTimeMillis() - maxAgeMs
-    def newestMtime(p: org.apache.hadoop.fs.Path, own: Long): Long = {
-      var newest = own
-      val it = fs.listFiles(p, true)
+    val cutoff = System.currentTimeMillis() - StaleAfterMs
+    def newestMtime(st: FileStatus): Long = {
+      var newest = st.getModificationTime
+      val it = fs.listFiles(st.getPath, true)
       while (it.hasNext) newest = math.max(newest, it.next().getModificationTime)
       newest
     }
     if (fs.exists(parent))
       fs.listStatus(parent).foreach { st =>
         val n = st.getPath.getName
-        if (n.startsWith(prefix) && n != keepName &&
+        if (n != keepName && n.startsWith(prefix) &&
+            n.substring(prefix.length).matches(keyShape) &&
             st.getModificationTime < cutoff &&
-            scala.util.Try(newestMtime(st.getPath, st.getModificationTime))
-              .getOrElse(Long.MaxValue) < cutoff)
+            scala.util.Try(newestMtime(st)).getOrElse(Long.MaxValue) < cutoff) {
+          onDelete(n)
           fs.delete(st.getPath, true)
+        }
       }
   }
 

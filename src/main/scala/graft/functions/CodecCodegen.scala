@@ -14,18 +14,24 @@ object CodecCodegen {
   def macFormat(b: Array[Byte]): UTF8String =
     UTF8String.fromString(CodecImpl.macFormat(b))
 
+  /** Null on a truncated label or pointer, a pointer loop or an
+    * offset outside the message ([[CodecImpl.dnsNameDecode]] throws).
+    */
   def dnsNameDecode(dns: Array[Byte], offset: Int): UTF8String =
-    UTF8String.fromString(CodecImpl.dnsNameDecode(dns, offset))
+    try UTF8String.fromString(CodecImpl.dnsNameDecode(dns, offset))
+    catch { case _: IllegalArgumentException | _: IndexOutOfBoundsException => null }
 
   def dnsNameEncode(name: UTF8String): Array[Byte] =
     CodecImpl.dnsNameEncode(name.toString)
 
-  def bthpStrip(buf: Array[Byte]): InternalRow = {
-    val h = CodecImpl.bthpStrip(buf)
-    def s(v: String): UTF8String = if (v == null) null else UTF8String.fromString(v)
-    InternalRow(h.ver, h.typ, h.hdrLen, h.dataLen, h.proxyId,
-      s(h.beaconIp), s(h.dstIp), s(h.proxyIp), h.payload)
-  }
+  /** Null on a truncated envelope ([[CodecImpl.bthpStrip]] throws). */
+  def bthpStrip(buf: Array[Byte]): InternalRow =
+    try {
+      val h = CodecImpl.bthpStrip(buf)
+      def s(v: String): UTF8String = if (v == null) null else UTF8String.fromString(v)
+      InternalRow(h.ver, h.typ, h.hdrLen, h.dataLen, h.proxyId,
+        s(h.beaconIp), s(h.dstIp), s(h.proxyIp), h.payload)
+    } catch { case _: IllegalArgumentException => null }
 
   def ppmDecode(buf: Array[Byte]): InternalRow = {
     val s = CodecImpl.ppmDecode(buf)

@@ -110,14 +110,20 @@ object CodecExpressions {
     override def prettyName: String = "sliding_xor"
   }
 
+  /** `dns_name_decode(BINARY, INT) → STRING`; a malformed name decodes
+    * to null.
+    */
   case class DnsNameDecode(left: Expression, right: Expression)
       extends BinaryExpression {
     override def dataType: DataType = StringType
+    override def nullable: Boolean = true
     override def nullSafeEval(d: Any, o: Any): Any =
-      UTF8String.fromString(
-        CodecImpl.dnsNameDecode(d.asInstanceOf[Array[Byte]], o.asInstanceOf[Int]))
+      CodecCodegen.dnsNameDecode(d.asInstanceOf[Array[Byte]], o.asInstanceOf[Int])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (d, o) => s"$Bridge.dnsNameDecode($d, $o)")
+      nullSafeCodeGen(ctx, ev, (d, o) => s"""
+        ${ev.value} = $Bridge.dnsNameDecode($d, $o);
+        if (${ev.value} == null) { ${ev.isNull} = true; }
+      """)
     override protected def withNewChildrenInternal(l: Expression, r: Expression): DnsNameDecode = copy(l, r)
     override def prettyName: String = "dns_name_decode"
   }
@@ -188,14 +194,19 @@ object CodecExpressions {
 
   /** `bthp_strip(BINARY) → STRUCT<...>`: proxy-envelope removal
     * (`honeycomb.py:138-183`), the framing stage in front of the
-    * beacon listener (SURVEY §3.3).
+    * beacon listener (SURVEY §3.3). A truncated envelope decodes to
+    * null.
     */
   case class BthpStrip(child: Expression) extends UnaryExpression {
     override def dataType: DataType = bthpType
+    override def nullable: Boolean = true
     override def nullSafeEval(v: Any): Any =
       CodecCodegen.bthpStrip(v.asInstanceOf[Array[Byte]])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, b => s"$Bridge.bthpStrip($b)")
+      nullSafeCodeGen(ctx, ev, b => s"""
+        ${ev.value} = $Bridge.bthpStrip($b);
+        if (${ev.value} == null) { ${ev.isNull} = true; }
+      """)
     override protected def withNewChildInternal(c: Expression): BthpStrip = copy(c)
     override def prettyName: String = "bthp_strip"
   }

@@ -108,13 +108,9 @@ object Decontaminate {
   def semanticIncrGate(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.Tables.embeddings(spark, dir).select("vec_id", "embedding")
     val bench = emb.filter(col("vec_id") % 5 === 0)
-    val fpr = graft.Shared.srcFingerprint(spark, dir)
-    // fingerprint-named: a testdata regen re-lands the benchmark, and
-    // the stale incarnation is pruned instead of stranding a
-    // benchmark-sized catalog copy in tmp per regen
-    graft.plans.LandedCatalog.pruneSiblings(spark, graft.plans.VecCatalog.Tag,
-      s"semdecon_${dir}_", s"semdecon_${dir}_$fpr")
-    val cat = graft.plans.VecCatalog.land(spark, bench, s"semdecon_${dir}_$fpr")
+    val cat = graft.plans.VecCatalog.land(spark, bench,
+      graft.plans.LandedCatalog.fingerprinted(spark, graft.plans.VecCatalog.Tag,
+        dir, "semdecon"))
     val batch = plantedCorpus(emb).filter(col("vec_id") >= 250)
     graft.plans.VecCatalog.screen(spark, batch, cat)
       .select(col("vec_id").as("doc_id"), col("n_matches").as("n_bench_hits"),

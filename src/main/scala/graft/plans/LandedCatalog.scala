@@ -89,7 +89,7 @@ object LandedCatalog {
   def defaultBase(tag: String): String = s"${sys.props("java.io.tmpdir")}/$tag"
 
   private def stem(tag: String, name: String): String =
-    s"${tag}_${name.replaceAll("[^A-Za-z0-9_]", "_")}_" +
+    s"${tag}_${graft.Shared.nameSegment(name)}_" +
       java.lang.Long.toHexString(graft.functions.TextImpl.fnv1a64(name)).take(8)
 
   def handle(tag: String, name: String, base: String, specs: Seq[Spec]): Handle = {
@@ -350,56 +350,35 @@ object LandedCatalog {
       fs(spark, h.root).delete(maintPath(h), false)
     }
 
-  /** Regen hygiene for FINGERPRINT-NAMED catalogs (the
-    * [[graft.Shared.pruneSiblings]] discipline applied to landed
-    * state): every testdata regeneration mints a new content
-    * fingerprint, so a catalog named by one strands its previous
-    * incarnation (tables + a corpus-sized data tree) forever unless
-    * the new landing prunes it.
-    *
-    * Drops every catalog root under the tag's default base whose
-    * directory name starts with `tag + "_" + sanitized(namePrefix)`
-    * EXCEPT the one whose logical name is `keepName`, along with the
-    * table entries pointing at the deleted roots. Callers pass a
-    * prefix that pins the gate AND the scale dir, so a prune from one
-    * scale can never victimize another's live catalog.
-    *
-    * AGE-GUARDED (the [[graft.Shared.gcStaleSiblings]] discipline):
-    * only siblings whose NEWEST file is older than `maxAgeMs` are
-    * deleted. Two concurrent processes on the same gate mid-regen hold
-    * different content fingerprints; without the guard each would
-    * delete the other's freshly-built, in-use catalog mid-query.
+  /** Catalog `tag`'s name for `dir`'s content under `prefix`
+    * ([[graft.Shared.landingName]]: `<prefix>_<dirPart>_<fp8>`). A
+    * name whose catalog is not landed yet first prunes its stale
+    * incarnations ([[pruneSiblings]]), so a testdata regen lands fresh
+    * instead of stranding the old corpus-sized catalog.
     */
-  def pruneSiblings(spark: SparkSession, tag: String, namePrefix: String,
-      keepName: String, maxAgeMs: Long = 2L * 3600 * 1000): Unit = {
-    val prefix = s"${tag}_${namePrefix.replaceAll("[^A-Za-z0-9_]", "_")}"
-    val keepDir = stem(tag, keepName)
-    val base = defaultBase(tag)
-    val baseP = new Path(base)
-    val f = fs(spark, base)
-    if (!f.exists(baseP)) return
-    val cutoff = System.currentTimeMillis() - maxAgeMs
-    def newestMtime(p: Path, own: Long): Long = {
-      var newest = own
-      val it = f.listFiles(p, true)
-      while (it.hasNext) newest = math.max(newest, it.next().getModificationTime)
-      newest
-    }
-    val stale = f.listStatus(baseP)
-      .filter { st =>
-        val n = st.getPath.getName
-        n.startsWith(prefix) && n != keepDir &&
-          st.getModificationTime < cutoff &&
-          scala.util.Try(newestMtime(st.getPath, st.getModificationTime))
-            .getOrElse(Long.MaxValue) < cutoff
-      }
-      .map(_.getPath.getName)
-    stale.foreach { n =>
-      spark.sessionState.catalog
-        .listTables("default", s"$n*").foreach { ti =>
-          spark.sql(s"DROP TABLE IF EXISTS ${ti.table}")
-        }
-      f.delete(new Path(base, n), true)
-    }
+  def fingerprinted(spark: SparkSession, tag: String, dir: String,
+      prefix: String): String = {
+    val name = graft.Shared.landingName(spark, dir, prefix)
+    if (marker(spark, handle(tag, name, defaultBase(tag), Nil)).isEmpty)
+      pruneSiblings(spark, tag, name)
+    name
+  }
+
+  /** Drop every stale incarnation of the fingerprinted catalog
+    * `keepName` under the tag's default base — the catalogs of the same
+    * prefix and scale dir under another fingerprint, judged by
+    * [[graft.Shared.gcStaleSiblings]]'s age guard — along with the table
+    * entries pointing at the deleted roots.
+    */
+  def pruneSiblings(spark: SparkSession, tag: String, keepName: String): Unit = {
+    require(keepName.matches(s".*_${graft.Shared.FingerprintShape}"),
+      s"not a fingerprinted catalog name: $keepName")
+    // a root is named by its stem: the fingerprint, then the name's hash
+    graft.Shared.gcStaleSiblings(spark, defaultBase(tag),
+      s"${tag}_${graft.Shared.nameSegment(keepName.dropRight(8))}",
+      stem(tag, keepName),
+      keyShape = s"${graft.Shared.FingerprintShape}_[0-9a-f]{1,8}",
+      onDelete = n => spark.sessionState.catalog.listTables("default", s"${n}_*")
+        .foreach(ti => spark.sql(s"DROP TABLE IF EXISTS ${ti.table}")))
   }
 }

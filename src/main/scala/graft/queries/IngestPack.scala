@@ -592,27 +592,18 @@ object IngestPack {
     * must be exactly filter-equivalent: delete one partition too many
     * or too few and the hash breaks. The cutoff derives from the
     * corpus horizon (max day − 6), a 1-row driver collect. The
-    * landing happens once per scale dir (the writer's own _SUCCESS
-    * marker gates the rebuild — a crashed write lacks it and
-    * re-lands): re-running against an already-swept landing is the
-    * production steady state, and both the sweep (idempotent) and
-    * the surviving rows are deterministic either way.
+    * landing happens once per (scale dir, content fingerprint)
+    * ([[graft.Shared.landOnce]]): re-running against an already-swept
+    * landing is the production steady state, and both the sweep
+    * (idempotent) and the surviving rows are deterministic either way.
     */
   val retentionSweep: Q = (s, d) => {
     val ev = Tables.events(s, d)
-    // fingerprint-suffixed landing: a testdata regen invalidates it
-    // instead of pairing fresh oracle reads with a stale swept landing
-    // (stale siblings pruned below so regens don't accumulate copies)
-    val dirPart = d.replaceAll("[^A-Za-z0-9._-]", "_")
-    val rootName = dirPart + "_" + graft.Shared.srcFingerprint(s, d)
-    val retainBase = s"${sys.props("java.io.tmpdir")}/graft_retain"
-    graft.Shared.pruneSiblings(s, retainBase, dirPart + "_", rootName)
-    val root = s"$retainBase/$rootName"
-    val cut = ev.agg(date_sub(max(to_date(col("ts"))), 6)).head.getDate(0)
-    val done = new org.apache.hadoop.fs.Path(root, "_SUCCESS")
-    if (!done.getFileSystem(s.sessionState.newHadoopConf()).exists(done))
+    val root = graft.Shared.landOnce(s, d, "graft_retain") { p =>
       ev.withColumn("day", to_date(col("ts")))
-        .write.mode("overwrite").partitionBy("day").parquet(root)
+        .write.mode("overwrite").partitionBy("day").parquet(p)
+    }
+    val cut = ev.agg(date_sub(max(to_date(col("ts"))), 6)).head.getDate(0)
     graft.plans.Retention.sweep(s, root, "day", cut.toString)
     s.read.parquet(root)
       .groupBy(col("day").cast("date").as("day"))

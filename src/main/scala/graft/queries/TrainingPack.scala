@@ -118,7 +118,8 @@ object TrainingPack {
       .select(col("doc_id"),
         when(col("doc_id") % 7 === 3, concat(col("h_text"), lit(" zz")))
           .otherwise(col("text")).as("text"))
-    val cat = graft.plans.DedupCatalog.land(s, hist, s"incr_$d")
+    val cat = graft.plans.DedupCatalog.land(s, hist,
+      graft.plans.LandedCatalog.fingerprinted(s, graft.plans.DedupCatalog.Tag, d, "incr"))
     graft.plans.DedupCatalog.screen(s, batch, cat)
   }
 
@@ -140,7 +141,8 @@ object TrainingPack {
         when(col("doc_id") % 7 === 3, concat(col("h_text"), lit(" zz")))
           .otherwise(col("text")).as("text"))
     val cat = graft.plans.DedupCatalog.land(s,
-      docs.filter(col("doc_id") % 6 === 0), s"cmp_$d")
+      docs.filter(col("doc_id") % 6 === 0),
+      graft.plans.LandedCatalog.fingerprinted(s, graft.plans.DedupCatalog.Tag, d, "cmp"))
     if (graft.plans.LandedCatalog.floor(s, cat) < 2) {
       graft.plans.DedupCatalog.append(s,
         docs.filter(col("doc_id") % 6 === 2), cat, ingestId = 1)
@@ -414,7 +416,8 @@ object TrainingPack {
       .select(col("vec_id"),
         when(col("vec_id") % 7 === 3, col("h_emb"))
           .otherwise(col("embedding")).as("embedding"))
-    val cat = graft.plans.VecCatalog.land(s, hist, s"incr_$d")
+    val cat = graft.plans.VecCatalog.land(s, hist,
+      graft.plans.LandedCatalog.fingerprinted(s, graft.plans.VecCatalog.Tag, d, "incr"))
     graft.plans.VecCatalog.screen(s, batch, cat)
   }
 
@@ -453,11 +456,9 @@ object TrainingPack {
       .select(col("vec_id"),
         when(col("vec_id") % 7 === 3, col("h_emb"))
           .otherwise(col("embedding")).as("embedding"))
-    // content fingerprint in the name: a driver-side testdata regen
-    // lands fresh, never pairs fresh oracle reads with stale cells
     val cat = graft.plans.SemCatalog.land(s,
       emb.filter(col("vec_id") % 6 === 0),
-      s"smc_${d}_${graft.Shared.srcFingerprint(s, d)}")
+      graft.plans.LandedCatalog.fingerprinted(s, graft.plans.SemCatalog.Tag, d, "smc"))
     if (graft.plans.LandedCatalog.floor(s, cat) < 2) {
       graft.plans.SemCatalog.append(s, emb.filter(col("vec_id") % 6 === 2), cat, 1L)
       graft.plans.SemCatalog.append(s, emb.filter(col("vec_id") % 6 === 4), cat, 2L)
@@ -1283,7 +1284,8 @@ object TrainingPack {
           col("h_sh").bitwiseXOR(lit(1L)))
           .otherwise(col("sh")).as("sh"))
     val cat = graft.plans.SigCatalog.land(s,
-      hist.filter(col("doc_id") % 6 === 0), s"fp_$d")
+      hist.filter(col("doc_id") % 6 === 0),
+      graft.plans.LandedCatalog.fingerprinted(s, graft.plans.SigCatalog.Tag, d, "fp"))
     if (graft.plans.LandedCatalog.floor(s, cat) < 2) {
       graft.plans.SigCatalog.append(s,
         hist.filter(col("doc_id") % 6 === 2), cat, ingestId = 1)
@@ -1472,10 +1474,10 @@ object TrainingPack {
   }
 
   val mmCrossIncr: Q = (s, d) => {
-    val fpr = graft.Shared.srcFingerprint(s, d)
     def screened(sigs: org.apache.spark.sql.DataFrame, tag: String) = {
       val cat = graft.plans.SigCatalog.land(s,
-        sigs.filter(col("doc_id") % 2 === 0), s"crossincr_${tag}_${d}_$fpr")
+        sigs.filter(col("doc_id") % 2 === 0), graft.plans.LandedCatalog
+          .fingerprinted(s, graft.plans.SigCatalog.Tag, d, s"crossincr_$tag"))
       graft.plans.SigCatalog.screen(s,
         sigs.filter(col("doc_id") % 2 === 1), cat).select("doc_id")
     }
@@ -1531,13 +1533,9 @@ object TrainingPack {
     */
   val txDupSpansIncr: Q = (s, d) => {
     val docs = Tables.documents(s, d)
-    // content fingerprint in the catalog name: a driver-side testdata
-    // regen must land a FRESH catalog, never pair fresh oracle reads
-    // with stale landed stats (same discipline as the streaming
-    // replay sources)
     val cat = graft.plans.GramCatalog.land(s,
       docs.filter(col("doc_id") < 125),
-      s"spans_${d}_${graft.Shared.srcFingerprint(s, d)}")
+      graft.plans.LandedCatalog.fingerprinted(s, graft.plans.GramCatalog.Tag, d, "spans"))
     graft.plans.GramCatalog.append(s,
       docs.filter(col("doc_id") >= 125 && col("doc_id") < 250), cat, 1L)
     graft.plans.GramCatalog.screen(s, docs.filter(col("doc_id") >= 250), cat)

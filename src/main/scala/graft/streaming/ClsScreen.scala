@@ -131,11 +131,12 @@ object ClsScreen {
     val hist = docs.filter(col("doc_id") < 250)
     def land(sd: String): Unit = landModel(Classifier.pinnedWeights(hist,
       col("doc_id") % 10 === 0, col("doc_id") % 10 === 5), s"$sd/_model")
-    // the pinned artifact lands next to the slices inside the same
-    // _SLICED-guarded block, keyed by the same content fingerprint: a
-    // testdata regen re-trains it
-    val srcDir = ReplayGate.slicedSource(spark, dir, "graft_cls_src",
-      docs.filter(col("doc_id") >= 250), "doc_id", alsoLand = land)
+    // the pinned artifact lands with the slices, keyed by the same
+    // content fingerprint: a testdata regen re-trains it
+    val srcDir = graft.Shared.landOnce(spark, dir, "graft_cls_src") { sd =>
+      ReplayGate.writeSlices(docs.filter(col("doc_id") >= 250), "doc_id")(sd)
+      land(sd)
+    }
     // layout migration: slices landed by a pre-_PINNED build carry a
     // weights-at-root artifact with no marker — re-land it through
     // the staged-rename discipline (weights derive deterministically
@@ -164,7 +165,8 @@ object ClsScreen {
   def cutScreenReplayGate(spark: SparkSession, dir: String): DataFrame = {
     val docs = graft.Tables.documents(spark, dir).select("doc_id", "lang", "text")
     val hist = docs.filter(col("doc_id") < 250)
-    def land(sd: String): Unit = {
+    val srcDir = graft.Shared.landOnce(spark, dir, "graft_clc_src") { sd =>
+      ReplayGate.writeSlices(docs.filter(col("doc_id") >= 250), "doc_id")(sd)
       // the weight frame feeds two consumers (the artifact write and
       // the history scoring the election runs on) — materialize so
       // training runs once
@@ -176,8 +178,6 @@ object ClsScreen {
       val cut = Elections.histogramThreshold(histScored, "lang", "mbkt")
       landModel(w, s"$sd/_model", cut = Some(cut))
     }
-    val srcDir = ReplayGate.slicedSource(spark, dir, "graft_clc_src",
-      docs.filter(col("doc_id") >= 250), "doc_id", alsoLand = land)
     val base = ReplayGate.gateBase(spark, dir, "graft_clc_gate")
     classifierScreen(spark, srcDir, docs.schema, s"$srcDir/_model",
       s"$base/sink", s"$base/ck")

@@ -270,15 +270,8 @@ object EventStream {
       (String, org.apache.spark.sql.types.StructType) = {
     val src = graft.Tables.events(spark, dir)
       .select(col("user_id"), col("ts"), col("event_type"), col("value"))
-    // suffix carries a source fingerprint: a driver-side testdata regen
-    // invalidates the landing instead of silently serving stale rows
-    val dirPart = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val name = s"graft_stream_src_v2_${dirPart}_${graft.Shared.srcFingerprint(spark, dir)}"
-    val srcDir = s"${sys.props("java.io.tmpdir")}/$name"
-    if (!new java.io.File(s"$srcDir/_SUCCESS").exists) {
-      graft.Shared.pruneSiblings(spark, sys.props("java.io.tmpdir"),
-        s"graft_stream_src_v2_${dirPart}_", name)
-      src.repartitionByRange(8, col("ts")).write.mode("overwrite").parquet(srcDir)
+    val srcDir = graft.Shared.landOnce(spark, dir, "graft_stream_src_v2") { p =>
+      src.repartitionByRange(8, col("ts")).write.mode("overwrite").parquet(p)
     }
     (srcDir, src.schema)
   }

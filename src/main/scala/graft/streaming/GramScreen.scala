@@ -74,11 +74,8 @@ object GramScreen {
     val hist = docs.filter(col("doc_id") < 250)
     val srcDir = ReplayGate.slicedSource(spark, dir, "graft_gram_src",
       docs.filter(col("doc_id") >= 250), "doc_id")
-    // fingerprint-named catalog regenerates with the slices; prune the
-    // stale incarnations a testdata regen would otherwise strand
-    LandedCatalog.pruneSiblings(spark, GramCatalog.Tag,
-      ReplayGate.catalogNamePrefix(srcDir), ReplayGate.catalogName(srcDir))
-    val cat = GramCatalog.land(spark, hist, ReplayGate.catalogName(srcDir))
+    val cat = GramCatalog.land(spark, hist, LandedCatalog.fingerprinted(spark,
+      GramCatalog.Tag, dir, "stream_gate_graft_gram_src"))
     val base = ReplayGate.gateBase(spark, dir, "graft_gram_gate")
     spanScreen(spark, srcDir, docs.schema, cat, s"$base/sink", s"$base/ck")
     spark.read.parquet(s"$base/sink")

@@ -97,17 +97,13 @@ object SigScreen {
   private def screenReplayGate(spark: SparkSession, dir: String,
       sigs: DataFrame, tag: String): DataFrame = {
     val hist = sigs.filter(col("doc_id") < 250)
-    // prefix reproduces the historical naming for tag "" and "afp_"/
-    // "vfp_" alike (the helper re-appends the underscore), so landed
-    // tmp state from earlier rounds stays attachable
-    val srcDir = ReplayGate.slicedSource(spark, dir,
-      s"graft_sig_src_$tag".stripSuffix("_"),
+    // tag "" and "afp_"/"vfp_" alike drop their trailing underscore:
+    // the landing name re-appends it
+    val srcPrefix = s"graft_sig_src_$tag".stripSuffix("_")
+    val srcDir = ReplayGate.slicedSource(spark, dir, srcPrefix,
       sigs.filter(col("doc_id") >= 250), "doc_id")
-    // fingerprint-named catalog regenerates with the slices; prune the
-    // stale incarnations a testdata regen would otherwise strand
-    LandedCatalog.pruneSiblings(spark, SigCatalog.Tag,
-      ReplayGate.catalogNamePrefix(srcDir), ReplayGate.catalogName(srcDir))
-    val cat = SigCatalog.land(spark, hist, ReplayGate.catalogName(srcDir))
+    val cat = SigCatalog.land(spark, hist, LandedCatalog.fingerprinted(spark,
+      SigCatalog.Tag, dir, s"stream_gate_$srcPrefix"))
     val base = ReplayGate.gateBase(spark, dir,
       s"graft_sig_gate_$tag".stripSuffix("_"))
     sigScreen(spark, srcDir, sigs.schema, cat, s"$base/sink", s"$base/ck")

@@ -117,11 +117,8 @@ object VecScreen {
       .filter(col("vec_id") >= 250)
     val srcDir = ReplayGate.slicedSource(spark, dir, "graft_decon_src",
       corpus, "vec_id")
-    // the benchmark catalog is fingerprint-named like the slices; a
-    // regen prunes the stale catalog too instead of stranding it
-    LandedCatalog.pruneSiblings(spark, VecCatalog.Tag,
-      ReplayGate.catalogNamePrefix(srcDir), ReplayGate.catalogName(srcDir))
-    val cat = VecCatalog.land(spark, bench, ReplayGate.catalogName(srcDir))
+    val cat = VecCatalog.land(spark, bench, LandedCatalog.fingerprinted(spark,
+      VecCatalog.Tag, dir, "stream_gate_graft_decon_src"))
     val base = ReplayGate.gateBase(spark, dir, "graft_decon_gate")
     screenAgainstCatalog(spark, srcDir, corpus.schema, cat,
       s"$base/sink", s"$base/ck")

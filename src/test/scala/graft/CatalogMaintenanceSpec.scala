@@ -319,7 +319,7 @@ class CatalogMaintenanceSpec extends AnyFunSuite {
       // a CONCURRENT process mid-regen holds — the default prune must
       // leave it alone, files and table entries both, or two racing
       // sessions would each delete the other's in-use catalog
-      LandedCatalog.pruneSiblings(spark, VecCatalog.Tag, "spec_prune_sfA_", "spec_prune_sfA_22222222")
+      LandedCatalog.pruneSiblings(spark, VecCatalog.Tag, "spec_prune_sfA_22222222")
       assert(fs.exists(new Path(stale.root)),
         "a fresh sibling was pruned — the concurrent-regen age guard is gone")
       assert(spark.catalog.tableExists(stale.table("buckets")))
@@ -335,7 +335,7 @@ class CatalogMaintenanceSpec extends AnyFunSuite {
         walk(p)
       }
       ageTree(new Path(stale.root))
-      LandedCatalog.pruneSiblings(spark, VecCatalog.Tag, "spec_prune_sfA_", "spec_prune_sfA_22222222")
+      LandedCatalog.pruneSiblings(spark, VecCatalog.Tag, "spec_prune_sfA_22222222")
       // the stale incarnation is gone — files AND table entries
       assert(!fs.exists(new Path(stale.root)), "stale root survived the prune")
       assert(!spark.catalog.tableExists(stale.table("buckets")),
@@ -344,13 +344,13 @@ class CatalogMaintenanceSpec extends AnyFunSuite {
       // still SCREENABLE (table entries intact, data readable) — the
       // keeper is protected BY NAME even when aged past the threshold
       ageTree(new Path(keep.root))
-      LandedCatalog.pruneSiblings(spark, VecCatalog.Tag, "spec_prune_sfA_", "spec_prune_sfA_22222222")
+      LandedCatalog.pruneSiblings(spark, VecCatalog.Tag, "spec_prune_sfA_22222222")
       assert(fs.exists(new Path(keep.root)) && fs.exists(new Path(other.root)))
       assert(VecCatalog.screen(spark, emb, keep).columns.nonEmpty)
       assert(spark.catalog.tableExists(other.table("buckets")),
         "another scale's catalog was victimized")
       // idempotent: pruning again is a no-op
-      LandedCatalog.pruneSiblings(spark, VecCatalog.Tag, "spec_prune_sfA_", "spec_prune_sfA_22222222")
+      LandedCatalog.pruneSiblings(spark, VecCatalog.Tag, "spec_prune_sfA_22222222")
       assert(fs.exists(new Path(keep.root)))
     } finally {
       LandedCatalog.drop(spark, keep)

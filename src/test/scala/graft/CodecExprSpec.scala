@@ -82,19 +82,37 @@ class CodecExprSpec extends AnyFunSuite {
     val raw = when(col("id") === 0, bin(Array[Byte](0, 1, 0, 10, 0x41, 0x42)))
       .when(col("id") === 1, bin(Array[Byte](0)))
       .otherwise(bin(CodecImpl.tlvEncode(Seq(1 -> "ab".getBytes))))
+    // dns_name_decode: a truncated label; a pointer to itself; a
+    // well-formed name; the same name at a negative offset
+    val dns = when(col("id") === 0, bin(Array[Byte](3, 0x61, 0x62)))
+      .when(col("id") === 1, bin(Array[Byte](0xC0.toByte, 0)))
+      .otherwise(bin(CodecImpl.dnsNameEncode("ab.c")))
+    val dnsOffset = when(col("id") === 3, lit(-1)).otherwise(lit(0))
+    // bthp_strip: a truncated main header; a main header cut inside
+    // the additional headers; two well-formed envelopes
+    val bthp = when(col("id") === 0, bin(Array[Byte](1, 2, 0)))
+      .when(col("id") === 1, bin(Array[Byte](1, 2, 0, 14, 0, 0, 0, 0, 0, 0, 0, 0, 2)))
+      .otherwise(bin(CodecImpl.bthpFrame("x".getBytes, 5L, "9.8.7.6")))
     val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
     for (mode <- Seq(Seq("false", "NO_CODEGEN"), Seq("true", "CODEGEN_ONLY"))) {
       keys.zip(mode).foreach { case (k, v) => spark.conf.set(k, v) }
       try withClue(mode) {
-        val q = spark.range(3).select(col("id"), CE.tlv_decode(raw).as("f"))
+        val q = spark.range(4).select(col("id"), CE.tlv_decode(raw).as("f"),
+          CE.dns_name_decode(dns, dnsOffset).as("n"), CE.bthp_strip(bthp).as("h"))
         assert(q.queryExecution.executedPlan.toString.contains("*(") === (mode.head == "true"))
         val got = q.orderBy("id").collect()
         assert(got.take(2).forall(_.isNullAt(1)), "truncated frame did not decode to null")
         assert(got(2).getSeq[org.apache.spark.sql.Row](1).map(_.getInt(0)) === Seq(1))
+        assert(Seq(0, 1, 3).forall(got(_).isNullAt(2)), "malformed DNS name did not decode to null")
+        assert(got(2).getString(2) === "ab.c")
+        assert(got.take(2).forall(_.isNullAt(3)), "truncated BTHP envelope did not decode to null")
+        assert(got(2).getStruct(3).getAs[Long]("proxy_id") === 5L)
       } finally keys.foreach(spark.conf.unset)
     }
     // the SQL form from the bug report (constant-folded, interpreted)
     assert(spark.sql("SELECT tlv_decode(unhex('0001000A4142')) AS f").head().isNullAt(0))
+    assert(spark.sql("SELECT dns_name_decode(unhex('C000'), 0) AS n").head().isNullAt(0))
+    assert(spark.sql("SELECT bthp_strip(unhex('010200')) AS h").head().isNullAt(0))
   }
 
   test("SQL registration: functions callable from spark.sql") {

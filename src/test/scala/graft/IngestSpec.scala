@@ -22,7 +22,7 @@ class IngestSpec extends AnyFunSuite {
   test("gcStaleSiblings judges staleness by the newest RECURSIVE mtime, not the top dir's") {
     val base = java.nio.file.Files.createTempDirectory("gcspec").toString
     def mk(name: String, nestedFreshFile: Boolean): java.io.File = {
-      val d = new java.io.File(s"$base/gate_$name/ck/offsets")
+      val d = new java.io.File(s"$base/$name/ck/offsets")
       d.mkdirs()
       val f = new java.io.File(d, "0")
       f.createNewFile()
@@ -34,13 +34,24 @@ class IngestSpec extends AnyFunSuite {
       if (nestedFreshFile) f.setLastModified(System.currentTimeMillis())
       d.getParentFile.getParentFile
     }
-    val live = mk("live", nestedFreshFile = true)   // old top, fresh checkpoint write
-    val dead = mk("dead", nestedFreshFile = false)  // old throughout
-    val keep = mk("keep", nestedFreshFile = false)  // old, but it's OUR dir
-    Shared.gcStaleSiblings(spark, base, "gate_", keep.getName)
+    val live = mk("gate_sf1_0000000a", nestedFreshFile = true)   // old top, fresh checkpoint write
+    val dead = mk("gate_sf1_0000000b", nestedFreshFile = false)  // old throughout
+    val keep = mk("gate_sf1_0000000c", nestedFreshFile = false)  // old, but it's OUR dir
+    // old throughout, but not a key after the prefix: another scale
+    // dir's landing (`sf1_skew`) and a name of another shape
+    val skew = mk("gate_sf1_skew_0000000d", nestedFreshFile = false)
+    val pid = mk("gate_sf1_4242", nestedFreshFile = false)
+    val swept = scala.collection.mutable.ArrayBuffer.empty[String]
+    Shared.gcStaleSiblings(spark, base, "gate_sf1_", keep.getName, onDelete = swept += _)
     assert(live.exists, "live gate dir (fresh nested write) was GC'd")
     assert(!dead.exists, "fully-stale sibling survived GC")
     assert(keep.exists, "own dir must never be GC'd")
+    assert(skew.exists, "another scale dir's landing matched the prefix")
+    assert(pid.exists, "a name whose key is not a fingerprint matched")
+    assert(swept.toSeq === Seq(dead.getName), "onDelete must see exactly the victims")
+    // the per-process gate dirs sweep the same way under a pid key
+    Shared.gcStaleSiblings(spark, base, "gate_sf1_", keep.getName, keyShape = "[0-9]+")
+    assert(!pid.exists && live.exists && keep.exists && skew.exists)
   }
 
   test("skewSafeDimJoin reliable variant: filesystem checkpoint, identical rows") {

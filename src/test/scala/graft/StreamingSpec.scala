@@ -823,14 +823,13 @@ class StreamingSpec extends AnyFunSuite {
     // baseline run — slices + a pinned artifact exist afterwards
     val want = graft.streaming.ClsScreen.screenReplayGate(spark, dir)
       .collect().toSeq
-    val dirPart = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val modelDir = s"${sys.props("java.io.tmpdir")}/graft_cls_src_${dirPart}_" +
-      s"${Shared.srcFingerprint(spark, dir)}/_model"
+    val modelDir = Shared.landOnce(spark, dir, "graft_cls_src")(
+      _ => fail("the baseline run left no landing")) + "/_model"
     val fs = new Path(modelDir).getFileSystem(spark.sessionState.newHadoopConf())
     assert(fs.exists(new Path(modelDir, "_PINNED")))
     // demote to the pre-round-20 layout: weights parquet at the root,
     // no marker, no weights/ subdir — what a slice dir landed by an
-    // older build leaves behind for the _SLICED guard to reuse
+    // older build leaves behind for the landing's marker to reuse
     fs.listStatus(new Path(modelDir, "weights")).foreach { st =>
       fs.rename(st.getPath, new Path(modelDir, st.getPath.getName))
     }
