@@ -285,6 +285,7 @@ object Bench {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(LocalFs.Conf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

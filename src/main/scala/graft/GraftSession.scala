@@ -25,6 +25,17 @@ import graft.functions.{CodecExpressions, TextExpressions, VectorExpressions}
   * driver processes — run catalog maintenance on one catalog
   * directory from one writer process at a time (the single-writer
   * discipline any non-transactional table format needs).
+  *
+  * Local files go through [[LocalFs]]: without the Hadoop native
+  * library, Hadoop's own local filesystem forks `chmod` for every
+  * create and `mkdirs` and `readlink` for every `FileContext` rename,
+  * so each streaming checkpoint, state-store delta and landing file
+  * cost a few child processes. [[LocalFs]] does both calls in-process
+  * and leaves the bytes, the `.crc` files and the renames as they
+  * were. A user who builds their own session with `GraftExtensions`
+  * gets the same classes by passing the two [[LocalFs.Conf]] entries
+  * as `--conf` (`spark.hadoop.fs.file.impl=graft.LocalFs$FileSystem`,
+  * `spark.hadoop.fs.AbstractFileSystem.file.impl=graft.LocalFs$Fs`).
   */
 object GraftSession {
 
@@ -45,6 +56,7 @@ object GraftSession {
       // (Tables.events retries on a clone of a foreign session)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(LocalFs.Conf)
 
   /** Build (or reuse) the session and register all engine functions. */
   def getOrCreate(appName: String = "graft"): SparkSession = {

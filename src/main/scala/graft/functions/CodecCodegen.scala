@@ -21,6 +21,20 @@ object CodecCodegen {
     try UTF8String.fromString(CodecImpl.dnsNameDecode(dns, offset))
     catch { case _: IllegalArgumentException | _: IndexOutOfBoundsException => null }
 
+  /** Null on a buffer too short for the key at its offset
+    * ([[CodecImpl.keyExtract]] throws).
+    */
+  def keyExtract(buf: Array[Byte]): Array[Byte] =
+    try CodecImpl.keyExtract(buf)
+    catch { case _: IllegalArgumentException => null }
+
+  /** Null on an empty key or a negative offset
+    * ([[CodecImpl.slidingXor]] throws).
+    */
+  def slidingXor(data: Array[Byte], key: Array[Byte], offset: Int): Array[Byte] =
+    try CodecImpl.slidingXor(data, key, offset)
+    catch { case _: IllegalArgumentException | _: IndexOutOfBoundsException => null }
+
   def dnsNameEncode(name: UTF8String): Array[Byte] =
     CodecImpl.dnsNameEncode(name.toString)
 

@@ -79,11 +79,18 @@ object CodecExpressions {
     override def prettyName: String = "size_encode"
   }
 
+  /** `key_extract(BINARY) → BINARY`; a buffer too short for the key
+    * gives null.
+    */
   case class KeyExtract(child: Expression) extends UnaryExpression {
     override def dataType: DataType = BinaryType
-    override def nullSafeEval(v: Any): Any = CodecImpl.keyExtract(v.asInstanceOf[Array[Byte]])
+    override def nullable: Boolean = true
+    override def nullSafeEval(v: Any): Any = CodecCodegen.keyExtract(v.asInstanceOf[Array[Byte]])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, b => s"$Impl.keyExtract($b)")
+      nullSafeCodeGen(ctx, ev, b => s"""
+        ${ev.value} = $Bridge.keyExtract($b);
+        if (${ev.value} == null) { ${ev.isNull} = true; }
+      """)
     override protected def withNewChildInternal(c: Expression): KeyExtract = copy(c)
     override def prettyName: String = "key_extract"
   }
@@ -97,14 +104,21 @@ object CodecExpressions {
     override def prettyName: String = "seed_xor"
   }
 
+  /** `sliding_xor(BINARY, BINARY, INT) → BINARY`; an empty key or a
+    * negative offset gives null.
+    */
   case class SlidingXor(first: Expression, second: Expression, third: Expression)
       extends TernaryExpression {
     override def dataType: DataType = BinaryType
+    override def nullable: Boolean = true
     override def nullSafeEval(d: Any, k: Any, o: Any): Any =
-      CodecImpl.slidingXor(d.asInstanceOf[Array[Byte]], k.asInstanceOf[Array[Byte]],
+      CodecCodegen.slidingXor(d.asInstanceOf[Array[Byte]], k.asInstanceOf[Array[Byte]],
         o.asInstanceOf[Int])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (d, k, o) => s"$Impl.slidingXor($d, $k, $o)")
+      nullSafeCodeGen(ctx, ev, (d, k, o) => s"""
+        ${ev.value} = $Bridge.slidingXor($d, $k, $o);
+        if (${ev.value} == null) { ${ev.isNull} = true; }
+      """)
     override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): SlidingXor =
       copy(a, b, c)
     override def prettyName: String = "sliding_xor"

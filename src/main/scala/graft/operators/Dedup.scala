@@ -287,16 +287,11 @@ object Dedup {
       .orderBy("i", "j")
   }
 
-  /** MinHash signature per doc: k independent min-hashes, realized as
+  /** MinHash signature per doc over an existing (possibly persisted)
+    * shingle table: k independent min-hashes, realized as
     * `min(md5(seed || '|' || shingle))` — md5 hex strings compare
     * identically in Spark and DuckDB, making the signature (and thus
     * the whole LSH pipeline) oracle-checkable.
-    */
-  def minhashSignatures(spark: SparkSession, dir: String, idName: String): DataFrame =
-    minhashSignaturesFrom(shingleTable(spark, dir, idName), idName)
-
-  /** Signature computation over an existing (possibly persisted)
-    * shingle table.
     */
   def minhashSignaturesFrom(sh: DataFrame, idName: String): DataFrame = {
     // hash dictionary: the k md5s are computed once per DISTINCT

@@ -1317,134 +1317,6 @@ object Similarity {
       .orderBy("query_id", "rank")
   }
 
-  /** RESIDUAL IVF-PQ (Jégou et al., TPAMI 2011 §IV-A: the IVFADC
-    * structure quantizes x − c(x), not x): each vector's PQ codes
-    * describe its offset from its IVF centroid, so the codebooks only
-    * have to cover the within-cell spread instead of the whole space —
-    * the quantization error that drives ADC ranking noise shrinks by
-    * roughly the coarse quantizer's explained variance, which is the
-    * standard next recall lever after codebook training. Ranking uses
-    * dot(q, x̂) = dot(q, c(x)) + Σ_sub dot(q_sub, cw[sub, code]): the
-    * per-(query, cell) centroid term is an nQueries × nCentroids
-    * broadcast, and the per-subspace ADC table is built from the RAW
-    * query against the residual codebooks, so query vectors are never
-    * residual-encoded.
-    *
-    * Engine-portable like the flat path: the residual subtraction is
-    * float — computed as double-subtract-of-floats narrowed back to
-    * float, which equals the direct float subtract bit-for-bit
-    * (binary64 carries ≥ 2·24+2 significand bits, so the double
-    * rounding is innocuous) and is replayed identically in the
-    * oracle's SQL; codebook sampling keys are unchanged (they hash
-    * vec_id, not values), training runs the same decimal-mean Lloyd
-    * chain on residual subvectors, and the approx score adds two exact
-    * DECIMAL(28,12) terms, so shortlists — and therefore the refined
-    * output — match the oracle exactly.
-    *
-    * Plan shape: one corpus pass assigns + subtracts (broadcast
-    * centroids, partial-agg argmax), and the residual frame is pinned
-    * via [[graft.Shared.materialize]] — training, encoding, and the
-    * candidate join all read the one materialized pass instead of
-    * re-running the assignment, the contract Verify/Bench release
-    * after the action. Everything downstream shuffles on candidate
-    * keys only, exactly like [[ivfPqTopKFrom]].
-    */
-  def ivfPqResTopK(spark: SparkSession, dir: String,
-      nQueries: Int = 8, k: Int = 10, nCentroids: Int = 16, nProbe: Int = 6,
-      nSub: Int = 8, nCodes: Int = 16, refine: Int = 15,
-      trainIters: Int = 2): DataFrame =
-    ivfPqResTopKFrom(Tables.embeddings(spark, dir), nQueries, k, nCentroids,
-      nProbe, nSub, nCodes, refine, trainIters)
-
-  /** Same operator over any (vec_id, embedding) table (spec seam). */
-  def ivfPqResTopKFrom(embeddings: DataFrame,
-      nQueries: Int = 8, k: Int = 10, nCentroids: Int = 16, nProbe: Int = 6,
-      nSub: Int = 8, nCodes: Int = 16, refine: Int = 15,
-      trainIters: Int = 2): DataFrame = {
-    requireDim(embeddings, 64)
-    val subDim = 64 / nSub
-    val subIdx = explode(array((0 until nSub).map(lit(_)): _*)).as("sub")
-    def subVec(v: Column): Column = slice(v, col("sub") * subDim + 1, lit(subDim))
-
-    // the 16-row centroid set feeds four consumers (assignment,
-    // probes, centroid term, residuals) — collected once; the frame
-    // consumers read a LocalRelation instead of re-running the sample
-    val cands = collectedCents(ivfCentroids(embeddings, nCentroids))
-    val cents = centsDF(embeddings.sparkSession, cands)
-
-    // one corpus pass: assign each vector to its argmax-dot centroid
-    // (literal argmax — a zero-shuffle projection; the former
-    // formulation paid an n×k explode, a SortAggregate and a centroid
-    // re-join) and subtract via a literal cid→ce lookup —
-    // (vec_id, cid, embedding=residual), materialized
-    val ceOf = element_at(typedLit(cands.toMap), col("cid"))
-    val res = Shared.materialize(
-      withAssignedCidLit(embeddings, cands)
-        .select(col("vec_id"), col("cid"),
-          zip_with(col("embedding"), ceOf, (a, b) =>
-            (a.cast("double") - b.cast("double")).cast("float"))
-            .as("embedding")))
-
-    val cwLit = collectedCw(
-      if (trainIters > 0)
-        pqCodebooksTrained(res.select("vec_id", "embedding"), nSub, nCodes, trainIters)
-      else pqCodebooksSampled(res.select("vec_id", "embedding"), nSub, nCodes))
-    val cw = cwDF(embeddings.sparkSession, cwLit)
-
-    // encode RESIDUAL subvectors against the residual codebooks
-    // (literal argmax — no explode, no aggregate)
-    val vsubs = res.select(col("vec_id"), col("embedding"), subIdx)
-      .select(col("vec_id"), col("sub"), subVec(col("embedding")).as("vs"))
-    val codes = vsubs.select(col("vec_id"), col("sub"),
-      pqNearestStruct(cwLit, col("sub"), col("vs")).getField("cid").as("code"))
-
-    // ADC parts from the RAW query subvectors (dot(q, ĉ+r̂) splits
-    // into the centroid term + raw-query·residual-codeword parts)
-    val adc = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding"), subIdx)
-      .select(col("query_id"), col("sub"), subVec(col("embedding")).as("qs"))
-      .join(broadcast(cw), "sub")
-      .select(col("query_id"), col("sub"), col("cw_id").as("code"),
-        dotDouble(col("qs"), col("cw")).cast("decimal(28,12)").as("part"))
-
-    // per-(query, cell) centroid term + probe ranking off one frame
-    val qc = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q"))
-      .crossJoin(broadcast(cents))
-      .select(col("query_id"), col("cid"),
-        dotDouble(col("q"), col("ce")).as("cdot"),
-        dotDouble(col("q"), col("ce")).cast("decimal(28,12)").as("qc"))
-    val wQ = Window.partitionBy("query_id").orderBy(col("cdot").desc, col("cid"))
-    val probes = qc.withColumn("_r", row_number().over(wQ))
-      .filter(col("_r") <= nProbe).select("query_id", "cid")
-
-    val cand = probes.join(res.select("vec_id", "cid"), "cid")
-      .filter(col("query_id") =!= col("vec_id"))
-      .select("query_id", "vec_id", "cid")
-
-    val approx = cand.join(codes, "vec_id")
-      .join(broadcast(adc), Seq("query_id", "sub", "code"))
-      .groupBy("query_id", "vec_id")
-      .agg(sum(col("part")).as("rsum"), max(col("cid")).as("cid"))
-      .join(broadcast(qc.select("query_id", "cid", "qc")), Seq("query_id", "cid"))
-      .withColumn("adcs", col("rsum") + col("qc"))
-    val wA = Window.partitionBy("query_id").orderBy(col("adcs").desc, col("vec_id"))
-    val short = approx.withColumn("_r", row_number().over(wA))
-      .filter(col("_r") <= refine * k).select("query_id", "vec_id")
-
-    // exact decimal re-rank of the ADC short list (identical tail)
-    val qv = embeddings.select(col("vec_id").as("query_id"), col("embedding").as("q"))
-    val cv = embeddings.select(col("vec_id"), col("embedding").as("v"))
-    val w = Window.partitionBy("query_id").orderBy(col("dot").desc, col("vec_id"))
-    short.join(qv, "query_id").join(cv, "vec_id")
-      .withColumn("dot", dotDecimal(col("q"), col("v")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"),
-        round(col("dot"), 6).cast("double").as("score"))
-      .orderBy("query_id", "rank")
-  }
-
   /** Bucket-count sizing for the fixed-width hyperplane tables — the
     * PLANS.md sizing rule as code. Each table has 2^nPlanes buckets,
     * so expected occupancy n/2^nPlanes grows linearly with the corpus

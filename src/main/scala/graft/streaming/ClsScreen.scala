@@ -96,10 +96,7 @@ object ClsScreen {
         throw new IllegalStateException(
           s"model artifact at $modelDir is not _PINNED (half-written or " +
             s"mid-swap) — refusing to score batch $batchId")
-      val wPath =
-        if (fs.exists(new Path(modelDir, "weights"))) s"$modelDir/weights"
-        else modelDir // legacy weights-at-root layout
-      val scored = Classifier.scoreWith(batch, s.read.parquet(wPath), buckets)
+      val scored = Classifier.scoreWith(batch, s.read.parquet(s"$modelDir/weights"), buckets)
       val out =
         if (fs.exists(new Path(modelDir, "cut"))) {
           val cut = s.read.parquet(s"$modelDir/cut")
@@ -129,21 +126,13 @@ object ClsScreen {
   def screenReplayGate(spark: SparkSession, dir: String): DataFrame = {
     val docs = graft.Tables.documents(spark, dir).select("doc_id", "text")
     val hist = docs.filter(col("doc_id") < 250)
-    def land(sd: String): Unit = landModel(Classifier.pinnedWeights(hist,
-      col("doc_id") % 10 === 0, col("doc_id") % 10 === 5), s"$sd/_model")
     // the pinned artifact lands with the slices, keyed by the same
     // content fingerprint: a testdata regen re-trains it
     val srcDir = graft.Shared.landOnce(spark, dir, "graft_cls_src") { sd =>
       ReplayGate.writeSlices(docs.filter(col("doc_id") >= 250), "doc_id")(sd)
-      land(sd)
+      landModel(Classifier.pinnedWeights(hist,
+        col("doc_id") % 10 === 0, col("doc_id") % 10 === 5), s"$sd/_model")
     }
-    // layout migration: slices landed by a pre-_PINNED build carry a
-    // weights-at-root artifact with no marker — re-land it through
-    // the staged-rename discipline (weights derive deterministically
-    // from the history, so this is a pure re-materialization)
-    val pin = new Path(s"$srcDir/_model/_PINNED")
-    if (!pin.getFileSystem(spark.sessionState.newHadoopConf()).exists(pin))
-      land(srcDir)
     val base = ReplayGate.gateBase(spark, dir, "graft_cls_gate")
     classifierScreen(spark, srcDir, docs.schema, s"$srcDir/_model",
       s"$base/sink", s"$base/ck")

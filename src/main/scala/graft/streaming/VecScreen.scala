@@ -129,8 +129,8 @@ object VecScreen {
   }
 
   /** Streaming SemDeDup screen — the ingest loop of
-    * [[graft.operators.Similarity.semanticScreenFrom]] over the
-    * LANDED semantic catalog: history is assigned once into
+    * [[graft.operators.Similarity.semanticScreenFrom]] over an
+    * already-LANDED semantic catalog: history is assigned once into
     * [[SemCatalog]]'s cid-bucketed cells with its centroid geometry
     * persisted and PINNED (a later arrival can never displace a seed
     * and shift earlier verdicts); each micro-batch screens against
@@ -148,20 +148,8 @@ object VecScreen {
     * verdicts are inherently order-dependent (the later copy flags),
     * so the pinned parity contract is stream == the sequential
     * per-batch loop — StreamingSpec asserts it file-by-file, plus
-    * checkpoint-replay idempotence.
-    */
-  def semanticScreen(spark: SparkSession, srcDir: String, schema: StructType,
-      histEmb: DataFrame, sinkDir: String, checkpointDir: String,
-      nCentroids: Int = 16, threshold: Double = 0.95,
-      maxFilesPerTrigger: Int = 1): Unit = {
-    val cat = SemCatalog.land(spark, histEmb,
-      s"sem_${DocScreen.canonical(spark, checkpointDir)}", nCentroids)
-    semanticScreenAgainstCatalog(spark, srcDir, schema, cat, sinkDir,
-      checkpointDir, threshold, maxFilesPerTrigger)
-  }
-
-  /** The production entry point: semantic-screen against an
-    * already-landed [[SemCatalog]] (history landed out-of-band).
+    * checkpoint-replay idempotence. The history is landed out-of-band
+    * (`SemCatalog.land`) and passed in as `cat`.
     */
   def semanticScreenAgainstCatalog(spark: SparkSession, srcDir: String,
       schema: StructType, cat: LandedCatalog.Handle,

@@ -93,12 +93,22 @@ class CodecExprSpec extends AnyFunSuite {
     val bthp = when(col("id") === 0, bin(Array[Byte](1, 2, 0)))
       .when(col("id") === 1, bin(Array[Byte](1, 2, 0, 14, 0, 0, 0, 0, 0, 0, 0, 0, 2)))
       .otherwise(bin(CodecImpl.bthpFrame("x".getBytes, 5L, "9.8.7.6")))
+    // key_extract: a buffer under 17 bytes; 17 bytes whose first byte
+    // puts the key at offset 14 (needs 31); a well-formed 32-byte buffer
+    val keyBuf = Array.tabulate[Byte](32)(i => (i * 7 + 1).toByte)
+    val kbuf = when(col("id") === 0, bin(Array[Byte](1, 2, 3, 4, 5)))
+      .when(col("id") === 1, bin(Array.tabulate[Byte](17)(i => if (i == 0) 11 else i.toByte)))
+      .otherwise(bin(keyBuf))
+    // sliding_xor: an empty key; a negative offset; a well-formed call
+    val xkey = when(col("id") === 0, bin(Array.empty[Byte])).otherwise(bin("ab".getBytes))
+    val xoff = when(col("id") === 1, lit(-1)).otherwise(lit(3))
     val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
     for (mode <- Seq(Seq("false", "NO_CODEGEN"), Seq("true", "CODEGEN_ONLY"))) {
       keys.zip(mode).foreach { case (k, v) => spark.conf.set(k, v) }
       try withClue(mode) {
         val q = spark.range(4).select(col("id"), CE.tlv_decode(raw).as("f"),
-          CE.dns_name_decode(dns, dnsOffset).as("n"), CE.bthp_strip(bthp).as("h"))
+          CE.dns_name_decode(dns, dnsOffset).as("n"), CE.bthp_strip(bthp).as("h"),
+          CE.key_extract(kbuf).as("k"), CE.sliding_xor(bin("xyz".getBytes), xkey, xoff).as("x"))
         assert(q.queryExecution.executedPlan.toString.contains("*(") === (mode.head == "true"))
         val got = q.orderBy("id").collect()
         assert(got.take(2).forall(_.isNullAt(1)), "truncated frame did not decode to null")
@@ -107,12 +117,20 @@ class CodecExprSpec extends AnyFunSuite {
         assert(got(2).getString(2) === "ab.c")
         assert(got.take(2).forall(_.isNullAt(3)), "truncated BTHP envelope did not decode to null")
         assert(got(2).getStruct(3).getAs[Long]("proxy_id") === 5L)
+        assert(got.take(2).forall(_.isNullAt(4)), "short key buffer did not decode to null")
+        assert(got(2).getAs[Array[Byte]](4).toSeq === CodecImpl.keyExtract(keyBuf).toSeq)
+        assert(got.take(2).forall(_.isNullAt(5)), "empty key or negative offset did not give null")
+        assert(got(2).getAs[Array[Byte]](5).toSeq ===
+          CodecImpl.slidingXor("xyz".getBytes, "ab".getBytes, 3).toSeq)
       } finally keys.foreach(spark.conf.unset)
     }
     // the SQL form from the bug report (constant-folded, interpreted)
     assert(spark.sql("SELECT tlv_decode(unhex('0001000A4142')) AS f").head().isNullAt(0))
     assert(spark.sql("SELECT dns_name_decode(unhex('C000'), 0) AS n").head().isNullAt(0))
     assert(spark.sql("SELECT bthp_strip(unhex('010200')) AS h").head().isNullAt(0))
+    assert(spark.sql("SELECT key_extract(unhex('0102')) AS k").head().isNullAt(0))
+    assert(spark.sql("SELECT sliding_xor(unhex('41'), unhex(''), 0) AS x").head().isNullAt(0))
+    assert(spark.sql("SELECT sliding_xor(unhex('41'), unhex('4243'), -1) AS x").head().isNullAt(0))
   }
 
   test("SQL registration: functions callable from spark.sql") {

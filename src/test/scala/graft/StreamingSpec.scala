@@ -818,34 +818,6 @@ class StreamingSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
-  test("screenReplayGate migrates a legacy (unpinned, weights-at-root) artifact in place") {
-    import org.apache.hadoop.fs.Path
-    // baseline run — slices + a pinned artifact exist afterwards
-    val want = graft.streaming.ClsScreen.screenReplayGate(spark, dir)
-      .collect().toSeq
-    val modelDir = Shared.landOnce(spark, dir, "graft_cls_src")(
-      _ => fail("the baseline run left no landing")) + "/_model"
-    val fs = new Path(modelDir).getFileSystem(spark.sessionState.newHadoopConf())
-    assert(fs.exists(new Path(modelDir, "_PINNED")))
-    // demote to the pre-round-20 layout: weights parquet at the root,
-    // no marker, no weights/ subdir — what a slice dir landed by an
-    // older build leaves behind for the landing's marker to reuse
-    fs.listStatus(new Path(modelDir, "weights")).foreach { st =>
-      fs.rename(st.getPath, new Path(modelDir, st.getPath.getName))
-    }
-    fs.delete(new Path(modelDir, "weights"), true)
-    fs.delete(new Path(modelDir, "_PINNED"), false)
-    // the gate must detect the unpinned artifact, re-land it through
-    // the staged-rename discipline, and produce the identical result
-    val got = graft.streaming.ClsScreen.screenReplayGate(spark, dir)
-      .collect().toSeq
-    assert(got == want, "migration changed the screen verdicts")
-    assert(fs.exists(new Path(modelDir, "_PINNED")), "migration left the artifact unpinned")
-    assert(fs.exists(new Path(modelDir, "weights")), "migration left the legacy layout")
-    graft.Shared.releaseAll(spark)
-    spark.catalog.clearCache()
-  }
-
   test("a model artifact without _PINNED fails the batch loudly; landModel swaps atomically") {
     import java.nio.file.Files
     val docs = Tables.documents(spark, dir)
