@@ -13,11 +13,6 @@ import org.apache.spark.sql.graft.SessionClone
   */
 object Tables {
 
-  /** Names of the driver tables, in a stable order. */
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   def region(spark: SparkSession, dir: String): DataFrame    = spark.read.parquet(path(dir, "region"))

@@ -2,7 +2,7 @@ package graft.examples
 
 import org.apache.spark.sql.functions._
 import graft.{GraftSession, Tables}
-import graft.functions.{CodecExpressions => CE, TextExpressions => TE}
+import graft.functions.{CodecExpressions => CE}
 import graft.operators.{Dedup, LangModel, Mixer, Similarity}
 import graft.plans.BeaconPipeline
 
@@ -172,7 +172,6 @@ object Quickstart {
     println(s"good=${r.good.count()} bad=${r.bad.count()} " +
       s"processes=${r.processes.count()} sockets=${r.sockets.count()}")
 
-    val unused = TE // keep import surface visible in the example
     spark.stop()
   }
 }

@@ -11,11 +11,11 @@ package graft.functions
   * "BPE-ish pretokens" count the same text boundaries.
   *
   * The merge table is FROZEN TRAINER OUTPUT, not hand-authored: it
-  * is exactly `TextImpl.bpeTrain(seedCorpus, nMerges)` over the
-  * committed [[seedCorpus]] (GoldenVectorSpec pins the equality), so
-  * greedy min-rank encoding reproduces the training dynamics —
-  * space-prefixed word tokens like " table" genuinely form, the way
-  * a real trained vocabulary behaves. Freezing (rather than training
+  * is exactly what the byte-level BPE trainer makes of a committed
+  * seed corpus (both live in the test tree, where GoldenVectorSpec
+  * pins the equality), so greedy min-rank encoding reproduces the
+  * training dynamics — space-prefixed word tokens like " table"
+  * genuinely form, the way a real trained vocabulary behaves. Freezing (rather than training
   * at session start) is the production contract: a tokenizer is a
   * versioned artifact — token ids must be stable across runs, or
   * every token count, budget, and packed sequence in the lake
@@ -35,31 +35,8 @@ object BpeVocab {
     */
   val pretokenPattern: String = " ?[a-z]+| ?[0-9]+| ?[^a-z0-9\\s]+|\\s+"
 
-  /** Committed training seed: the synthetic corpus' vocabulary in
-    * running English prose (plus digit/punct/whitespace material so
-    * those pretoken classes get merges too). Fixed text — the merge
-    * table derives from it deterministically and is frozen below.
-    */
-  val seedCorpus: String =
-    ("the query engine reads the table and the part table with a hash join " +
-      "the scan is fast and the filter is cheap a slow scan reads all the data " +
-      "the window sort orders the batch by key and value the stream writes a row " +
-      "group by key with the agg over the window the customer line item table " +
-      "joins the order table on the key the spark plan merges small batches " +
-      "a big sort spills the small sort stays in memory the column store scans " +
-      "fast the row store scans slow the vector value is dense the merge is " +
-      "stable and the data is clean the line count and the part count agree " +
-      "the batch window and the sort window agree the fast path and the slow " +
-      "path agree the query group and the value group agree " +
-      "in 1995 and 2020 the count was 1000 and 100 and 19 and 20 " +
-      "a == b and a != b and http://example -- yes... no... maybe...\n\n" +
-      "the table scan\n\nthe hash join\n\nthe merge sort\n\n") * 2
-
-  /** Number of merges the frozen table carries. */
-  val nMerges: Int = 160
-
   /** The frozen merge table: (left id, right id) in rank order —
-    * EXACTLY `TextImpl.bpeTrain(seedCorpus, nMerges)` (spec-pinned).
+    * EXACTLY the trainer's output over the seed corpus (spec-pinned).
     * Merge i creates token id 256 + i.
     */
   val merges: Vector[(Int, Int)] = Vector(
@@ -90,20 +67,6 @@ object BpeVocab {
     (111, 396), (111, 399), (112, 270), (114, 295), (114, 393), (115, 101),
     (115, 116), (116, 112), (116, 264), (116, 343), (116, 403), (116, 407),
     (117, 406), (118, 264), (121, 115), (259, 389))
-
-  /** (left, right) -> rank (0-based). */
-  lazy val ranks: Map[(Int, Int), Int] =
-    merges.iterator.zipWithIndex.map { case (p, i) => p -> i }.toMap
-
-  /** Token id -> its byte spelling (base bytes + merged spellings). */
-  lazy val spelling: Map[Int, Array[Byte]] = {
-    val m = scala.collection.mutable.Map[Int, Array[Byte]]()
-    (0 until 256).foreach(b => m(b) = Array(b.toByte))
-    merges.zipWithIndex.foreach { case ((a, b), i) =>
-      m(256 + i) = m(a) ++ m(b)
-    }
-    m.toMap
-  }
 
   /** Fast rank lookup table keyed by a*1024+b (ids < 1024 — checked
     * at init). -1 = pair not in the table. ~4 MB, built once.

@@ -14,6 +14,23 @@ object CodecCodegen {
   def macFormat(b: Array[Byte]): UTF8String =
     UTF8String.fromString(CodecImpl.macFormat(b))
 
+  /** Null on a key that is not 16 bytes ([[CodecImpl.xteaEncrypt]] throws). */
+  def xteaEncrypt(data: Array[Byte], key: Array[Byte]): Array[Byte] =
+    try CodecImpl.xteaEncrypt(data, key)
+    catch { case _: IllegalArgumentException => null }
+
+  /** Null on a key that is not 16 bytes ([[CodecImpl.xteaDecrypt]] throws). */
+  def xteaDecrypt(data: Array[Byte], key: Array[Byte]): Array[Byte] =
+    try CodecImpl.xteaDecrypt(data, key)
+    catch { case _: IllegalArgumentException => null }
+
+  /** Null on a key that is not 32 bytes ([[CodecImpl.aesFrameDecode]]
+    * throws), besides the frames it rejects itself.
+    */
+  def aesFrameDecode(frame: Array[Byte], key: Array[Byte], maxLen: Int): Array[Byte] =
+    try CodecImpl.aesFrameDecode(frame, key, CodecImpl.sessionIv(key), maxLen)
+    catch { case _: IllegalArgumentException => null }
+
   /** Null on a truncated label or pointer, a pointer loop or an
     * offset outside the message ([[CodecImpl.dnsNameDecode]] throws).
     */

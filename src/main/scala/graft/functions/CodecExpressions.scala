@@ -21,10 +21,6 @@ object CodecExpressions {
   private val Impl = "graft.functions.CodecImpl"
   private val Bridge = "graft.functions.CodecCodegen"
 
-  abstract class BinaryCodec extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = BinaryType
-  }
-
   case class Crc16(child: Expression) extends UnaryExpression {
     override def dataType: DataType = IntegerType
     override def nullSafeEval(v: Any): Any = CodecImpl.crc16(v.asInstanceOf[Array[Byte]])
@@ -43,22 +39,36 @@ object CodecExpressions {
     override def prettyName: String = "ip_cksum"
   }
 
+  /** `xtea_encrypt(BINARY, BINARY) → BINARY`; a key that is not 16
+    * bytes gives null.
+    */
   case class XteaEncrypt(left: Expression, right: Expression) extends BinaryExpression {
     override def dataType: DataType = BinaryType
+    override def nullable: Boolean = true
     override def nullSafeEval(d: Any, k: Any): Any =
-      CodecImpl.xteaEncrypt(d.asInstanceOf[Array[Byte]], k.asInstanceOf[Array[Byte]])
+      CodecCodegen.xteaEncrypt(d.asInstanceOf[Array[Byte]], k.asInstanceOf[Array[Byte]])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (d, k) => s"$Impl.xteaEncrypt($d, $k)")
+      nullSafeCodeGen(ctx, ev, (d, k) => s"""
+        ${ev.value} = $Bridge.xteaEncrypt($d, $k);
+        if (${ev.value} == null) { ${ev.isNull} = true; }
+      """)
     override protected def withNewChildrenInternal(l: Expression, r: Expression): XteaEncrypt = copy(l, r)
     override def prettyName: String = "xtea_encrypt"
   }
 
+  /** `xtea_decrypt(BINARY, BINARY) → BINARY`; a key that is not 16
+    * bytes gives null.
+    */
   case class XteaDecrypt(left: Expression, right: Expression) extends BinaryExpression {
     override def dataType: DataType = BinaryType
+    override def nullable: Boolean = true
     override def nullSafeEval(d: Any, k: Any): Any =
-      CodecImpl.xteaDecrypt(d.asInstanceOf[Array[Byte]], k.asInstanceOf[Array[Byte]])
+      CodecCodegen.xteaDecrypt(d.asInstanceOf[Array[Byte]], k.asInstanceOf[Array[Byte]])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (d, k) => s"$Impl.xteaDecrypt($d, $k)")
+      nullSafeCodeGen(ctx, ev, (d, k) => s"""
+        ${ev.value} = $Bridge.xteaDecrypt($d, $k);
+        if (${ev.value} == null) { ${ev.isNull} = true; }
+      """)
     override protected def withNewChildrenInternal(l: Expression, r: Expression): XteaDecrypt = copy(l, r)
     override def prettyName: String = "xtea_decrypt"
   }
@@ -682,21 +692,19 @@ object CodecExpressions {
   }
 
   /** Session-frame decrypt (`crypto.c:286-384`): frame + key +
-    * max-length → payload, or NULL when the frame is not a 16-byte
-    * multiple or its embedded length fails the `len <= bufsize`
-    * validation — the reference's -1 error paths surfaced as SQL null
-    * for error routing.
+    * max-length → payload, or NULL when the key is not 32 bytes, the
+    * frame is not a 16-byte multiple or its embedded length fails the
+    * `len <= bufsize` validation — the reference's -1 error paths
+    * surfaced as SQL null for error routing.
     */
   case class AesFrameDecode(first: Expression, second: Expression, third: Expression)
       extends TernaryExpression with ImplicitCastInputTypes with CodegenFallback {
     override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType, IntegerType)
     override def dataType: DataType = BinaryType
     override def nullable: Boolean = true
-    override def nullSafeEval(f: Any, k: Any, m: Any): Any = {
-      val key = k.asInstanceOf[Array[Byte]]
-      CodecImpl.aesFrameDecode(f.asInstanceOf[Array[Byte]], key,
-        CodecImpl.sessionIv(key), m.asInstanceOf[Int])
-    }
+    override def nullSafeEval(f: Any, k: Any, m: Any): Any =
+      CodecCodegen.aesFrameDecode(f.asInstanceOf[Array[Byte]], k.asInstanceOf[Array[Byte]],
+        m.asInstanceOf[Int])
     override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): AesFrameDecode =
       copy(f, s, t)
     override def prettyName: String = "aes_frame_decode"

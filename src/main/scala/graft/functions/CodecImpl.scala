@@ -161,7 +161,9 @@ object CodecImpl {
   }
 
   /** Seed-XOR obfuscation: byte0 is the seed (0 promoted to 0xFF),
-    * bytes 1..n XOR seed (`client/trigger_protocols.c:213-227`).
+    * bytes 1..n XOR seed (`client/trigger_protocols.c:213-227`). It is
+    * its own inverse: the receiver (`server/trigger_payload.c:113-115`)
+    * applies the same XOR.
     */
   def seedXor(payload: Array[Byte]): Array[Byte] = {
     if (payload.isEmpty) return payload
@@ -172,11 +174,6 @@ object CodecImpl {
     while (i < out.length) { out(i) = (out(i) ^ seed).toByte; i += 1 }
     out
   }
-
-  /** Inverse of [[seedXor]] (`server/trigger_payload.c:113-115`): XOR
-    * bytes 1..n with byte0, keeping byte0 in place.
-    */
-  def seedUnxor(packet: Array[Byte]): Array[Byte] = seedXor(packet)
 
   /** Sliding-key XOR: payload XORed with `key.length` bytes of `key`
     * starting at `crc % (keyWindow - payloadLen)`
@@ -949,9 +946,6 @@ object CodecImpl {
     */
   def macFormat(mac: Array[Byte]): String =
     mac.map(b => f"${b & 0xFF}%02x").mkString("-")
-
-  /** Bitwise-NOT string scramble (`common/strings/string_utils.c:16-24`). */
-  def scramble(bytes: Array[Byte]): Array[Byte] = bytes.map(b => (~b).toByte)
 
   // ------------------------------------------------ bzip2 wire codec
 

@@ -108,67 +108,13 @@ object TextImpl {
         else env.getOrElse(Option(m.group(2)).getOrElse(m.group(3)), "")))
   }
 
-  /** The compiled pretokenizer, built once per JVM and shared by
-    * [[bpeTrain]] and [[bpeEncode]] — the encode path runs once per
-    * row inside a codegen'd expression, so per-row work must be
-    * matcher creation only, never Pattern compilation.
+  /** The compiled pretokenizer, built once per JVM for [[bpeEncode]]
+    * — the encode path runs once per row inside a codegen'd
+    * expression, so per-row work must be matcher creation only, never
+    * Pattern compilation.
     */
   private val pretokenRegex: java.util.regex.Pattern =
     java.util.regex.Pattern.compile(BpeVocab.pretokenPattern)
-
-  /** Byte-level BPE trainer (Sennrich et al. 2016 alg. 1 over the
-    * Radford et al. 2019 byte alphabet): pretokenize with
-    * [[BpeVocab.pretokenPattern]], count pretoken frequencies, then
-    * repeatedly merge the most frequent adjacent token pair — all
-    * occurrences, left-to-right non-overlapping — creating token id
-    * 256+rank. Tie-break: (count desc, left id asc, right id asc),
-    * fully deterministic. Returns the (left, right) merge list in
-    * rank order. Used ONCE to produce the frozen committed table in
-    * [[BpeVocab.merges]] (spec-pinned equal); kept as a library
-    * operator so a user can train a domain vocabulary on their own
-    * seed and freeze it the same way.
-    */
-  def bpeTrain(corpus: String, nMerges: Int): Vector[(Int, Int)] = {
-    val m = pretokenRegex.matcher(corpus)
-    val freq = scala.collection.mutable.Map[Vector[Int], Long]()
-    while (m.find()) {
-      val w = m.group().getBytes("UTF-8").map(_ & 0xFF).toVector
-      freq(w) = freq.getOrElse(w, 0L) + 1L
-    }
-    var words = freq.toVector.sortBy(_._1.mkString(","))
-    val out = Vector.newBuilder[(Int, Int)]
-    var next = 256
-    var k = 0
-    var exhausted = false
-    while (k < nMerges && !exhausted) {
-      val pc = scala.collection.mutable.Map[(Int, Int), Long]()
-      words.foreach { case (w, f) =>
-        var i = 0
-        while (i < w.length - 1) {
-          val p = (w(i), w(i + 1)); pc(p) = pc.getOrElse(p, 0L) + f; i += 1
-        }
-      }
-      if (pc.isEmpty) exhausted = true
-      else {
-        val best = pc.toVector.minBy { case ((a, b), c) => (-c, a, b) }._1
-        out += best
-        words = words.map { case (w, f) => (mergeAll(w, best, next), f) }
-        next += 1
-        k += 1
-      }
-    }
-    out.result()
-  }
-
-  private def mergeAll(w: Vector[Int], p: (Int, Int), nid: Int): Vector[Int] = {
-    val b = Vector.newBuilder[Int]
-    var i = 0
-    while (i < w.length) {
-      if (i < w.length - 1 && w(i) == p._1 && w(i + 1) == p._2) { b += nid; i += 2 }
-      else { b += w(i); i += 1 }
-    }
-    b.result()
-  }
 
   /** Byte-level BPE encode under the frozen [[BpeVocab]] table:
     * pretokenize, then within each pretoken repeatedly merge the
@@ -203,14 +149,6 @@ object TextImpl {
       out ++= seq
     }
     out.toArray
-  }
-
-  /** Inverse of [[bpeEncode]] (lossless by construction: spellings
-    * concatenate back to the original pretoken bytes).
-    */
-  def bpeDecode(ids: Seq[Int]): String = {
-    val bytes = ids.iterator.flatMap(BpeVocab.spelling(_)).toArray
-    new String(bytes, "UTF-8")
   }
 
   /** Tie-break precedence of the language identifier (earliest wins on

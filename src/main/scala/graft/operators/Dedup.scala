@@ -741,17 +741,6 @@ object Dedup {
         count(lit(1)).as("n_matches"))
       .orderBy("doc_id")
 
-  /** SimHash near-dup pairs over the engine-native fnv1a signatures —
-    * the banded pair join composed with `simhash` (the engine-native
-    * twin of minhashLsh).
-    */
-  def simhashPairs(spark: SparkSession, dir: String, maxHamming: Int = 3): DataFrame = {
-    val ts = TextOps.tokens(col("text"))
-    val sig = Tables.documents(spark, dir)
-      .select(col("doc_id"), TextExpressions.simhash64(ts).as("sh"))
-    simhashPairsFrom(sig, maxHamming)
-  }
-
   /** Positional k-grams: one row per gram OCCURRENCE with its 0-based
     * token offset (unlike [[shinglesOf]], which is distinct-per-doc —
     * span detection needs every occurrence and its position).

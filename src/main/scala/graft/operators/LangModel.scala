@@ -15,13 +15,9 @@ import graft.Tables
   * corpus), same downstream use (head/middle/tail quality cuts via
   * the calibration machinery behind tx_quality_threshold).
   *
-  * Two scoring surfaces:
-  *  - [[lmScore]]: integer-exact average trigram probability
-  *    (scaled by 1e9, floor-divided) — engine-portable to the bit,
-  *    the driver-gate surface.
-  *  - [[lmPerplexity]]: the classic log-space perplexity
-  *    exp(−mean ln P) in doubles — the operational measure, spec'd
-  *    with tolerance instead of hash-checked.
+  * The scoring surface is [[lmScore]]: integer-exact average trigram
+  * probability (scaled by 1e9, floor-divided) — engine-portable to
+  * the bit, the driver-gate surface.
   *
   * Scale shape: the model is VOCABULARY-sized (≤ alphabet³ contexts —
   * a few thousand rows for lowercased text), aggregated with one
@@ -108,24 +104,5 @@ object LangModel {
       .select(col("doc_id"), col("n_tri"),
         expr("sp div n_tri").as("avg_p_e9"))
       .orderBy("doc_id")
-  }
-
-  /** Log-space perplexity exp(−mean ln P) per document under the same
-    * model — the operational CCNet measure (lower = more reference-
-    * like). Double-valued: use [[lmScoreFrom]] where cross-engine
-    * hash-exactness is required.
-    */
-  def lmPerplexityFrom(docs: DataFrame, trainMod: Int = 10): DataFrame = {
-    val (m3, m2, v) = model(docs.filter(col("doc_id") % trainMod === 0))
-    charTrigrams(docs)
-      .join(broadcast(m3), Seq("ctx", "nxt"), "left")
-      .join(broadcast(m2), Seq("ctx"), "left")
-      .crossJoin(broadcast(v))
-      .select(col("doc_id"),
-        log((coalesce(col("n3"), lit(0L)) + 1).cast("double") /
-          (coalesce(col("n2"), lit(0L)) + col("vsz")).cast("double")).as("lp"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_tri"), avg(col("lp")).as("mlp"))
-      .select(col("doc_id"), col("n_tri"), exp(-col("mlp")).as("perplexity"))
   }
 }

@@ -10,7 +10,7 @@ import graft.functions.CodecImpl
   * stage — the Scala analog of a `mapInPandas` decode pipeline.
   *
   * The actual media decode is a STUB (no image/audio libs in this
-  * environment): `decodeStub` derives deterministic fake
+  * environment): [[decodeFrames]] derives deterministic fake
   * width/height/frame data from the payload bytes. Everything around
   * it is real and load-bearing — the binary schema, the typed
   * Dataset boundary, the batched iterator shape a native decoder
@@ -32,14 +32,6 @@ object Multimodal {
       height: Int,    // STUB
       n_frames: Int,  // STUB: frame count for video-like payloads
       frame_crcs: Seq[Int]) // STUB: per-sampled-frame checksum
-
-  /** Media table over the synthetic corpus: text bytes as payload. */
-  def mediaTable(spark: SparkSession, dir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text").cast("binary").as("payload"))
-      .as[MediaRow]
-  }
 
   /** Row shape at the decode seam: payload plus the byte-level facts
     * (nbytes, crc) already computed by codegen'd expressions — the
@@ -64,12 +56,6 @@ object Multimodal {
       .map(off => CodecImpl.crc16(java.util.Arrays.copyOfRange(b, off, math.min(n, off + step))))
     MediaMeta(doc_id, nbytes, crc, width, height, nFrames, frameCrcs)
   }
-
-  /** Whole-record reference decode (spec ground truth): the same
-    * result the split pipeline produces, computed directly.
-    */
-  def decodeStub(r: MediaRow): MediaMeta =
-    decodeFrames(r.doc_id, r.payload, r.payload.length.toLong, CodecImpl.crc16(r.payload))
 
   /** Batched decode over partitions: payloads are processed in
     * fixed-size batches (the `mapInPandas` batch shape) so a native

@@ -10,15 +10,13 @@ import org.apache.spark.sql.functions._
   * (the reference's `default: continue`).
   *
   * Batch realization: groupByKey + sorted in-group fold (mapGroups) —
-  * one shuffle on session_id, state O(1) per session. The streaming
-  * twin is the same fold inside flatMapGroupsWithState.
+  * one shuffle on session_id, state O(1) per session.
   */
 object Sessions {
 
   // opcodes (client_session.h:64-72)
   val Upload = 1; val Execute = 2; val Download = 4; val Delete = 5
   val Shutdown = 6; val Shell = 8; val Exit = 10
-  val known: Set[Int] = Set(Upload, Execute, Download, Delete, Shutdown, Shell, Exit)
 
   case class Command(session_id: String, seq: Int, opcode: Int, path: String, size: Long)
 
@@ -58,48 +56,6 @@ object Sessions {
     val spark = commands.sparkSession
     import spark.implicits._
     commands.groupByKey(_.session_id).mapGroups((id, it) => replayOne(id, it))
-  }
-
-  /** Streaming replay: the same fold kept as per-session state across
-    * micro-batches (flatMapGroupsWithState, Update mode) — emits the
-    * session's current summary after every batch that touches it.
-    * Commands may arrive across batches in any inter-batch order; the
-    * fold applies each batch's commands in seq order on top of the
-    * accumulated state, so parity with batch holds when batches
-    * arrive seq-ordered (the transport's ACK contract).
-    */
-  def replayStream(commands: Dataset[Command]): Dataset[SessionSummary] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = commands.sparkSession
-    import spark.implicits._
-    commands.groupByKey(_.session_id)
-      .flatMapGroupsWithState[SessionSummary, SessionSummary](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (id: String, batch: Iterator[Command], state: GroupState[SessionSummary]) =>
-          val prev = state.getOption.getOrElse(
-            SessionSummary(id, 0, 0, 0L, 0L, 0, 0, terminated = false, -1))
-          var n = prev.n_commands; var ignored = prev.n_ignored
-          var up = prev.bytes_up; var down = prev.bytes_down
-          var exec = prev.executed; var del = prev.deleted
-          var term = prev.terminated; var lastSeq = prev.last_seq
-          batch.toSeq.sortBy(_.seq).foreach { c =>
-            n += 1
-            if (!term) {
-              lastSeq = c.seq
-              c.opcode match {
-                case Upload   => up += c.size
-                case Download => down += c.size
-                case Execute | Shell => exec += 1
-                case Delete   => del += 1
-                case Shutdown | Exit => term = true
-                case _        => ignored += 1
-              }
-            }
-          }
-          val now = SessionSummary(id, n, ignored, up, down, exec, del, term, lastSeq)
-          state.update(now)
-          Iterator(now)
-      }
   }
 
   /** Gap sessionization, DAY-SHARDED for hot keys — the scale path

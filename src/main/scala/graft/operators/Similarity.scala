@@ -109,7 +109,7 @@ object Similarity {
     * limit before the exchange — ≤ rerank rows per (partition, query)
     * ever shuffle. Measured at 16M candidate rows: 0.3 MiB shuffle,
     * BELOW a hand-built bounded-top-k typed aggregate (0.8 MiB — the
-    * object buffers serialize; dev/CutDrive17.scala, PLANS.md). The
+    * object buffers serialize; PLANS.md). The
     * spec pins the WindowGroupLimit(Partial) node: rewriting the
     * rank filter in any form the rule misses silently reverts to
     * shuffling every candidate row.
@@ -166,14 +166,6 @@ object Similarity {
       .orderBy("query_id", "rank")
   }
 
-  /** All-pairs near-duplicate detection by cosine ≥ threshold:
-    * double-dot prefilter (margin 0.01 ≫ float noise) then exact
-    * decimal threshold.
-    */
-  def embeddingNearDup(spark: SparkSession, dir: String,
-      threshold: Double = 0.95): DataFrame =
-    embeddingNearDupFrom(Tables.embeddings(spark, dir), threshold)
-
   /** Broadcast-side budget for the exact all-pairs path: half Spark's
     * 8 GB broadcast hard cap, so the check fires before the engine's
     * opaque failure would.
@@ -191,12 +183,15 @@ object Similarity {
       cap: Long = MaxExactBroadcastBytes): Unit = {
     val est = rows * (8L * dim + 64L)
     require(est <= cap,
-      s"embeddingNearDup's exact all-pairs path broadcasts the full vector table " +
+      s"embeddingNearDupFrom's exact all-pairs path broadcasts the full vector table " +
         s"(~$est bytes for $rows rows x $dim dims, cap $cap): " +
-        s"use embeddingNearDupLsh, the bucketed scale path, for inputs this size")
+        s"use embeddingNearDupLshFrom, the bucketed scale path, for inputs this size")
   }
 
-  /** Same operator over any (vec_id, embedding) table (spec seam). */
+  /** All-pairs near-duplicate detection by cosine ≥ threshold over a
+    * (vec_id, embedding) table: double-dot prefilter (margin 0.01 ≫
+    * float noise) then exact decimal threshold.
+    */
   def embeddingNearDupFrom(embeddings: DataFrame,
       threshold: Double = 0.95): DataFrame = {
     // oversize-misuse guard, kept LAZY for the common case: first ask
@@ -243,15 +238,9 @@ object Similarity {
     * near-identical pairs ≈ 1.0), then the same exact decimal verify.
     * Shuffles on the (table, bucket) key, never the cross product;
     * recall vs the exact operator is measured on planted pairs in
-    * TrainingSpec, precision is exact by construction.
-    */
-  def embeddingNearDupLsh(spark: SparkSession, dir: String,
-      threshold: Double = 0.95, nPlanes: Int = 8, nTables: Int = 4): DataFrame =
-    embeddingNearDupLshFrom(Tables.embeddings(spark, dir), threshold, nPlanes, nTables)
-
-  /** Same operator over any (vec_id, embedding) table — the seam the
-    * planted-pair recall spec uses (the corpus has no natural ≥ 0.95
-    * pairs at any scale, so recall is only measurable on plants).
+    * TrainingSpec (the corpus has no natural ≥ 0.95 pairs at any
+    * scale, so recall is only measurable on plants), precision is
+    * exact by construction.
     */
   def embeddingNearDupLshFrom(embeddings: DataFrame,
       threshold: Double = 0.95, nPlanes: Int = 8, nTables: Int = 4): DataFrame = {
@@ -344,18 +333,6 @@ object Similarity {
         round(max(col("dot")), 6).cast("double").as("cos"))
       .orderBy("vec_id")
   }
-
-  /** Incremental embedding near-dup with the history side derived
-    * in-plan — the self-contained shape of [[embeddingScreen]],
-    * mirroring [[Dedup.minhashLshIncremental]]. Kept for one-shot use
-    * and the oracle gate; a per-ingest-batch deployment reads the
-    * landed catalog instead ([[graft.plans.VecCatalog]]), because
-    * this wrapper re-buckets the whole history every run.
-    */
-  def embeddingNearDupIncremental(batchEmb: DataFrame, histEmb: DataFrame,
-      threshold: Double = 0.95, nPlanes: Int = 8, nTables: Int = 4): DataFrame =
-    embeddingScreen(batchEmb, bucketKeys(histEmb, "vec_id", nPlanes, nTables),
-      histEmb.select("vec_id", "embedding"), threshold, nPlanes, nTables)
 
   /** ANN via IVF (inverted-file) coarse quantization — the second
     * scale path beside the LSH operator, with a different trade-off:
@@ -617,9 +594,9 @@ object Similarity {
   }
 
   /** IVF cell assignment: (vec_id, cid) — every vector's nearest
-    * centroid. Public as an operational surface: cell-size statistics
-    * off this frame are how a deployment watches for degenerate
-    * quantization (the spec pins a distribution bound on it).
+    * centroid of `cents`. Cell-size statistics off this frame are how
+    * a deployment watches for degenerate quantization (the spec pins
+    * a distribution bound on it).
     *
     * Assignment uses the fast DOUBLE dot: it is bit-identical across
     * engines (index-order fold, validated), so argmax + cid tiebreak
@@ -629,12 +606,6 @@ object Similarity {
     * map work at any corpus size (the former max(struct) aggregate
     * shuffled one pre-combined row per vector).
     */
-  def ivfAssign(embeddings: DataFrame, nCentroids: Int = 16,
-      trainIters: Int = 0): DataFrame =
-    ivfAssignWith(embeddings,
-      if (trainIters > 0) ivfCentroidsTrained(embeddings, nCentroids, trainIters)
-      else ivfCentroids(embeddings, nCentroids))
-
   private[graft] def ivfAssignWith(embeddings: DataFrame, cents: DataFrame): DataFrame =
     withAssignedCid(embeddings, cents).select("vec_id", "cid")
 
@@ -712,7 +683,7 @@ object Similarity {
     * vector drops iff its cell contains a history vector at cosine ≥
     * threshold (any id) or a LOWER-id batch-mate (the intra-batch
     * rule — two twins arriving together yield one survivor, the
-    * DocScreen/VecScreen discipline). Returns the dropped set
+    * VecScreen discipline). Returns the dropped set
     * (vec_id, cid, kept_by = smallest similar mate, max_cos).
     *
     * Scale shape: both assignments are the broadcast-argmax scan; the
@@ -789,7 +760,7 @@ object Similarity {
     * these vec_ids.
     *
     * Scale shape — the whole point of SemDeDup over exact all-pairs:
-    * assignment is the broadcast-argmax scan ([[ivfAssign]]'s
+    * assignment is the broadcast-argmax scan ([[ivfAssignWith]]'s
     * map-side-combined shape, no n×C shuffle), and the pair join is
     * EQUI on cid — the shuffle is cluster-keyed and the pair count is
     * Σ n_c² over cells, never corpus n². At 100 TB, nCentroids grows
@@ -945,7 +916,7 @@ object Similarity {
       nCentroids, nProbe, rerank)
 
   /** Same operator over any (vec_id, embedding) table (spec/scale
-    * seam — dev/ScaleDrive18 drives it at 10⁷ synthesized vectors).
+    * seam — PLANS.md records a run at 10⁷ synthesized vectors).
     */
   def ivfBqTopKFrom(embeddings: DataFrame,
       nQueries: Int = 8, k: Int = 10, nCentroids: Int = 16,
@@ -1315,42 +1286,6 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("vec_id"),
         round(col("dot"), 6).cast("double").as("score"))
       .orderBy("query_id", "rank")
-  }
-
-  /** Bucket-count sizing for the fixed-width hyperplane tables — the
-    * PLANS.md sizing rule as code. Each table has 2^nPlanes buckets,
-    * so expected occupancy n/2^nPlanes grows linearly with the corpus
-    * and the per-table candidate join grows ~n²/2^nPlanes: the 8-bit
-    * default is right at sf0.1 (~100/bucket) and wrong at 10^9
-    * vectors with the default left alone. nPlanes =
-    * round(log2(n / targetBucket)) keeps occupancy at the target; the
-    * clamp floors tiny corpora at 16 buckets and caps at 24 bits
-    * (16M buckets — table cardinality past which the bucket-key
-    * shuffle, not the bucket size, dominates).
-    */
-  def planesFor(n: Long, targetBucket: Long = 128): Int = {
-    require(n > 0 && targetBucket > 0,
-      s"corpus size and target bucket must be positive: $n, $targetBucket")
-    val raw = math.round(
-      math.log(n.toDouble / targetBucket) / math.log(2)).toInt
-    math.max(4, math.min(24, raw))
-  }
-
-  /** Companion to [[planesFor]]: the table count that keeps overall
-    * recall at `recall` once nPlanes is sized up. A pair whose vectors
-    * agree with each hyperplane w.p. `pAgree` (= 1 − angle/π; ≈ 0.955
-    * at cos 0.99, ≈ 0.9 at cos 0.95) co-buckets in one k-bit table
-    * w.p. pAgree^k, so L = ceil(ln(1−recall) / ln(1−pAgree^k)) tables
-    * give 1−(1−pAgree^k)^L ≥ recall. Adding planes (for bucket size)
-    * and tables (for recall) trade against each other explicitly —
-    * both are knobs of every LSH operator here.
-    */
-  def tablesFor(nPlanes: Int, pAgree: Double = 0.9,
-      recall: Double = 0.9): Int = {
-    require(pAgree > 0 && pAgree < 1 && recall > 0 && recall < 1,
-      s"pAgree and recall must be in (0,1): $pAgree, $recall")
-    val pTable = math.pow(pAgree, nPlanes)
-    math.max(1, math.ceil(math.log(1 - recall) / math.log(1 - pTable)).toInt)
   }
 
   /** Cluster-count sizing for the IVF / [[semanticDedupFrom]] family —

@@ -113,22 +113,4 @@ object BucketedLayout {
     // old files
     spark.sessionState.catalog.refreshTable(ident)
   }
-
-  /** Per-key aggregation over a bucketed table: count + byte total per
-    * bucket key. On a table bucketed by `key` this plans with zero
-    * Exchange nodes — the map side IS the reduce side.
-    */
-  def keyedAgg(spark: SparkSession, table: String, key: String,
-      valueCol: String): DataFrame =
-    spark.table(table)
-      .groupBy(key)
-      .agg(count(lit(1)).as("n"), sum(col(valueCol)).as("total"))
-
-  /** Equi-join of two tables bucketed on the same key with the same
-    * bucket count: both sides arrive co-partitioned, so the join plans
-    * as a sort-merge with no Exchange on either side.
-    */
-  def coLocatedJoin(spark: SparkSession, leftTable: String,
-      rightTable: String, key: String): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), key)
 }

@@ -19,14 +19,13 @@ import org.apache.spark.sql.SparkSession
   * is O(partitions) directory deletes, never a recursive file walk
   * over the corpus.
   *
-  * Like `cleanUp.py`, a sweep takes a per-directory policy map
-  * ([[sweepAll]]) and is safe to re-run: deleting an already-deleted
-  * partition is a no-op, so a crashed sweep is re-issued as-is (no
-  * marker needed — unlike [[LandedCatalog]] there is no
-  * metastore/file split to keep consistent for bare-parquet landings;
-  * for REGISTERED tables pass `table` so the catalog entry drops
-  * first, and a crash between the two is healed by the next sweep or
-  * an MSCK + sweep).
+  * Like `cleanUp.py`, a sweep is safe to re-run: deleting an
+  * already-deleted partition is a no-op, so a crashed sweep is
+  * re-issued as-is (no marker needed — unlike [[LandedCatalog]] there
+  * is no metastore/file split to keep consistent for bare-parquet
+  * landings; for REGISTERED tables pass `table` so the catalog entry
+  * drops first, and a crash between the two is healed by the next
+  * sweep or an MSCK + sweep).
   *
   * ISO date partition values compare correctly as strings, so the
   * cutoff is a plain lexicographic bound on the partition value —
@@ -70,18 +69,4 @@ object Retention {
     }
     aged
   }
-
-  /** The `cleanUp.py` config-file shape: several landings, each with
-    * its own cutoff — `policies` maps a data directory to its
-    * (partition column, exclusive minimum value to keep). Directories
-    * that do not exist are skipped, like the reference skips
-    * configured-but-absent dirs.
-    *
-    * @return per-directory deleted partition values
-    */
-  def sweepAll(spark: SparkSession,
-      policies: Map[String, (String, String)]): Map[String, Seq[String]] =
-    policies.map { case (dir, (partCol, minKeep)) =>
-      dir -> sweep(spark, dir, partCol, minKeep)
-    }
 }

@@ -25,7 +25,7 @@ import graft.operators.{Classifier, Elections}
   * Because weights AND cut are pinned, a document's verdict depends
   * only on its own features and the artifact — never on batch-mates
   * or arrival order — so the union of per-batch verdicts equals the
-  * batch verdict REGARDLESS of micro-batching (the [[DocScreen]]
+  * batch verdict REGARDLESS of micro-batching (the [[VecScreen]]
   * catalog-only property, here by construction). StreamingSpec pins
   * that equality; the driver oracle replays the whole screen in SQL.
   *
@@ -37,7 +37,7 @@ import graft.operators.{Classifier, Elections}
   *
   * Exactly-once: checkpointed file source + idempotent sink — each
   * micro-batch overwrites its own `batch_id=<n>` partition, so a
-  * replayed batch rewrites identical rows (the AckSink discipline).
+  * replayed batch rewrites identical rows.
   */
 object ClsScreen {
 

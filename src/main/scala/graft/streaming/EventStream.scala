@@ -43,48 +43,6 @@ object EventStream {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(path)
 
-  /** Windowed event-time aggregation with watermark: counts + exact
-    * decimal sums per (window, event_type).
-    */
-  def windowedCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "6 hours"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,6)")).as("total"))
-      .select(col("window.start").as("w_start"), col("event_type"),
-        col("n"), col("total"))
-
-  /** Windowed SKETCH aggregation — the streaming twin of the
-    * tx_sketch_stats family: HyperLogLog++ distinct users per
-    * (6 h window, event_type). An EXACT count-distinct is not even
-    * expressible in a streaming aggregation (it needs an Expand over
-    * the whole input); the sketch is fixed-size mergeable partial
-    * state, which is exactly why it is the 100 TB shape — and why the
-    * streaming twin exists. HLL++'s merge is deterministic and
-    * order-independent, so the streaming result equals the same
-    * expression run in batch bit-for-bit on replay (spec-pinned).
-    */
-  def sketchCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "6 hours"), col("event_type"))
-      .agg(approx_count_distinct(col("user_id"), 0.05).as("approx_users"),
-        count(lit(1)).as("n"))
-      .select(col("window.start").as("w_start"), col("event_type"),
-        col("approx_users"), col("n"))
-
-  /** Gap-based sessionization (30-minute inactivity gap) using the
-    * built-in session window — the streaming twin of DQ24.
-    */
-  def sessionCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("session_window.start").as("s_start"),
-        col("session_window.end").as("s_end"), col("n_events"))
-
   /** Inactivity TTL with tombstones: per key, an event-time timer at
     * last_seen + ttl; when the watermark passes it, the key's state is
     * dropped and a tombstone emitted. This is the self-delete
@@ -117,39 +75,6 @@ object EventStream {
           }
       }
   }
-
-  /** Next-beacon scheduling with jitter (`server/beacon.c:49-64,
-    * 153-161`): next = ts + interval·(1 + pct·u) with u ∈ [-1, 1),
-    * floored at 1 s. u derives from fnv1a64 of the seed column —
-    * deterministic (safe under task retries/speculation, unlike
-    * rand()) while uniform across keys. Returns epoch micros.
-    */
-  def nextBeaconMicros(ts: org.apache.spark.sql.Column,
-      seed: org.apache.spark.sql.Column,
-      intervalS: Long, jitterPct: Double): org.apache.spark.sql.Column = {
-    val h = graft.functions.TextExpressions.fnv1a64(seed.cast("string"))
-    // map 63 uniform bits to [-1, 1)
-    val u = (pmod(h, lit(1L << 62)).cast("double") / (1L << 61).toDouble) - 1.0
-    val deltaUs = (lit(intervalS * 1e6) * (lit(1.0) + lit(jitterPct) * u)).cast("bigint")
-    unix_micros(ts) + greatest(lit(1000000L), deltaUs)
-  }
-
-  /** Streaming exact-dedup: drop duplicate keys with bounded state —
-    * duplicates arriving within the watermark window are suppressed,
-    * state for keys older than the watermark is evicted (the
-    * unbounded-state trap of plain dropDuplicates on a stream).
-    */
-  def dedupStream(events: DataFrame, keyCols: Seq[String],
-      watermarkCol: String = "ts", delay: String = "1 hour"): DataFrame =
-    events
-      .withWatermark(watermarkCol, delay)
-      .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
-
-  /** Drain a streaming DataFrame into an in-memory table and block
-    * until every available file is processed. Returns the sink name.
-    */
-  def runToMemory(df: DataFrame, name: String, outputMode: String = "append"): Unit =
-    startToMemory(df, name, outputMode).awaitTermination()
 
   private def startToMemory(df: DataFrame, name: String,
       outputMode: String): StreamingQuery =
@@ -311,7 +236,7 @@ object EventStream {
     * (ig_stream_windows): 6-hour tumbling event-time windows with
     * count + exact decimal sum, state carried across the same
     * micro-batched replay, complete-mode sink — the streaming
-    * execution of [[windowedCounts]]'s shape under the driver's batch
+    * execution of the 6-hour window shape under the driver's batch
     * SQL oracle.
     */
   def windowReplayGate(spark: SparkSession, dir: String): DataFrame = {

@@ -10,7 +10,7 @@ import graft.plans.{GramCatalog, LandedCatalog}
   * spans land in the sink partitioned by batch id, and the batch's
   * OWN gram stats append as partition batchId + 1 — so the next batch
   * sees this one as history. Every batch appends (substring dedup
-  * keeps documents and cuts spans later, unlike DocScreen's
+  * keeps documents and cuts spans later, unlike [[VecScreen]]'s
   * drop-the-duplicate screen, so there is no accepted/rejected split
   * to gate the append on).
   *

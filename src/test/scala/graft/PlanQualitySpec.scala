@@ -103,9 +103,12 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("dedup candidate generation never degrades to a cartesian product") {
-    import graft.operators.Dedup
+    import graft.operators.{Dedup, TextOps}
+    import org.apache.spark.sql.functions.col
+    val sig = Tables.documents(spark, dir).select(col("doc_id"),
+      graft.functions.TextExpressions.simhash64(TextOps.tokens(col("text"))).as("sh"))
     for (df <- Seq(Dedup.ngramJaccard(spark, dir), Dedup.minhashLsh(spark, dir),
-        Dedup.simhashPairs(spark, dir))) {
+        Dedup.simhashPairsFrom(sig))) {
       val s = planString(df)
       assert(!s.contains("CartesianProduct"), s"cartesian in dedup plan:\n$s")
       assert(!s.contains("BroadcastNestedLoopJoin"), s"BNLJ in dedup plan:\n$s")

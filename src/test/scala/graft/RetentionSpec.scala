@@ -65,20 +65,4 @@ class RetentionSpec extends AnyFunSuite {
       assert(Retention.partitionValues(spark, root, "day").sorted === after)
     } finally rm(root)
   }
-
-  test("sweepAll applies per-directory cutoffs and skips absent dirs") {
-    val (a, b) = (tempRoot(), tempRoot())
-    try {
-      landByDay(a); landByDay(b)
-      val days = Retention.partitionValues(spark, a, "day").sorted
-      val res = Retention.sweepAll(spark, Map(
-        a -> ("day", days(1)),              // forget 1 day
-        b -> ("day", days(days.size - 1)),  // keep only the last
-        s"$a/_does_not_exist" -> ("day", days.last)))
-      assert(res(a) === days.take(1))
-      assert(res(b) === days.dropRight(1))
-      assert(res(s"$a/_does_not_exist") === Nil)
-      assert(Retention.partitionValues(spark, b, "day").sorted === days.takeRight(1))
-    } finally { rm(a); rm(b) }
-  }
 }

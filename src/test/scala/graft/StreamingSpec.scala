@@ -77,58 +77,18 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.shuffle.partitions") === before)
   }
 
-  test("windowed sketch: streaming HLL equals the batch expression exactly") {
-    val stream = EventStream.fromDirectory(spark, splitDir, batchEvents.schema)
-    EventStream.runToMemory(EventStream.sketchCounts(stream), "sk_stream")
-    val got = spark.table("sk_stream")
-      .orderBy("w_start", "event_type").collect().toSeq
-    val want = EventStream.sketchCounts(batchEvents)
-      .orderBy("w_start", "event_type").collect().toSeq
-    assert(got.nonEmpty)
-    // HLL merge is order-independent, so every finalized streaming
-    // window must carry the identical sketch estimate the batch run
-    // computes — not merely a close one
-    val wantMap = want.map(r => (r.getTimestamp(0), r.getString(1)) -> r).toMap
-    got.foreach { r =>
-      val k = (r.getTimestamp(0), r.getString(1))
-      assert(wantMap.contains(k), s"spurious window $k")
-      assert(wantMap(k) === r)
-    }
-    assert(got.size >= want.size - 10, s"too many withheld windows: ${want.size - got.size}")
-  }
-
   test("mixed-version wire decode: streaming rows equal the batch decode") {
     // the listener analog (honeycomb.py:448-490): v1/v2 records arrive
     // on a live stream and dispatch per record; the decode is a
     // stateless projection, so the streaming run must emit EVERY row
     // identically to batch — no watermark, nothing withheld
     val stream = EventStream.fromDirectory(spark, splitDir, batchEvents.schema)
-    EventStream.runToMemory(
+    References.runToMemory(
       graft.plans.BeaconPipeline.decodeMixedWire(stream), "wire_stream")
     val got = spark.table("wire_stream").orderBy("rec_id").collect().toSeq
     val want = graft.plans.BeaconPipeline.decodeMixedWire(batchEvents)
       .orderBy("rec_id").collect().toSeq
     assert(got.nonEmpty && got === want)
-  }
-
-  test("windowed aggregation: streaming result equals batch result") {
-    val stream = EventStream.fromDirectory(spark, splitDir, batchEvents.schema)
-    EventStream.runToMemory(EventStream.windowedCounts(stream), "win_stream")
-    val got = spark.table("win_stream")
-      .orderBy("w_start", "event_type").collect().toSeq
-    val want = EventStream.windowedCounts(batchEvents)
-      .orderBy("w_start", "event_type").collect().toSeq
-    // streaming append emits only finalized (watermark-passed) windows;
-    // every emitted window must match its batch twin, and only the tail
-    // (last watermark interval) may be withheld
-    assert(got.nonEmpty)
-    val wantMap = want.map(r => (r.getTimestamp(0), r.getString(1)) -> r).toMap
-    got.foreach { r =>
-      val k = (r.getTimestamp(0), r.getString(1))
-      assert(wantMap.contains(k), s"spurious window $k")
-      assert(wantMap(k) === r)
-    }
-    assert(got.size >= want.size - 10, s"too many withheld windows: ${want.size - got.size}")
   }
 
   test("trigger schedule computes identically on a stream (stateless column logic)") {
@@ -148,43 +108,12 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("calc_delay", greatest(lit(1L), col("delay_s") + col("variance")))
       .withColumn("action_us", unix_micros(col("ts")) + col("calc_delay") * 1000000L)
       .select("event_id", "variance", "calc_delay", "action_us")
-    EventStream.runToMemory(stream, "trig_stream")
+    References.runToMemory(stream, "trig_stream")
     val got = spark.table("trig_stream").orderBy("event_id").collect().toSeq
     val want = schedule(batchEvents)
       .select("event_id", "variance", "calc_delay", "action_us")
       .orderBy("event_id").collect().toSeq
     assert(got === want)
-  }
-
-  test("gap sessionization: streaming emits exactly the watermark-finalized batch sessions") {
-    import spark.implicits._
-    val stream = EventStream.fromDirectory(spark, splitDir, batchEvents.schema)
-    EventStream.runToMemory(EventStream.sessionCounts(stream), "sess_stream")
-    val streamed = spark.table("sess_stream")
-      .groupBy("user_id").agg(count(lit(1)).as("sessions"))
-      .as[(Long, Long)].collect().toMap
-    // batch twin of the SAME operator (session_window), with each
-    // session's end: append mode emits a session once the final
-    // watermark (max ts - 1h) passes its end, so the expected count
-    // per user is the number of sessions ending before the watermark —
-    // NOT "all but one": at higher densities several whole sessions
-    // can sit inside the last watermark hour (caught at sf0.1)
-    val wmUs = batchEvents.agg(max(unix_micros(col("ts")))).head().getLong(0) -
-      3600L * 1000000L
-    val ends = batchEvents
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("user_id"), unix_micros(col("session_window.end")).as("end_us"))
-      .as[(Long, Long)].collect()
-    val strictFinal = ends.filter(_._2 < wmUs).groupBy(_._1).view.mapValues(_.length.toLong).toMap
-    val looseFinal = ends.filter(_._2 <= wmUs).groupBy(_._1).view.mapValues(_.length.toLong).toMap
-    val users = ends.map(_._1).distinct
-    assert(streamed.nonEmpty)
-    users.foreach { u =>
-      val s = streamed.getOrElse(u, 0L)
-      val lo = strictFinal.getOrElse(u, 0L); val hi = looseFinal.getOrElse(u, 0L)
-      assert(s >= lo && s <= hi, s"user $u: streamed $s, watermark-finalized [$lo,$hi]")
-    }
   }
 
   test("TTL tombstones match the batch-derived expiry set") {
@@ -193,7 +122,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = EventStream.fromDirectory(spark, splitDir, batchEvents.schema)
       .as[EventStream.Ev]
     val q = EventStream.ttlTombstones(stream, ttlMs)
-    EventStream.runToMemory(q.toDF(), "ttl_stream")
+    References.runToMemory(q.toDF(), "ttl_stream")
     val tombstoned = spark.table("ttl_stream")
       .select("user_id").as[Long].collect().toSet
 
@@ -237,97 +166,9 @@ class StreamingSpec extends AnyFunSuite {
     assert(after1 < total)
   }
 
-  test("streaming dedup suppresses within-watermark duplicates") {
-    import spark.implicits._
-    // inject duplicates: each file re-lands a slice of the previous one
-    val p = Files.createTempDirectory("dup_events").toString
-    val ev = Tables.events(spark, dir)
-    ev.filter(col("event_id") < 400).coalesce(1).write.mode("append").parquet(p)
-    Thread.sleep(1100)
-    ev.filter(col("event_id") >= 380 && col("event_id") < 700).coalesce(1)
-      .write.mode("append").parquet(p) // 20 duplicated ids
-    val schema = spark.read.parquet(p).schema
-    val stream = EventStream.fromDirectory(spark, p, schema)
-    EventStream.runToMemory(
-      EventStream.dedupStream(stream, Seq("event_id")), "dedup_stream")
-    val got = spark.table("dedup_stream").select("event_id").as[Long].collect()
-    assert(got.length === got.distinct.length, "duplicates leaked through")
-    assert(got.length === 700, s"expected 700 unique ids, got ${got.length}")
-  }
-
-  test("streaming near-dup screen equals the batch screen, any micro-batching") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    // batch = odd-id docs landed as 3 separate files (3 micro-batches),
-    // catalog = even-id docs; the screen is catalog-only, so the union
-    // of per-batch verdicts must equal the one-shot batch verdict
-    val docs = Tables.documents(spark, dir).select("doc_id", "text")
-    val hist = docs.filter(col("doc_id") % 2 === 0)
-    val batch = docs.filter(col("doc_id") % 2 === 1).localCheckpoint(true)
-    val src = Files.createTempDirectory("screen_src").toString
-    (0 until 3).foreach { k =>
-      batch.filter(col("doc_id") % 3 === k).coalesce(1)
-        .write.mode("append").parquet(src)
-      Thread.sleep(1100) // distinct mtimes -> deterministic file order
-    }
-    val sink = Files.createTempDirectory("screen_sink").toString + "/out"
-    val chk = Files.createTempDirectory("screen_chk").toString
-    graft.streaming.DocScreen.incrementalNeardupScreen(
-      spark, src, batch.schema, hist, sink, chk)
-    val streamed = spark.read.parquet(sink)
-      .select("doc_id", "n_matches", "matched_id", "jac") // drop batch_id partition col
-      .as[(Long, Long, Long, Double)].collect().toSet
-    val direct = Dedup.minhashLshIncremental(
-        Dedup.shinglesOf(batch, "doc"), Dedup.shinglesOf(hist, "doc"))
-      .as[(Long, Long, Long, Double)].collect().toSet
-    Shared.releaseAll(spark)
-    assert(direct.nonEmpty, "no catalog matches in the corpus")
-    assert(streamed === direct,
-      s"stream/batch diverged: only-stream=${(streamed -- direct).take(3)} only-batch=${(direct -- streamed).take(3)}")
-    // exactly-once: a checkpointed re-run with no new files appends nothing
-    graft.streaming.DocScreen.incrementalNeardupScreen(
-      spark, src, batch.schema, hist, sink, chk)
-    assert(spark.read.parquet(sink).count() === streamed.size.toLong,
-      "re-run with same checkpoint re-emitted rows")
-  }
-
-  test("appendAccepted: batch N+1 is screened against batch N's survivors") {
-    import spark.implicits._
-    import graft.plans.DedupCatalog
-    // history = docs 0-99; file 1 lands doc 300 (novel -> accepted);
-    // file 2 lands 10300 = near-twin of 300. Only the append-loop can
-    // flag it: 300 is not in the landed history, it entered the
-    // catalog as batch 0's survivor.
-    val docs = Tables.documents(spark, dir).select("doc_id", "text")
-    val hist = docs.filter(col("doc_id") < 100)
-    val f1 = docs.filter(col("doc_id") === 300)
-    val f2 = docs.filter(col("doc_id") === 300)
-      .select((col("doc_id") + 10000).as("doc_id"),
-        concat(col("text"), lit(" zz")).as("text"))
-    val src = Files.createTempDirectory("append_src").toString
-    f1.coalesce(1).write.mode("append").parquet(src)
-    Thread.sleep(1100)
-    f2.coalesce(1).write.mode("append").parquet(src)
-    val sink = Files.createTempDirectory("append_sink").toString + "/out"
-    val chk = Files.createTempDirectory("append_chk").toString
-    val cat = DedupCatalog.land(spark, hist, "spec_stream_append")
-    try {
-      graft.streaming.DocScreen.screenAgainstCatalog(
-        spark, src, f1.schema, cat, sink, chk, appendAccepted = true)
-      val flagged = spark.read.parquet(sink)
-        .select("doc_id", "matched_id").as[(Long, Long)].collect().toSet
-      assert(flagged.contains((10300L, 300L)),
-        s"batch-1 twin not flagged against batch-0 survivor: $flagged")
-      // replay with the same checkpoint: no new verdicts, catalog stable
-      graft.streaming.DocScreen.screenAgainstCatalog(
-        spark, src, f1.schema, cat, sink, chk, appendAccepted = true)
-      assert(spark.read.parquet(sink).count() === flagged.size.toLong)
-    } finally graft.plans.LandedCatalog.drop(spark, cat)
-  }
-
   test("streaming embedding screen equals the batch screen, any micro-batching") {
     import spark.implicits._
-    import graft.operators.Similarity
+    import graft.plans.{LandedCatalog, VecCatalog}
     // batch = odd-id vectors (every 7th === 3 mod 7 replaced by its
     // even twin's embedding — guaranteed catalog hits) landed as 3
     // files; catalog = even-id vectors. Catalog-only screen, so the
@@ -349,83 +190,24 @@ class StreamingSpec extends AnyFunSuite {
     }
     val sink = Files.createTempDirectory("vec_sink").toString + "/out"
     val chk = Files.createTempDirectory("vec_chk").toString
-    graft.streaming.VecScreen.incrementalEmbScreen(
-      spark, src, batch.schema, hist, sink, chk)
-    val streamed = spark.read.parquet(sink)
-      .select("vec_id", "n_matches", "matched_id", "cos")
-      .as[(Long, Long, Long, Double)].collect().toSet
-    val direct = Similarity.embeddingNearDupIncremental(batch, hist)
-      .as[(Long, Long, Long, Double)].collect().toSet
-    assert(direct.nonEmpty, "no catalog matches in the corpus")
-    assert(streamed === direct,
-      s"stream/batch diverged: only-stream=${(streamed -- direct).take(3)} only-batch=${(direct -- streamed).take(3)}")
-    // exactly-once: a checkpointed re-run with no new files appends nothing
-    graft.streaming.VecScreen.incrementalEmbScreen(
-      spark, src, batch.schema, hist, sink, chk)
-    assert(spark.read.parquet(sink).count() === streamed.size.toLong,
-      "re-run with same checkpoint re-emitted rows")
-  }
-
-  test("streaming semantic screen == sequential loop; survivors match across batches; replay adds nothing") {
-    import spark.implicits._
-    import graft.operators.Similarity
-    val emb = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-    val hist = emb.filter(col("vec_id") % 2 === 0 && col("vec_id") < 400)
-      .localCheckpoint(true)
-    val byId = emb.filter(col("vec_id").isin(300L, 11L, 13L))
-      .as[(Long, Array[Float])].collect().toMap
-    // f0: history hit (copy of hist 300) + novel X; f1: copy of X
-    // (flaggable only via f0's survivor) + intra-batch twins Y;
-    // f2: copy of Y (flaggable only via f1's survivor); f3: two more
-    // copies of hist 300 with batch ids BELOW 300 — vector 7 has both
-    // a catalog mate (300) and a lower-id intra-batch mate (5), so
-    // its kept_by witness must be the min over BOTH surfaces (5), the
-    // semanticScreenFrom algebra
-    val slices = Seq(
-      Seq((301L, byId(300L)), (9001L, byId(11L))),
-      Seq((9003L, byId(11L)), (9005L, byId(13L)), (9007L, byId(13L))),
-      Seq((9009L, byId(13L))),
-      Seq((5L, byId(300L)), (7L, byId(300L))))
-    val src = Files.createTempDirectory("sem_src").toString
-    slices.foreach { rows =>
-      rows.toDF("vec_id", "embedding").coalesce(1).write.mode("append").parquet(src)
-      Thread.sleep(1100)
-    }
-    val sink = Files.createTempDirectory("sem_sink").toString + "/out"
-    val chk = Files.createTempDirectory("sem_chk").toString
-    val schema = slices.head.toDF("vec_id", "embedding").schema
-    val cat = graft.plans.SemCatalog.land(spark, hist, "spec_sem_stream")
+    val cat = VecCatalog.land(spark, hist, "spec_vstream_screen")
     try {
-      graft.streaming.VecScreen.semanticScreenAgainstCatalog(
-        spark, src, schema, cat, sink, chk)
+      graft.streaming.VecScreen.screenAgainstCatalog(
+        spark, src, batch.schema, cat, sink, chk)
       val streamed = spark.read.parquet(sink)
-        .select("vec_id", "kept_by").as[(Long, Long)].collect().toSet
-      assert(streamed === Set((301L, 300L), (9003L, 9001L), (9007L, 9005L), (9009L, 9005L),
-          (5L, 300L), (7L, 5L)),
-        s"unexpected streamed verdicts: $streamed")
-      // the pinned contract: stream == the sequential per-batch loop
-      // with the SAME pinned geometry and growing history
-      val cents0 = Similarity.ivfCentroids(hist, 16).localCheckpoint(true)
-      var histSoFar = hist
-      val loop = slices.flatMap { rows =>
-        val b = rows.toDF("vec_id", "embedding")
-        val v = Similarity.semanticScreenFrom(b, histSoFar, cents0 = Some(cents0))
-          .localCheckpoint(true)
-        histSoFar = histSoFar.unionByName(
-          b.join(v.select("vec_id"), Seq("vec_id"), "left_anti")).localCheckpoint(true)
-        v.select("vec_id", "kept_by").as[(Long, Long)].collect()
-      }.toSet
-      assert(streamed === loop, s"stream/loop diverged: ${streamed.diff(loop)} ${loop.diff(streamed)}")
-      // checkpointed replay: no new files -> sink and catalog unchanged
-      val before = spark.read.parquet(sink).count()
-      val cellsBefore = spark.table(cat.table("cells")).count()
-      graft.streaming.VecScreen.semanticScreenAgainstCatalog(
-        spark, src, schema, cat, sink, chk)
-      assert(spark.read.parquet(sink).count() === before,
-        "replay with same checkpoint re-emitted verdicts")
-      assert(spark.table(cat.table("cells")).count() === cellsBefore,
-        "replay with same checkpoint re-appended survivors")
-    } finally graft.plans.LandedCatalog.drop(spark, cat)
+        .select("vec_id", "n_matches", "matched_id", "cos")
+        .as[(Long, Long, Long, Double)].collect().toSet
+      val direct = References.embeddingNearDupIncremental(batch, hist)
+        .as[(Long, Long, Long, Double)].collect().toSet
+      assert(direct.nonEmpty, "no catalog matches in the corpus")
+      assert(streamed === direct,
+        s"stream/batch diverged: only-stream=${(streamed -- direct).take(3)} only-batch=${(direct -- streamed).take(3)}")
+      // exactly-once: a checkpointed re-run with no new files appends nothing
+      graft.streaming.VecScreen.screenAgainstCatalog(
+        spark, src, batch.schema, cat, sink, chk)
+      assert(spark.read.parquet(sink).count() === streamed.size.toLong,
+        "re-run with same checkpoint re-emitted rows")
+    } finally LandedCatalog.drop(spark, cat)
   }
 
   test("vector appendAccepted: batch N+1 screened against batch N's survivors") {
@@ -471,51 +253,6 @@ class StreamingSpec extends AnyFunSuite {
       (11L, 1L, 10L, 0.95)))
   }
 
-  test("ingest loop: an intra-batch twin pair yields one survivor, any micro-batching") {
-    import spark.implicits._
-    import graft.plans.{DedupCatalog, LandedCatalog}
-    // history = docs 0-99; the batch stream lands doc 300 (novel) and
-    // 10300, a near-twin of 300. Delivered in ONE file the catalog-only
-    // screen is blind to the pair — the within-batch pass must flag the
-    // non-min. Delivered as TWO files the append loop flags it. Either
-    // way: identical verdicts, and exactly one twin in the catalog.
-    val docs = Tables.documents(spark, dir).select("doc_id", "text")
-    val hist = docs.filter(col("doc_id") < 100)
-    val a = docs.filter(col("doc_id") === 300)
-    val b = docs.filter(col("doc_id") === 300)
-      .select((col("doc_id") + 10000).as("doc_id"),
-        concat(col("text"), lit(" zz")).as("text"))
-    def run(tag: String)(landFiles: String => Unit): Set[(Long, Long)] = {
-      val src = Files.createTempDirectory(s"intra_src_$tag").toString
-      landFiles(src)
-      val sink = Files.createTempDirectory(s"intra_sink_$tag").toString + "/out"
-      val chk = Files.createTempDirectory(s"intra_chk_$tag").toString
-      val cat = DedupCatalog.land(spark, hist, s"spec_intra_$tag")
-      try {
-        graft.streaming.DocScreen.screenAgainstCatalog(
-          spark, src, a.schema, cat, sink, chk, appendAccepted = true)
-        // survivor 300 is catalog history; the flagged twin is not
-        val inCat = spark.table(cat.table("sizes"))
-          .filter(col("doc").isin(300L, 10300L))
-          .select("doc").as[Long].collect().toSet
-        assert(inCat === Set(300L), s"[$tag] catalog content: $inCat")
-        spark.read.parquet(sink)
-          .select("doc_id", "matched_id").as[(Long, Long)].collect().toSet
-      } finally LandedCatalog.drop(spark, cat)
-    }
-    val oneFile = run("one") { src =>
-      a.union(b).coalesce(1).write.mode("append").parquet(src)
-    }
-    val twoFiles = run("two") { src =>
-      a.coalesce(1).write.mode("append").parquet(src)
-      Thread.sleep(1100)
-      b.coalesce(1).write.mode("append").parquet(src)
-    }
-    assert(oneFile === Set((10300L, 300L)), s"one-file verdicts: $oneFile")
-    assert(twoFiles === oneFile,
-      s"micro-batching changed the survivor set: $twoFiles vs $oneFile")
-  }
-
   test("vector ingest loop: an intra-batch twin pair yields one survivor") {
     import spark.implicits._
     import graft.plans.{LandedCatalog, VecCatalog}
@@ -555,7 +292,7 @@ class StreamingSpec extends AnyFunSuite {
     val routed = BeaconPipeline.decode(stream)
       .withColumn("route",
         when(col("parse_error") || col("uptime_s") < 0, "bad").otherwise("good"))
-    EventStream.runToMemory(routed, "beacon_stream")
+    References.runToMemory(routed, "beacon_stream")
     val got = spark.table("beacon_stream")
       .groupBy("route").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -594,72 +331,6 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("jitter schedule: bounds hold, deterministic, spread across keys") {
-    import spark.implicits._
-    val interval = 3600L; val pct = 0.30
-    val df = Tables.events(spark, dir)
-      .withColumn("next_us",
-        EventStream.nextBeaconMicros(col("ts"), col("event_id"), interval, pct))
-      .withColumn("delta_s",
-        (col("next_us") - unix_micros(col("ts"))).cast("double") / 1e6)
-    val deltas = df.select("delta_s").as[Double].collect()
-    // |jitter| <= pct * interval (SURVEY §5.2 property), floor respected
-    assert(deltas.forall(d => d >= 1.0 && d >= interval * (1 - pct) - 1e-6
-      && d <= interval * (1 + pct) + 1e-6))
-    assert(deltas.distinct.length > deltas.length / 2, "jitter not spread")
-    // deterministic: same inputs, same schedule
-    val again = df.select("delta_s").as[Double].collect()
-    assert(deltas.toSeq === again.toSeq)
-  }
-
-  test("ack sink: ledger matches landed bytes; checkpoint re-run adds nothing") {
-    import graft.streaming.AckSink
-    val data = Files.createTempDirectory("ack_data").toString
-    val ledger = Files.createTempDirectory("ack_ledger").toString
-    val ckpt = Files.createTempDirectory("ack_ckpt").toString
-    val stream = EventStream.fromDirectory(spark, splitDir, batchEvents.schema)
-      .select(col("event_id"), col("props"))
-    AckSink.run(stream, data, ledger, ckpt, bytesOf = "props")
-    val landed = spark.read.parquet(data)
-    val led = spark.read.parquet(ledger)
-    assert(landed.count() === batchEvents.count())
-    assert(led.agg(org.apache.spark.sql.functions.sum("rows")).head().getLong(0)
-      === batchEvents.count())
-    val ledBytes = led.agg(org.apache.spark.sql.functions.sum("bytes")).head().getLong(0)
-    val realBytes = batchEvents
-      .agg(org.apache.spark.sql.functions.sum(length(col("props")).cast("long")))
-      .head().getLong(0)
-    assert(ledBytes === realBytes)
-    // re-run with the same checkpoint: no new batches, no duplicates
-    AckSink.run(EventStream.fromDirectory(spark, splitDir, batchEvents.schema)
-      .select(col("event_id"), col("props")), data, ledger, ckpt, "props")
-    assert(spark.read.parquet(data).count() === batchEvents.count())
-  }
-
-  test("ack sink: replay after a crash between data and ledger writes completes the ledger") {
-    import graft.streaming.AckSink
-    val data = Files.createTempDirectory("ack2_data").toString
-    val ledger = Files.createTempDirectory("ack2_ledger").toString
-    val ckpt = Files.createTempDirectory("ack2_ckpt").toString
-    // Simulate a prior attempt that crashed after the data write but
-    // before the ledger write: batch 0's data dir exists (holding stale
-    // rows), there is no ledger row, and the checkpoint never committed
-    // the batch — so the restart replays batchId 0.
-    import spark.implicits._
-    Seq((-1L, "stale")).toDF("event_id", "props")
-      .write.mode("overwrite").parquet(s"$data/batch=0")
-    AckSink.run(EventStream.fromDirectory(spark, splitDir, batchEvents.schema)
-      .select(col("event_id"), col("props")), data, ledger, ckpt, "props")
-    // the replayed batch must overwrite the stale data and land its ledger row
-    val landed = spark.read.parquet(data)
-    assert(landed.count() === batchEvents.count())
-    assert(landed.filter(col("event_id") === -1L).count() === 0L,
-      "stale partial data from the crashed attempt survived the replay")
-    val led = spark.read.parquet(ledger)
-    assert(led.agg(org.apache.spark.sql.functions.sum("rows")).head().getLong(0)
-      === batchEvents.count(), "ledger incomplete after replay")
-  }
-
   test("TTL timer survives a late-but-allowed event (watermark clamp)") {
     import spark.implicits._
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
@@ -682,7 +353,7 @@ class StreamingSpec extends AnyFunSuite {
     val schema = spark.read.parquet(p).schema
     val stream = EventStream.fromDirectory(spark, p, schema).as[EventStream.Ev]
     val q = EventStream.ttlTombstones(stream, ttlMs = 1000L)
-    EventStream.runToMemory(q.toDF(), "late_ttl_stream") // must not throw
+    References.runToMemory(q.toDF(), "late_ttl_stream") // must not throw
     val got = spark.table("late_ttl_stream").select("user_id").as[Long].collect().toSet
     assert(got.contains(3L), s"late-event key was not expired: $got")
   }

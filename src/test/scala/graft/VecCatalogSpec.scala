@@ -46,7 +46,7 @@ class VecCatalogSpec extends AnyFunSuite {
     val cat = VecCatalog.land(spark, hist, "spec_parity")
     try {
       val got = VecCatalog.screen(spark, batch, cat).collect().toSeq
-      val want = Similarity.embeddingNearDupIncremental(batch, hist).collect().toSeq
+      val want = References.embeddingNearDupIncremental(batch, hist).collect().toSeq
       assert(want.nonEmpty, "no catalog matches in the corpus")
       assert(got === want)
     } finally LandedCatalog.drop(spark, cat)
