@@ -15,7 +15,11 @@ import org.apache.spark.storage.StorageLevel
   * builders pin through [[materialize]]; whoever runs the action
   * (Verify/Bench per query, a long-lived service per unit of work)
   * calls [[releaseAll]] afterwards, so pinned storage never outlives
-  * the query that pinned it.
+  * the query that pinned it. Reading a source table fires no job
+  * either: [[Tables]] takes each schema from the parquet footer on the
+  * driver instead of inferring it in a job, so a builder that only
+  * reads tables and composes plans runs nothing before the caller's
+  * action.
   */
 object Shared {
 

@@ -1,6 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.SessionClone
 
@@ -10,20 +16,29 @@ import org.apache.spark.sql.graft.SessionClone
   * All loaders return plain DataFrames so Catalyst sees the raw parquet
   * scan and can push filters / prune columns into it. Nothing is cached
   * here — the query packs decide caching policy.
+  *
+  * A table read fires no Spark job. A bare `spark.read.parquet(path)`
+  * infers the schema in a one-task job (about 0.08 s of scheduling on
+  * `local[4]`, even for one file), a fixed cost every builder paid
+  * before its frame existed. Every loader instead opens the first data
+  * file's footer on the driver (about 1 ms) and converts it with
+  * Spark's own converter under the session's SQL conf, so the schema is
+  * the one inference gives (NTZ timestamps and `nanosAsLong` included),
+  * and hands it to the reader.
   */
 object Tables {
 
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
-  def region(spark: SparkSession, dir: String): DataFrame    = spark.read.parquet(path(dir, "region"))
-  def nation(spark: SparkSession, dir: String): DataFrame    = spark.read.parquet(path(dir, "nation"))
-  def customer(spark: SparkSession, dir: String): DataFrame  = spark.read.parquet(path(dir, "customer"))
-  def supplier(spark: SparkSession, dir: String): DataFrame  = spark.read.parquet(path(dir, "supplier"))
-  def part(spark: SparkSession, dir: String): DataFrame      = spark.read.parquet(path(dir, "part"))
-  def orders(spark: SparkSession, dir: String): DataFrame    = spark.read.parquet(path(dir, "orders"))
-  def lineitem(spark: SparkSession, dir: String): DataFrame  = spark.read.parquet(path(dir, "lineitem"))
-  def documents(spark: SparkSession, dir: String): DataFrame = spark.read.parquet(path(dir, "documents"))
-  def embeddings(spark: SparkSession, dir: String): DataFrame = spark.read.parquet(path(dir, "embeddings"))
+  def region(spark: SparkSession, dir: String): DataFrame     = table(spark, dir, "region")
+  def nation(spark: SparkSession, dir: String): DataFrame     = table(spark, dir, "nation")
+  def customer(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "customer")
+  def supplier(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "supplier")
+  def part(spark: SparkSession, dir: String): DataFrame       = table(spark, dir, "part")
+  def orders(spark: SparkSession, dir: String): DataFrame     = table(spark, dir, "orders")
+  def lineitem(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "lineitem")
+  def documents(spark: SparkSession, dir: String): DataFrame  = table(spark, dir, "documents")
+  def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
 
   /** `events.ts` has shipped in two physical layouts: TIMESTAMP(NANOS)
     * (rejected by Spark's reader unless
@@ -48,21 +63,17 @@ object Tables {
         s"events.ts: unsupported physical type $other (expected timestamp or int64-nanos)")
     }
     val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val p = path(dir, "events")
+    val f = footer(spark, p)
     // GraftSession sets the legacy flag at build (harmless for µs files —
-    // it only affects NANOS). On a foreign session without it, a ns file
-    // fails schema inference; retry on a clone carrying the flag. The
-    // scan resolved there keeps the clone's reader settings after the
-    // frame is rebound, so the caller's session never sees the flag.
-    try adapt(spark.read.parquet(path(dir, "events")))
-    catch {
-      case e: Exception if !spark.conf.getOption(key).contains("true") =>
-        try SessionClone.rebind(SessionClone.withConf(spark, key -> "true")(
-          clone => adapt(clone.read.parquet(path(dir, "events")))), spark)
-        catch { case e2: Exception =>
-          // surface the retry's own failure instead of discarding it
-          e.addSuppressed(e2); throw e
-        }
-    }
+    // it only affects NANOS). On a foreign session without it, the footer
+    // names a NANOS `ts` before anything runs: read on a clone carrying
+    // the flag. The scan resolved there keeps the clone's reader settings
+    // after the frame is rebound, so the caller's session never sees the
+    // flag.
+    if (!nanosTs(f) || spark.conf.getOption(key).contains("true")) adapt(read(spark, p, f))
+    else SessionClone.rebind(
+      SessionClone.withConf(spark, key -> "true")(clone => adapt(read(clone, p, f))), spark)
   }
 
   /** Register every table as a temp view (`spark.sql` convenience). */
@@ -77,5 +88,46 @@ object Tables {
     events(spark, dir).createOrReplaceTempView("events")
     documents(spark, dir).createOrReplaceTempView("documents")
     embeddings(spark, dir).createOrReplaceTempView("embeddings")
+  }
+
+  private def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val p = path(dir, name)
+    read(spark, p, footer(spark, p))
+  }
+
+  /** The parquet reader over `p`, given the schema `f` converts to
+    * under `spark`'s SQL conf: what inference would return, without its
+    * job.
+    */
+  private def read(spark: SparkSession, p: String, f: Footer): DataFrame =
+    spark.read.schema(ParquetFileFormat.readSchemaFromFooter(
+      f, new ParquetToSparkSchemaConverter(spark.sessionState.conf))).parquet(p)
+
+  /** The footer of the file at `p`, or of the first data file under the
+    * directory `p` (by name, skipping `_`- and `.`-prefixed entries, as
+    * inference does).
+    */
+  private def footer(spark: SparkSession, p: String): Footer = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(p)
+    val fs = root.getFileSystem(conf)
+    val st = fs.getFileStatus(root)
+    val file =
+      if (!st.isDirectory) st
+      else fs.listStatus(root)
+        .filter(s => s.isFile && !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+        .sortBy(_.getPath.getName).headOption
+        .getOrElse(throw new IllegalStateException(s"no parquet data file under $p"))
+    new Footer(file.getPath,
+      ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf), SKIP_ROW_GROUPS))
+  }
+
+  /** Whether the footer stores a top-level `ts` as TIMESTAMP(NANOS). */
+  private def nanosTs(f: Footer): Boolean = {
+    val schema = f.getParquetMetadata.getFileMetaData.getSchema
+    schema.containsField("ts") && (schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+      case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+      case _ => false
+    })
   }
 }

@@ -52,8 +52,15 @@ object CodecCodegen {
     try CodecImpl.slidingXor(data, key, offset)
     catch { case _: IllegalArgumentException | _: IndexOutOfBoundsException => null }
 
+  /** Null on a label over 63 bytes ([[CodecImpl.dnsNameEncode]] throws). */
   def dnsNameEncode(name: UTF8String): Array[Byte] =
-    CodecImpl.dnsNameEncode(name.toString)
+    try CodecImpl.dnsNameEncode(name.toString)
+    catch { case _: IllegalArgumentException => null }
+
+  /** Null on a negative size ([[CodecImpl.sizeEncode]] throws). */
+  def sizeEncode(size: Long): Array[Byte] =
+    try CodecImpl.sizeEncode(size)
+    catch { case _: IllegalArgumentException => null }
 
   /** Null on a truncated envelope ([[CodecImpl.bthpStrip]] throws). */
   def bthpStrip(buf: Array[Byte]): InternalRow =

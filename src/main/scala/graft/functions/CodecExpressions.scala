@@ -82,9 +82,17 @@ object CodecExpressions {
     override def prettyName: String = "size_decode"
   }
 
-  case class SizeEncode(child: Expression) extends UnaryExpression with CodegenFallback {
+  /** `size_encode(BIGINT) → BINARY`; a negative size gives null. */
+  case class SizeEncode(child: Expression) extends UnaryExpression with ImplicitCastInputTypes {
+    override def inputTypes: Seq[DataType] = Seq(LongType)
     override def dataType: DataType = BinaryType
-    override def nullSafeEval(v: Any): Any = CodecImpl.sizeEncode(v.asInstanceOf[Long])
+    override def nullable: Boolean = true
+    override def nullSafeEval(v: Any): Any = CodecCodegen.sizeEncode(v.asInstanceOf[Long])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, n => s"""
+        ${ev.value} = $Bridge.sizeEncode($n);
+        if (${ev.value} == null) { ${ev.isNull} = true; }
+      """)
     override protected def withNewChildInternal(c: Expression): SizeEncode = copy(c)
     override def prettyName: String = "size_encode"
   }
@@ -152,12 +160,19 @@ object CodecExpressions {
     override def prettyName: String = "dns_name_decode"
   }
 
+  /** `dns_name_encode(STRING) → BINARY`; a label over 63 bytes gives
+    * null.
+    */
   case class DnsNameEncode(child: Expression) extends UnaryExpression {
     override def dataType: DataType = BinaryType
+    override def nullable: Boolean = true
     override def nullSafeEval(v: Any): Any =
-      CodecImpl.dnsNameEncode(v.asInstanceOf[UTF8String].toString)
+      CodecCodegen.dnsNameEncode(v.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, n => s"$Bridge.dnsNameEncode($n)")
+      nullSafeCodeGen(ctx, ev, n => s"""
+        ${ev.value} = $Bridge.dnsNameEncode($n);
+        if (${ev.value} == null) { ${ev.isNull} = true; }
+      """)
     override protected def withNewChildInternal(c: Expression): DnsNameEncode = copy(c)
     override def prettyName: String = "dns_name_encode"
   }

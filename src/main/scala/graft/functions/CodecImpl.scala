@@ -227,9 +227,12 @@ object CodecImpl {
     val labels = if (name.isEmpty) Array.empty[String] else name.split('.')
     val out = new java.io.ByteArrayOutputStream()
     labels.foreach { l =>
-      require(l.length <= 63, s"DNS label too long: $l")
-      out.write(l.length)
-      out.write(l.getBytes(StandardCharsets.US_ASCII))
+      // the length byte counts the bytes written: a character outside
+      // US-ASCII (a surrogate pair included) becomes one '?'
+      val b = l.getBytes(StandardCharsets.US_ASCII)
+      require(b.length <= 63, s"DNS label too long: $l")
+      out.write(b.length)
+      out.write(b)
     }
     out.write(0)
     out.toByteArray

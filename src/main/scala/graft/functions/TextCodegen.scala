@@ -34,8 +34,6 @@ object TextCodegen {
     UTF8String.fromString(TextImpl.expandEnv(p.toString, env))
   }
 
-  def sizeEncode(n: Long): Array[Byte] = CodecImpl.sizeEncode(n)
-
   def bpeEncode(s: UTF8String): ArrayData =
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(TextImpl.bpeEncode(s.toString))

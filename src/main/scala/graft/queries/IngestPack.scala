@@ -556,12 +556,11 @@ object IngestPack {
 
   // ---------------------------------------------------- TTL tombstones
 
-  /** Batch replay of the streaming TTL-tombstone operator
-    * ([[graft.streaming.EventStream.ttlTombstones]]) — the self-delete
-    * semantics (`server/self_delete.c:19-57`: silence past a deadline
-    * expires the implant): per user, last activity + a 4 h TTL
-    * compared against the corpus watermark (max ts − the 1 h
-    * watermark delay, the exact horizon the streaming twin times out
+  /** TTL tombstones in batch — the self-delete semantics
+    * (`server/self_delete.c:19-57`: silence past a deadline expires
+    * the implant): per user, last activity + a 4 h TTL compared
+    * against the corpus watermark (max ts − a 1 h watermark delay, the
+    * horizon an event-time timer with that delay would time out
     * against). One tombstone per expired key with its last-seen epoch
     * micros. The watermark is a broadcast scalar subquery — one
     * aggregate row joined to the per-user aggregate, never a

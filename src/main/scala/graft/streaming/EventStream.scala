@@ -1,18 +1,16 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming operators mirroring the reference's stateful semantics
   * (SURVEY §2.9): incremental file ingest with checkpoints (the
   * hcOwt.py mtime-diff loop is exactly Spark's file source), gap
-  * sessionization (client_session.h SESSION_TIMEOUT), windowed
-  * aggregation over event time, and the 60-day inactivity
-  * self-delete realized as an event-time TTL timer emitting tombstone
-  * records (`self_delete.c:19-57,229-276`).
+  * sessionization (client_session.h SESSION_TIMEOUT) and windowed
+  * aggregation over event time. The 60-day inactivity self-delete
+  * (`self_delete.c:19-57,229-276`) is computed in batch by the
+  * `ig_ttl_tombstones` gate ([[graft.queries.IngestPack.ttlTombstones]]).
   *
   * All operators are defined on unbounded DataFrames; specs replay the
   * driver's `events` table through a file source micro-batch by
@@ -20,15 +18,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (streaming=batch parity, SURVEY §5.2).
   */
 object EventStream {
-
-  /** A typed event row (µs timestamp, already ns-decoded upstream). */
-  case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
-      event_type: String, value: Double, props: String)
-
-  /** Tombstone emitted when a key exceeds its inactivity TTL —
-    * the engine's record of `markTermination`.
-    */
-  case class Tombstone(user_id: Long, last_seen: Timestamp, reason: String)
 
   /** Incremental file-source ingest: the checkpointed directory scan
     * that replaces hcOwt's pickle-of-mtimes. `maxFilesPerTrigger=1`
@@ -42,39 +31,6 @@ object EventStream {
       .schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(path)
-
-  /** Inactivity TTL with tombstones: per key, an event-time timer at
-    * last_seen + ttl; when the watermark passes it, the key's state is
-    * dropped and a tombstone emitted. This is the self-delete
-    * semantics: activity touches the timer, silence expires it.
-    */
-  def ttlTombstones(events: Dataset[Ev], ttlMs: Long): Dataset[Tombstone] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .withWatermark("ts", "1 hour")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Long, Tombstone](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[Ev], state: GroupState[Long]) =>
-          if (state.hasTimedOut) {
-            val last = state.get
-            state.remove()
-            Iterator(Tombstone(user, new Timestamp(last), "ttl_expired"))
-          } else {
-            val maxTs = rows.map(_.ts.getTime).foldLeft(
-              state.getOption.getOrElse(Long.MinValue))(math.max)
-            state.update(maxTs)
-            // For an allowed-late event (within the watermark delay) with a
-            // small TTL, maxTs + ttlMs can land below the current watermark;
-            // Spark rejects such timeouts and kills the query. Clamp to just
-            // past the watermark so the key expires on the next advance.
-            val timeoutAt = math.max(maxTs + ttlMs, state.getCurrentWatermarkMs() + 1)
-            state.setTimeoutTimestamp(timeoutAt)
-            Iterator.empty
-          }
-      }
-  }
 
   private def startToMemory(df: DataFrame, name: String,
       outputMode: String): StreamingQuery =

@@ -156,6 +156,39 @@ class CodecExprSpec extends AnyFunSuite {
       "SELECT aes_frame_decode(unhex(repeat('00', 16)), unhex('00'), 16) AS a").head().isNullAt(0))
   }
 
+  test("size_encode and dns_name_encode give null on a bad input, interpreted and codegen") {
+    CE.register(spark)
+    // size_encode: two negative sizes, then two valid ones
+    val size = when(col("id") === 0, lit(-1L)).when(col("id") === 1, lit(Long.MinValue))
+      .otherwise(col("id") * 1000)
+    // dns_name_encode: a 64-byte label; a label with a character outside
+    // US-ASCII (a surrogate pair); an ASCII name; a 63-byte label
+    val name = when(col("id") === 0, lit("a" * 64 + ".com"))
+      .when(col("id") === 1, lit("a\uD83D\uDE00b.c"))
+      .when(col("id") === 2, lit("ab.c")).otherwise(lit("a" * 63))
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    for (mode <- Seq(Seq("false", "NO_CODEGEN"), Seq("true", "CODEGEN_ONLY"))) {
+      keys.zip(mode).foreach { case (k, v) => spark.conf.set(k, v) }
+      try withClue(mode) {
+        val q = spark.range(4).select(col("id"), CE.size_encode(size).as("s"),
+          CE.dns_name_encode(name).as("n"))
+        assert(q.queryExecution.executedPlan.toString.contains("*(") === (mode.head == "true"))
+        val got = q.orderBy("id").collect()
+        assert(got.take(2).forall(_.isNullAt(1)), "a negative size did not give null")
+        assert(got(2).getAs[Array[Byte]](1).toSeq === CodecImpl.sizeEncode(2000L).toSeq)
+        assert(got(3).getAs[Array[Byte]](1).toSeq === CodecImpl.sizeEncode(3000L).toSeq)
+        assert(got(0).isNullAt(2), "a 64-byte label did not give null")
+        // the length byte counts the 3 bytes written ('?' for the pair)
+        assert(got(1).getAs[Array[Byte]](2).toSeq === Seq[Byte](3, 'a', '?', 'b', 1, 'c', 0))
+        assert(got(2).getAs[Array[Byte]](2).toSeq === Seq[Byte](2, 'a', 'b', 1, 'c', 0))
+        assert(got(3).getAs[Array[Byte]](2).toSeq === (63.toByte +: Seq.fill[Byte](63)('a')) :+ 0.toByte)
+      } finally keys.foreach(spark.conf.unset)
+    }
+    // the SQL forms (constant-folded, interpreted)
+    assert(spark.sql("SELECT size_encode(-1) AS s").head().isNullAt(0))
+    assert(spark.sql("SELECT dns_name_encode(repeat('a', 64)) AS n").head().isNullAt(0))
+  }
+
   test("SQL registration: functions callable from spark.sql") {
     CE.register(spark)
     val row = spark.sql(

@@ -118,15 +118,19 @@ class FixtureSpec extends AnyFunSuite {
     // layout 4: a true TIMESTAMP(NANOS) file (pyarrow-written fixture,
     // see FIXTURES.md §5; the same µs values plus sub-µs digits) read
     // through a foreign session without the legacy flag: Spark rejects
-    // the file there, so Tables.events must take its retry path, and
-    // that retry must leave the session's own flag as it was.
+    // the file there, so Tables.events must read it on a clone carrying
+    // the flag, decided from the footer before any job runs (no failed
+    // task), and leave the session's own flag as it was.
     val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
     val foreign = spark.newSession()
     foreign.conf.set(nanosKey, "false")
     val fixture = getClass.getResource("/nanos_events").getPath
     intercept[Exception](foreign.read.parquet(Tables.path(fixture, "events")))
-    assert(readUs(foreign, fixture) === read("tsv"),
-      "TIMESTAMP(NANOS) must truncate to the same µs values")
-    assert(foreign.conf.get(nanosKey) === "false", "the retry leaked the legacy flag")
+    val (got, jobs) = TablesSpec.jobsOf(spark)(readUs(foreign, fixture))
+    assert(got === read("tsv"), "TIMESTAMP(NANOS) must truncate to the same µs values")
+    assert(jobs.nonEmpty, "the collect ran outside the counted job group")
+    assert(TablesSpec.failures(spark.sparkContext, jobs) === ((0, 0)),
+      "(failed jobs, failed tasks) while reading the NANOS file")
+    assert(foreign.conf.get(nanosKey) === "false", "the clone read leaked the legacy flag")
   }
 }

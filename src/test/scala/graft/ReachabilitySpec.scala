@@ -110,7 +110,6 @@ object ReachabilitySpec {
     "CodecExpressions.size_encode" -> sqlSurface,
     "CodecExpressions.key_extract" -> sqlSurface,
     "LandedCatalog.expire" -> "only specs reach it: catalog retention no gate runs yet (ROADMAP)",
-    "EventStream.ttlTombstones" -> "only specs reach it: the streaming twin of ig_ttl_tombstones (ROADMAP)",
   )
 
   /** One public member of source file number `file`: `owner` is the

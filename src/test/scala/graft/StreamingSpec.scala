@@ -116,33 +116,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(got === want)
   }
 
-  test("TTL tombstones match the batch-derived expiry set") {
-    import spark.implicits._
-    val ttlMs = 5L * 24 * 3600 * 1000 // 5 days (60d scaled to the corpus)
-    val stream = EventStream.fromDirectory(spark, splitDir, batchEvents.schema)
-      .as[EventStream.Ev]
-    val q = EventStream.ttlTombstones(stream, ttlMs)
-    References.runToMemory(q.toDF(), "ttl_stream")
-    val tombstoned = spark.table("ttl_stream")
-      .select("user_id").as[Long].collect().toSet
-
-    // batch expectation: users whose last event is older than
-    // final-watermark - ttl must have expired
-    val maxTs = batchEvents.agg(max(col("ts"))).head().getTimestamp(0).getTime
-    val watermark = maxTs - 3600 * 1000L // 1h watermark delay
-    val expected = batchEvents.groupBy("user_id").agg(max(col("ts")).as("last"))
-      .filter(col("last").cast("long") * 1000 + ttlMs < watermark)
-      .select("user_id").as[Long].collect().toSet
-    assert(expected.subsetOf(tombstoned),
-      s"missing tombstones: ${(expected diff tombstoned).take(5)}")
-    // no user tombstoned while still active inside the TTL at EOS is
-    // *guaranteed* wrong only if its timer could not yet have fired
-    val active = batchEvents.groupBy("user_id").agg(max(col("ts")).as("last"))
-      .filter(col("last").cast("long") * 1000 + ttlMs >= maxTs)
-      .select("user_id").as[Long].collect().toSet
-    assert((tombstoned intersect active).isEmpty, "active users tombstoned")
-  }
-
   test("incremental ingest: checkpoint processes each file exactly once") {
     val src = Files.createTempDirectory("inc_src").toString
     val sink = Files.createTempDirectory("inc_sink").toString
@@ -329,33 +302,6 @@ class StreamingSpec extends AnyFunSuite {
         assert(got.sameElements(blob), s"$id blob mismatch @ $chunkSize")
       }
     }
-  }
-
-  test("TTL timer survives a late-but-allowed event (watermark clamp)") {
-    import spark.implicits._
-    val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    val day = 86400000L
-    def ev(id: Long, user: Long, tsMs: Long) =
-      EventStream.Ev(id, new java.sql.Timestamp(tsMs), user, "t", 0.0, "")
-    val p = Files.createTempDirectory("late_ttl").toString
-    // batch 1: watermark after this batch = base+2h - 1h = base+1h
-    Seq(ev(1, 1, base), ev(2, 2, base + 2 * 3600 * 1000)).toDF()
-      .coalesce(1).write.mode("append").parquet(p)
-    Thread.sleep(1100)
-    // batch 2: a LATE event (flatMapGroupsWithState hands late rows to
-    // the function) with a tiny TTL — unclamped, maxTs + ttl lands far
-    // below the current watermark and setTimeoutTimestamp kills the query
-    Seq(ev(3, 3, base - day)).toDF().coalesce(1).write.mode("append").parquet(p)
-    Thread.sleep(1100)
-    // batch 3: advance the watermark past everything -> user 3 expires
-    Seq(ev(4, 4, base + 30 * day)).toDF().coalesce(1).write.mode("append").parquet(p)
-
-    val schema = spark.read.parquet(p).schema
-    val stream = EventStream.fromDirectory(spark, p, schema).as[EventStream.Ev]
-    val q = EventStream.ttlTombstones(stream, ttlMs = 1000L)
-    References.runToMemory(q.toDF(), "late_ttl_stream") // must not throw
-    val got = spark.table("late_ttl_stream").select("user_id").as[Long].collect().toSet
-    assert(got.contains(3L), s"late-event key was not expired: $got")
   }
 
   test("streaming gram screen equals the sequential batch loop; replay appends nothing") {
